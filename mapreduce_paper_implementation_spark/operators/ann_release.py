@@ -23,15 +23,13 @@ DuckDB hash gates (which unroll the training) stay green either way
 (tests/test_round13_additions.py pins the equality; scripts/
 bench_ann_index.py prices the delta).
 
-Layout (the rollup.py versioned-pointer discipline — a crash mid-publish
-leaves the previous version visible, the pointer moves LAST):
+Layout: full-state versions under statedir.py (a crash mid-publish leaves
+the previous version visible). Version N holds
 
-    index_dir/
-      v{N}/centroids/   (cell INT, c_vec ARRAY<DOUBLE>)          k rows
-      v{N}/codebooks/   (sub_j INT, code INT, c_vec ARRAY<DOUBLE>) m*ks rows
-      v{N}/cells/       (vec_id, cell INT)                       corpus-sized
-      v{N}/codes/       (vec_id, sub_j INT, code INT)            corpus-sized
-      _CURRENT          ascii version number, atomic rename
+    centroids/   (cell INT, c_vec ARRAY<DOUBLE>)            k rows
+    codebooks/   (sub_j INT, code INT, c_vec ARRAY<DOUBLE>) m*ks rows
+    cells/       (vec_id, cell INT)                         corpus-sized
+    codes/       (vec_id, sub_j INT, code INT)              corpus-sized
 
 Reference analog: the same materialize-once discipline as the reference's
 pre-created intermediate files (/root/reference/mr-main/mr/coordinator.go:
@@ -43,6 +41,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 # The shared index geometry: q118's coarse/PQ parameters and q116/q127's
 # coarse cell count all resolve to these (plans/curation_queries.py pins
@@ -59,18 +59,13 @@ def ann_index_dir() -> str | None:
     root = os.environ.get(ANN_ENV)
     if not root:
         return None
-    if not os.path.isfile(os.path.join(root, "_CURRENT")):
+    if VersionedStateDir(root).pointer() is None:
         raise FileNotFoundError(
             f"{ANN_ENV} is set to {root!r} but no published index version "
-            "exists there (_CURRENT missing) — refusing to fall back to "
+            "exists there — refusing to fall back to "
             "inline index retraining silently; unset the var to opt in"
         )
     return root
-
-
-def _current_version(root: str) -> int:
-    with open(os.path.join(root, "_CURRENT"), encoding="ascii") as fh:
-        return int(fh.read().strip())
 
 
 def publish_ann_index(
@@ -97,13 +92,9 @@ def publish_ann_index(
         pq_train,
     )
 
-    prev = None
-    try:
-        prev = _current_version(index_dir)
-    except FileNotFoundError:
-        pass
-    version = 1 if prev is None else prev + 1
-    vdir = os.path.join(index_dir, f"v{version:010d}")
+    store = VersionedStateDir(index_dir)
+    version = store.next_version()
+    vdir = store.version_dir(version)
 
     centroids = kmeans_fit(
         emb, k=n_cells, max_iter=2, tol=0.0, id_col=id_col, vec_col=vec_col
@@ -123,17 +114,13 @@ def publish_ann_index(
         "overwrite"
     ).parquet(os.path.join(vdir, "codes"))
 
-    # pointer moves LAST via atomic rename — rollup.py discipline
-    tmp = os.path.join(index_dir, "_CURRENT.tmp")
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(index_dir, "_CURRENT"))
+    store.commit(version, publish=[vdir])
     return version
 
 
 def load_ann_index(spark: SparkSession, index_dir: str) -> dict[str, DataFrame]:
     """Load the current published version; returns {leaf: DataFrame}."""
-    vdir = os.path.join(index_dir, f"v{_current_version(index_dir):010d}")
+    vdir = VersionedStateDir(index_dir).current_dir()
     return {
         leaf: spark.read.parquet(os.path.join(vdir, leaf)) for leaf in LEAVES
     }

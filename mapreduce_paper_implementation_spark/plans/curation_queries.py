@@ -3215,6 +3215,7 @@ def _q135_index(spark: SparkSession, sf_dir: str) -> dict:
         publish_ann_index,
         published_ann_index,
     )
+    from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
     idx = published_ann_index(spark)
     if idx is not None:
@@ -3224,8 +3225,7 @@ def _q135_index(spark: SparkSession, sf_dir: str) -> dict:
         f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
     ).hexdigest()[:16]
     root = os.path.join(tempfile.gettempdir(), "spark_graft_ann_scratch", slug)
-    if not os.path.isfile(os.path.join(root, "_CURRENT")):
-        os.makedirs(root, exist_ok=True)
+    if VersionedStateDir(root).pointer() is None:
         publish_ann_index(load_table(spark, sf_dir, "embeddings"), root)
     return load_ann_index(spark, root)
 

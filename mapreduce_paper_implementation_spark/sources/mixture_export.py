@@ -4,13 +4,9 @@ mounts — each source's full epochs plus its md5-order remainder head,
 laid out as hive-partitioned (epoch, shard) parquet with a counts
 manifest, committed behind an atomic version pointer.
 
-Layout (the sources/release_export.py discipline):
-
-    out_dir/
-      v{N}/data/epoch=0/shard=3/part-*.parquet   the repeated-epoch stream
-      v{N}/manifest.json                         per-(epoch,shard) counts,
-                                                 per-source totals, budget
-      _CURRENT                                   ascii version, atomic
+Layout: full-state versions under statedir.py; version N holds
+`data/epoch=0/shard=3/part-*.parquet` (the repeated-epoch stream) and
+`manifest.json` (per-(epoch,shard) counts, per-source totals, budget).
 
 ONE lineage: the written rows ARE plans/release_queries.py:
 mixture_stream_frame — the exact frame q136 aggregates under the DuckDB
@@ -44,10 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.sources.release_export import (
-    POINTER,
-    _read_pointer,
-)
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 def export_mixture(
@@ -70,14 +63,15 @@ def export_mixture(
     the release_export contract).
 
     Order of operations (crash-safe): data parquet -> bounded counts
-    collects -> manifest.json -> pointer rename LAST."""
+    collects -> manifest.json -> pointer commit LAST."""
     from mapreduce_paper_implementation_spark.plans.release_queries import (
         _Q136_SHARDS,
         mixture_stream_frame,
     )
 
-    version = (_read_pointer(out_dir) or 0) + 1
-    vdir = os.path.join(out_dir, f"v{version:010d}")
+    store = VersionedStateDir(out_dir)
+    version = store.next_version()
+    vdir = store.version_dir(version)
 
     # ONE materialized assignment feeds the data write, the (epoch, shard)
     # counts, and the per-source totals (the release_export boundary
@@ -142,10 +136,7 @@ def export_mixture(
     with open(os.path.join(vdir, "manifest.json"), "w", encoding="ascii") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
 
-    tmp = os.path.join(out_dir, POINTER + ".tmp")
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(out_dir, POINTER))
+    store.commit(version, publish=[vdir])
     return version
 
 
@@ -153,10 +144,7 @@ def read_mixture(spark: SparkSession, out_dir: str) -> tuple[DataFrame, dict]:
     """Load the CURRENT mixture version: (stream DataFrame, manifest).
     epoch/shard come back as typed partition columns, re-cast long to the
     writer's schema."""
-    version = _read_pointer(out_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed mixture under {out_dir}")
-    vdir = os.path.join(out_dir, f"v{version:010d}")
+    vdir = VersionedStateDir(out_dir).current_dir()
     df = (
         spark.read.parquet(os.path.join(vdir, "data"))
         .withColumn("epoch", F.col("epoch").cast("long"))

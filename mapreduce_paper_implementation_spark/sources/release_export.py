@@ -3,12 +3,9 @@ from a DataFrame into the on-disk artifact a training loader actually
 mounts — per-(split, shard) parquet part files plus a counts/ledger
 manifest, committed behind an atomic version pointer.
 
-Layout (the streaming/rollup.py versioned-pointer discipline):
-
-    out_dir/
-      v{N}/data/split=train/shard=0/part-*.parquet   hive-partitioned docs
-      v{N}/manifest.json                             counts + scrub ledger
-      _CURRENT                                       ascii version, atomic
+Layout: full-state versions under statedir.py; version N holds
+`data/split=train/shard=0/part-*.parquet` (hive-partitioned docs) and
+`manifest.json` (counts + scrub ledger).
 
 The manifest is the loader's integrity contract: for every (split, shard)
 it records n_docs and n_tokens AGGREGATED FROM THE SAME LINEAGE that wrote
@@ -43,15 +40,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-POINTER = "_CURRENT"
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
-
-def _read_pointer(out_dir: str) -> int | None:
-    try:
-        with open(os.path.join(out_dir, POINTER), encoding="ascii") as fh:
-            return int(fh.read().strip())
-    except FileNotFoundError:
-        return None
 
 
 def export_release(
@@ -72,9 +62,10 @@ def export_release(
     the publisher owns that match, same contract as the CC/ANN cuts).
 
     Order of operations (crash-safe): data parquet -> counts collect ->
-    manifest.json -> pointer rename LAST."""
-    version = (_read_pointer(out_dir) or 0) + 1
-    vdir = os.path.join(out_dir, f"v{version:010d}")
+    manifest.json -> pointer commit LAST."""
+    store = VersionedStateDir(out_dir)
+    version = store.next_version()
+    vdir = store.version_dir(version)
 
     # perdoc feeds the data write AND the counts aggregate — localCheckpoint
     # so the two consumers read one materialized assignment (the exact
@@ -114,10 +105,7 @@ def export_release(
     with open(os.path.join(vdir, "manifest.json"), "w", encoding="ascii") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
 
-    tmp = os.path.join(out_dir, POINTER + ".tmp")
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(out_dir, POINTER))
+    store.commit(version, publish=[vdir])
     return version
 
 
@@ -140,21 +128,18 @@ def export_packed_release(
     operators/packing.py:pack_bins — the q59 recurrence exactly, with its
     internal n_shards_pack sub-sharding so no Python worker holds more
     than one sub-shard (bin ids stay dense per (split, shard) through the
-    bounded offset renumber). Layout:
-
-        out_dir/
-          v{N}/data/split=train/shard=0/part-*.parquet  (doc_id, tc, bin_id)
-          v{N}/manifest.json   per-(split, shard): n_bins/n_docs/n_tokens
-                               + cap and fill ratio (tokens / bins*cap)
-          _CURRENT             atomic pointer, moves LAST
+    bounded offset renumber). Layout as export_release, with data rows
+    (doc_id, tc, bin_id) and a manifest of per-(split, shard)
+    n_bins/n_docs/n_tokens + cap and fill ratio (tokens / bins*cap).
 
     Equality with the inline q59 recurrence over the same cut corpus is
     pinned in tests/test_round14_additions.py; bin-capacity and dense-id
     properties likewise."""
     from mapreduce_paper_implementation_spark.operators.packing import pack_bins
 
-    version = (_read_pointer(out_dir) or 0) + 1
-    vdir = os.path.join(out_dir, f"v{version:010d}")
+    store = VersionedStateDir(out_dir)
+    version = store.next_version()
+    vdir = store.version_dir(version)
 
     key = F.concat_ws("|", F.col("split"), F.col("shard").cast("string"))
     packed = pack_bins(
@@ -205,26 +190,13 @@ def export_packed_release(
     with open(os.path.join(vdir, "manifest.json"), "w", encoding="ascii") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
 
-    tmp = os.path.join(out_dir, POINTER + ".tmp")
-    with open(tmp, "w", encoding="ascii") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(out_dir, POINTER))
+    store.commit(version, publish=[vdir])
     return version
 
 
 def read_packed_release(spark: SparkSession, out_dir: str) -> tuple[DataFrame, dict]:
     """Load the CURRENT packed release: (bins DataFrame, manifest)."""
-    version = _read_pointer(out_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed packed release under {out_dir}")
-    vdir = os.path.join(out_dir, f"v{version:010d}")
-    df = (
-        spark.read.parquet(os.path.join(vdir, "data"))
-        .withColumn("shard", F.col("shard").cast("long"))
-    )
-    with open(os.path.join(vdir, "manifest.json"), encoding="ascii") as fh:
-        manifest = json.load(fh)
-    return df, manifest
+    return read_release(spark, out_dir)
 
 
 def read_release(
@@ -233,10 +205,7 @@ def read_release(
     """Load the CURRENT release version: (docs DataFrame, manifest dict).
     split/shard come back as typed columns (partition values); shard is
     re-cast long to match the writer's schema exactly."""
-    version = _read_pointer(out_dir)
-    if version is None:
-        raise FileNotFoundError(f"no committed release under {out_dir}")
-    vdir = os.path.join(out_dir, f"v{version:010d}")
+    vdir = VersionedStateDir(out_dir).current_dir()
     df = spark.read.parquet(os.path.join(vdir, "data")).withColumn(
         "shard", F.col("shard").cast("long")
     )

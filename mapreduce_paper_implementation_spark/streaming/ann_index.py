@@ -21,20 +21,12 @@ it, so the union of per-batch dup outputs provably equals the one-shot
 semantic_dedup_pairs over the full corpus with the same frozen centroids —
 the differential gate in tests/test_streaming.py.
 
-State layout (same two-phase idempotence discipline as rollup.py /
-dedup_index.py — batch-keyed dirs a replay overwrites, pointer advanced
-only after all writes, at-or-below-pointer batch ids are no-ops):
-
-    state_dir/
-      centroids/g{N}/     frozen (cell, c_vec), keyed by the training batch
-      baseline/g{N}/cells/ compacted assignment store up to batch N
-      baseline/g{N}/counts/ per-cell occupancy of that baseline
-      batches/b{N}/cells/ (id, cell, vec) assignment delta for batch N
-      batches/b{N}/counts/ (cell, n) occupancy delta — tile-sizing input
-      dups/b{N}/          (id_a, id_b, cell, cos_sim) pairs completed by N
-      _CURRENT            highest committed batch id (atomic rename)
-      _CENTROIDS          centroid generation id (atomic rename)
-      _BASELINE           batch id the baseline covers (atomic rename)
+State is a delta chain under statedir.py (replayed batch ids are no-ops)
+with leaves `cells/` ((id, cell, vec) assignment delta) and `counts/`
+((cell, n) occupancy delta — the tile-sizing input), plus the pairs
+(id_a, id_b, cell, cos_sim) each batch completes under `dups/b{N}` and
+the frozen (cell, c_vec) centroids as generations under `centroids/`,
+named by the `_CENTROIDS` pointer and keyed by the training batch.
 
 compact() folds committed assignment deltas into one baseline generation
 (same rationale as DedupIndexMaintainer.compact: without it probe cost and
@@ -58,12 +50,11 @@ grows); the interpreter constant is what the rewrite removes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.operators.dedup import assign_cells
+from mapreduce_paper_implementation_spark.statedir import CENTROIDS, VersionedStateDir
 
 
 def derive_tile_blocks(
@@ -114,48 +105,14 @@ class AnnIndexMaintainer:
         # 2048 rows x 64-dim float64 = 1 MB per operand, 32 MB per score
         # tile — comfortably inside one executor task at any cell occupancy.
         self.rows_per_tile = rows_per_tile
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointers (same discipline as rollup.py / dedup_index.py) ----------
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _ptr(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
-
-    def _committed_version(self) -> int | None:
-        return self._read_pointer(self._ptr("_CURRENT"))
-
-    def _baseline_version(self) -> int | None:
-        return self._read_pointer(self._ptr("_BASELINE"))
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _baseline_dir(self, version: int) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", "cells")
-
-    def _baseline_counts_dir(self, version: int) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", "counts")
+        self.store = VersionedStateDir(state_dir)
 
     def _centroid_dir(self, version: int) -> str:
-        return os.path.join(self.state_dir, "centroids", f"g{version:010d}")
+        return self.store.generation_dir(version, group="centroids")
 
     # -- frozen centroids ---------------------------------------------------
     def centroids(self) -> DataFrame | None:
-        gen = self._read_pointer(self._ptr("_CENTROIDS"))
+        gen = self.store.pointer(CENTROIDS)
         return self.spark.read.parquet(self._centroid_dir(gen)) if gen is not None else None
 
     def _ensure_centroids(self, emb: DataFrame, batch_id: int) -> DataFrame:
@@ -172,32 +129,16 @@ class AnnIndexMaintainer:
             id_col=self.id_col, vec_col=self.vec_col,
         )
         trained.write.mode("overwrite").parquet(self._centroid_dir(batch_id))
-        self._write_pointer(self._ptr("_CENTROIDS"), batch_id)
+        self.store.commit(
+            batch_id, name=CENTROIDS, publish=[self._centroid_dir(batch_id)]
+        )
         return self.centroids()
 
     # -- assignment store ---------------------------------------------------
-    def _committed_cell_dirs(self) -> list[str]:
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, "cells")
-            for d in sorted(os.listdir(root))
-            if d.startswith("b") and d[1:].isdigit() and floor < int(d[1:]) <= committed
-        ]
-        return dirs
-
     def cells(self) -> DataFrame | None:
         """The materialized (id, cell, vec) assignment store — what ivf_topk
         would probe and what each new batch joins against."""
-        dirs = self._committed_cell_dirs()
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "cells")
 
     def occupancy(self) -> dict[int, int]:
         """Committed per-cell assignment-row counts — the tile-sizing input.
@@ -205,35 +146,11 @@ class AnnIndexMaintainer:
         Source of truth is the (cell, n) counts sidecar each commit writes
         next to its cells delta (and compact()/retrain() fold into the
         baseline), so reading occupancy costs O(cells x batches) tiny rows,
-        never a scan of the vector store. Falls back to a column-pruned
-        aggregation over the cells dirs for state written before the
-        sidecar existed."""
-        committed = self._committed_version()
-        if committed is None:
+        never a scan of the vector store."""
+        counts = self.store.read_leaf(self.spark, "counts")
+        if counts is None:
             return {}
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_counts_dir(baseline))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, "counts")
-            for d in sorted(os.listdir(root))
-            if d.startswith("b") and d[1:].isdigit() and floor < int(d[1:]) <= committed
-        ]
-        if all(os.path.exists(d) for d in dirs):
-            agg = (
-                self.spark.read.parquet(*dirs)
-                .groupBy("cell")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:  # pre-sidecar state: prune to the cell column and count
-            agg = (
-                self.spark.read.parquet(*self._committed_cell_dirs())
-                .groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
+        agg = counts.groupBy("cell").agg(F.sum("n").alias("n"))
         return {r["cell"]: int(r["n"]) for r in agg.collect()}
 
     def _write_counts(self, counts: dict[int, int], path: str) -> None:
@@ -243,29 +160,16 @@ class AnnIndexMaintainer:
 
     def compact(self) -> int | None:
         """Fold committed assignment deltas into one baseline generation and
-        truncate the delta chain (idempotent, two-phase; see module doc)."""
-        import shutil
+        truncate the delta chain (statedir.py's compact)."""
 
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        if self._baseline_version() == committed:
-            return committed
-        occ = self.occupancy()  # read sidecars BEFORE the fold rewrites them
-        self.spark.read.parquet(*self._committed_cell_dirs()).write.mode(
-            "overwrite"
-        ).parquet(self._baseline_dir(committed))
-        self._write_counts(occ, self._baseline_counts_dir(committed))
-        self._write_pointer(self._ptr("_BASELINE"), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        def fold(g: int) -> None:
+            occ = self.occupancy()  # read sidecars BEFORE the fold rewrites them
+            self.cells().write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "cells")
+            )
+            self._write_counts(occ, self.store.generation_dir(g, "counts"))
+
+        return self.store.compact(fold)
 
     def retrain(self, k: int | None = None) -> int | None:
         """Offline index-generation rebuild — the amortized answer to growing
@@ -283,9 +187,7 @@ class AnnIndexMaintainer:
         detectable (pointer generations differ) and repaired by re-running
         retrain, which rewrites both dirs and re-commits both pointers.
         """
-        import shutil
-
-        committed = self._committed_version()
+        committed = self.store.pointer()
         if committed is None:
             return None
         if k is not None:
@@ -303,25 +205,24 @@ class AnnIndexMaintainer:
         )
         trained.write.mode("overwrite").parquet(self._centroid_dir(committed))
         cents = self.spark.read.parquet(self._centroid_dir(committed))
+        cells_dir = self.store.generation_dir(committed, "cells")
         assign_cells(
             store, cents, nassign=self.nassign, id_col="id", vec_col="vec"
-        ).write.mode("overwrite").parquet(self._baseline_dir(committed))
+        ).write.mode("overwrite").parquet(cells_dir)
         # reassignment moved rows between cells: rebuild the counts sidecar
         # from the new baseline (retrain is O(corpus) by design already)
         new_occ = {
             r["cell"]: int(r["n"])
-            for r in self.spark.read.parquet(self._baseline_dir(committed))
+            for r in self.spark.read.parquet(cells_dir)
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        self._write_counts(new_occ, self._baseline_counts_dir(committed))
-        self._write_pointer(self._ptr("_CENTROIDS"), committed)
-        self._write_pointer(self._ptr("_BASELINE"), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        self._write_counts(new_occ, self.store.generation_dir(committed, "counts"))
+        self.store.commit(
+            committed, name=CENTROIDS, publish=[self._centroid_dir(committed)]
+        )
+        self.store.publish_baseline(committed)
         return committed
 
     # -- per-batch ingest ----------------------------------------------------
@@ -329,9 +230,9 @@ class AnnIndexMaintainer:
         """Ingest one batch: assign, find the semantic near-dup pairs this
         batch COMPLETES (new-vs-history plus within-batch), persist both.
         Returns the batch's pairs (None for an already-committed replay)."""
-        committed = self._committed_version()
-        if committed is not None and committed >= batch_id:
+        if self.store.replayed(batch_id):
             return None
+        self.store.begin_batch(batch_id, "dups")
         cents = self._ensure_centroids(new_emb, batch_id)
         assigned = assign_cells(
             new_emb, cents, nassign=self.nassign,
@@ -455,9 +356,9 @@ class AnnIndexMaintainer:
             .where(F.col("cos_sim") >= self.threshold)
             .withColumn("cos_sim", F.col("cos_sim").cast("double"))
         )
-        dups_dir = os.path.join(self.state_dir, "dups", f"b{batch_id:010d}")
+        dups_dir = self.store.batch_dir(batch_id, group="dups")
         pairs.write.mode("overwrite").parquet(dups_dir)
-        assigned.write.mode("overwrite").parquet(self._batch_dir(batch_id, "cells"))
-        self._write_counts(batch_counts, self._batch_dir(batch_id, "counts"))
-        self._write_pointer(self._ptr("_CURRENT"), batch_id)
+        assigned.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "cells"))
+        self._write_counts(batch_counts, self.store.batch_dir(batch_id, "counts"))
+        self.store.commit_batch(batch_id, "dups")
         return self.spark.read.parquet(dups_dir)

@@ -12,20 +12,12 @@ re-hashing. The exact key store grows alongside it so bloom-positive keys
 can be verified exactly (operators/membership.py removes the
 false-positive sliver; false negatives cannot exist).
 
-    state_dir/
-      baseline/g{N}/filter/   compacted word map through batch N
-      baseline/g{N}/keys/     compacted distinct key store through batch N
-      batches/b{N}/filter/    the batch's own word-map delta
-      batches/b{N}/keys/      the batch's distinct keys
-      seen/b{N}/              the batch rows tagged `seen` (the answer)
-      _CURRENT, _BASELINE     atomic pointers (rename-published)
-
-Same idempotence discipline as streaming/rollup.py and
-streaming/dedup_index.py: all writes go to batch-id-keyed dirs (a replayed
-batch overwrites its own dirs), the pointer moves only after every write,
-and a batch id at or below the pointer is a no-op returning the persisted
-answer. compact() folds deltas into a baseline generation so probe cost is
-O(1) dirs regardless of batch count.
+State is a delta chain under statedir.py with leaves `filter/` (the
+batch's own word-map delta) and `keys/` (the batch's distinct keys), plus
+each batch's answer — its rows tagged `seen` — under `seen/b{N}`. A
+replayed batch id is a no-op returning the persisted answer. compact()
+folds deltas into a baseline generation so probe cost is O(1) dirs
+regardless of batch count.
 
 At 100 TB the word map stays <= num_bits/64 rows forever (size it for the
 projected key cardinality up front, or retrain-style rebuild at a larger
@@ -37,8 +29,6 @@ it.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +41,7 @@ from mapreduce_paper_implementation_spark.operators.membership import (
     bloom_maybe_seen,
     build_bloom,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class SeenKeysMaintainer:
@@ -70,67 +61,20 @@ class SeenKeysMaintainer:
         self.num_bits = num_bits
         self.num_hashes = num_hashes
         self.seed = seed
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointers (same discipline as streaming/dedup_index.py) ------------
-    def _pointer(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
-
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _baseline_dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", leaf)
-
-    def _committed_dirs(self, leaf: str) -> list[str]:
-        committed = self._read_pointer(self._pointer("_CURRENT"))
-        if committed is None:
-            return []
-        baseline = self._read_pointer(self._pointer("_BASELINE"))
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline, leaf))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, leaf)
-            for d in sorted(os.listdir(root))
-            if d.startswith("b") and d[1:].isdigit() and floor < int(d[1:]) <= committed
-        ]
-        return dirs
+        self.store = VersionedStateDir(state_dir)
 
     # -- state -------------------------------------------------------------
     def filter(self) -> DataFrame | None:
         """The merged history Bloom filter: per-word BIT_OR over every
         committed delta — the associative merge that makes per-batch
         maintenance possible. <= num_bits/64 rows by construction."""
-        dirs = self._committed_dirs("filter")
-        if not dirs:
+        deltas = self.store.read_leaf(self.spark, "filter")
+        if deltas is None:
             return None
-        return (
-            self.spark.read.parquet(*dirs)
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
+        return deltas.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
     def keys(self) -> DataFrame | None:
-        dirs = self._committed_dirs("keys")
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "keys")
 
     # -- per-batch maintenance --------------------------------------------
     def update(self, batch: DataFrame, batch_id: int) -> DataFrame | None:
@@ -138,10 +82,10 @@ class SeenKeysMaintainer:
         batch), persist the answer and the batch's filter/key deltas, and
         advance the pointer. Replays of a committed batch id are no-ops
         returning the persisted answer."""
-        committed = self._read_pointer(self._pointer("_CURRENT"))
-        seen_dir = os.path.join(self.state_dir, "seen", f"b{batch_id:010d}")
-        if committed is not None and committed >= batch_id:
+        seen_dir = self.store.batch_dir(batch_id, group="seen")
+        if self.store.replayed(batch_id):
             return self.spark.read.parquet(seen_dir)
+        self.store.begin_batch(batch_id, "seen")
         hist_filter = self.filter()
         batch_keys = batch.select(*self.key_cols).distinct()
         if hist_filter is None:
@@ -181,42 +125,26 @@ class SeenKeysMaintainer:
             num_bits=self.num_bits,
             num_hashes=self.num_hashes,
             seed=self.seed,
-        ).write.mode("overwrite").parquet(self._batch_dir(batch_id, "filter"))
-        batch_keys.write.mode("overwrite").parquet(self._batch_dir(batch_id, "keys"))
-        self._write_pointer(self._pointer("_CURRENT"), batch_id)
+        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "filter"))
+        batch_keys.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "keys"))
+        self.store.commit_batch(batch_id, "seen")
         return self.spark.read.parquet(seen_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
         """Fold committed filter deltas (BIT_OR) and key deltas (distinct)
-        into one baseline generation; truncate the delta chain. Idempotent
-        and crash-safe by the two-phase pointer discipline."""
-        committed = self._read_pointer(self._pointer("_CURRENT"))
-        if committed is None:
-            return None
-        if self._read_pointer(self._pointer("_BASELINE")) == committed:
-            return committed
-        merged_filter = (
-            self.spark.read.parquet(*self._committed_dirs("filter"))
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
-        merged_filter.write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "filter")
-        )
-        self.spark.read.parquet(*self._committed_dirs("keys")).distinct().write.mode(
-            "overwrite"
-        ).parquet(self._baseline_dir(committed, "keys"))
-        self._write_pointer(self._pointer("_BASELINE"), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        into one baseline generation; truncate the delta chain
+        (statedir.py's compact)."""
+
+        def fold(g: int) -> None:
+            self.filter().write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "filter")
+            )
+            self.keys().distinct().write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "keys")
+            )
+
+        return self.store.compact(fold)
 
 
 def maintain_seen_keys(

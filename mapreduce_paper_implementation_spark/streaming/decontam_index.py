@@ -13,21 +13,20 @@ eval index (operators/dedup.py:decontam_probe — the exact code path batch
 q116 runs), union-over-batches equals the one-shot result BIT-exactly,
 which the differential test pins (tests/test_decontam_index.py).
 
-State layout (the ann_index/rollup pointer discipline — versioned writes,
-atomic pointer rename LAST, replayed batches no-op):
+State lives under statedir.py (replayed batches no-op):
 
-- ``batches/b{N}/cells``  — the batch's cell-assigned vectors
+- the delta chain's ``cells`` leaf — each batch's cell-assigned vectors
   (id, cell, vec, nrm): the retrain() input. Append-only per batch; never
   rewritten, so per-batch ingest cost is O(|batch|), never O(history).
-- ``contam/v{N}``         — cumulative (vec_id, n_eval_hits, max_eval_cos).
-  Each version = previous ∪ the new batch's delta (batches are vec-disjoint
-  by the additive-maintainer precondition; a replayed batch id no-ops via
-  the committed-batch check, like every RollupMaintainer).
-- ``eval/g{N}``           — the cell-assigned eval index generation.
+- full-state versions under ``contam/`` — cumulative (vec_id, n_eval_hits,
+  max_eval_cos). Each version = previous ∪ the new batch's delta (batches
+  are vec-disjoint by the additive-maintainer precondition).
+- generations under ``eval/`` — the cell-assigned eval index, named by the
+  ``_EVAL`` pointer.
 
 The commit pointer ``_CURRENT`` holds BOTH the last ingested batch id (the
 replay/idempotence check) and the contam state version (which retrain()
-bumps independently of batch ids) — one file, one atomic rename, so a
+bumps independently of batch ids) — one file, one atomic commit, so a
 crash can never commit one without the other.
 
 retrain(new_eval, gen) — the eval set was RE-RELEASED: build the new
@@ -44,6 +43,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mapreduce_paper_implementation_spark.statedir import EVAL, VersionedStateDir
 
 
 class DecontamIndexMaintainer:
@@ -63,47 +64,19 @@ class DecontamIndexMaintainer:
         self.vec_col = vec_col
         self.nassign = nassign
         self.threshold = threshold
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
+        self.store = VersionedStateDir(state_dir)
         cdir = os.path.join(state_dir, "centroids")
         if not os.path.exists(cdir):
             # frozen at construction: every batch and every eval generation
             # must share cell boundaries or stored assignments go stale
             centroids.write.mode("overwrite").parquet(cdir)
 
-    # -- pointers (rollup.py discipline; _CURRENT carries two ints) ---------
-    def _ptr(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
-
     def _committed(self) -> tuple[int, int] | None:
         """(last ingested batch id, contam state version) or None."""
-        try:
-            with open(self._ptr("_CURRENT"), encoding="ascii") as fh:
-                batch_id, cver = fh.read().split()
-                return int(batch_id), int(cver)
-        except FileNotFoundError:
-            return None
-
-    def _commit(self, batch_id: int, cver: int) -> None:
-        tmp = self._ptr("_CURRENT") + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(f"{batch_id} {cver}")
-        os.replace(tmp, self._ptr("_CURRENT"))
-
-    def _eval_gen(self) -> int | None:
-        try:
-            with open(self._ptr("_EVAL"), encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _cells_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", "cells")
+        return self.store.values()
 
     def _contam_dir(self, version: int) -> str:
-        return os.path.join(self.state_dir, "contam", f"v{version:010d}")
-
-    def _eval_dir(self, gen: int) -> str:
-        return os.path.join(self.state_dir, "eval", f"g{gen:010d}")
+        return self.store.version_dir(version, group="contam")
 
     # -- index pieces --------------------------------------------------------
     def centroids(self) -> DataFrame:
@@ -132,30 +105,18 @@ class DecontamIndexMaintainer:
             F.col("vec").alias("e_vec"),
             F.col("nrm").alias("e_nrm"),
         )
-        ev.write.mode("overwrite").parquet(self._eval_dir(gen))
-        tmp = self._ptr("_EVAL") + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(gen))
-        os.replace(tmp, self._ptr("_EVAL"))
+        ev_dir = self.store.generation_dir(gen, group="eval")
+        ev.write.mode("overwrite").parquet(ev_dir)
+        self.store.commit(gen, name=EVAL, publish=[ev_dir])
 
     def eval_index(self) -> DataFrame:
-        gen = self._eval_gen()
+        gen = self.store.pointer(EVAL)
         if gen is None:
             raise ValueError("no eval generation installed; call set_eval first")
-        return self.spark.read.parquet(self._eval_dir(gen))
+        return self.spark.read.parquet(self.store.generation_dir(gen, group="eval"))
 
     def cells(self) -> DataFrame | None:
-        committed = self._committed()
-        if committed is None:
-            return None
-        last_batch, _ = committed
-        root = os.path.join(self.state_dir, "batches")
-        dirs = [
-            os.path.join(root, d, "cells")
-            for d in sorted(os.listdir(root))
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= last_batch
-        ]
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "cells")
 
     # -- ingest ----------------------------------------------------------------
     def update(self, batch_emb: DataFrame, batch_id: int) -> None:
@@ -174,19 +135,27 @@ class DecontamIndexMaintainer:
             decontam_probe,
         )
 
-        committed = self._committed()
-        if committed is not None and committed[0] >= batch_id:
+        if self.store.replayed(batch_id):
             return
+        self.store.begin_batch(batch_id)
+        committed = self._committed()
         cver = committed[1] + 1 if committed is not None else 0
         with persist_scope():
             # two consumers (cells write + probe) — persist the assignment
             assigned = scoped_persist(self._assign(batch_emb))
-            assigned.write.mode("overwrite").parquet(self._cells_dir(batch_id))
+            assigned.write.mode("overwrite").parquet(
+                self.store.batch_dir(batch_id, "cells")
+            )
             delta = decontam_probe(assigned, self.eval_index(), self.threshold)
             prev = self.contaminated()
             state = delta if prev is None else prev.unionByName(delta)
             state.write.mode("overwrite").parquet(self._contam_dir(cver))
-        self._commit(batch_id, cver)
+        self.store.mark_batch(batch_id)
+        self.store.commit(
+            batch_id,
+            cver,
+            publish=[self.store.batch_dir(batch_id), self._contam_dir(cver)],
+        )
 
     # -- serving -----------------------------------------------------------------
     def contaminated(self) -> DataFrame | None:
@@ -201,30 +170,12 @@ class DecontamIndexMaintainer:
         return None if c is None else c.orderBy("vec_id")
 
     def vacuum(self, keep: int = 1) -> list[int]:
-        """Drop superseded contam versions (the cells store is the index —
-        never vacuumed here). Mirrors RollupMaintainer.vacuum: keeps the
-        committed version plus keep-1 predecessors, never touches versions
-        above the pointer."""
-        import shutil
-
+        """Drop superseded contam versions (statedir.py's vacuum rule; the
+        cells store is the index — never vacuumed here)."""
         committed = self._committed()
         if committed is None:
             return []
-        _, cver = committed
-        root = os.path.join(self.state_dir, "contam")
-        if not os.path.exists(root):
-            return []
-        versions = sorted(
-            int(d[1:]) for d in os.listdir(root) if d.startswith("v") and d[1:].isdigit()
-        )
-        keepers = set(v for v in versions if v > cver)
-        keepers.update([v for v in versions if v <= cver][-max(keep, 1):])
-        removed = []
-        for v in versions:
-            if v not in keepers:
-                shutil.rmtree(self._contam_dir(v))
-                removed.append(v)
-        return removed
+        return self.store.vacuum(keep, committed=committed[1], group="contam")
 
     # -- eval re-release --------------------------------------------------------
     def retrain(self, new_eval_emb: DataFrame, gen: int) -> None:
@@ -244,4 +195,4 @@ class DecontamIndexMaintainer:
         last_batch, cver = committed
         rescored = decontam_probe(self.cells(), self.eval_index(), self.threshold)
         rescored.write.mode("overwrite").parquet(self._contam_dir(cver + 1))
-        self._commit(last_batch, cver + 1)
+        self.store.commit(last_batch, cver + 1, publish=[self._contam_dir(cver + 1)])

@@ -3,36 +3,20 @@ operators/dedup.py:incremental_neardup.
 
 A production training-data pipeline dedups each ingest batch against ALL
 history. Rebuilding the corpus band index per run re-pays the corpus;
-this maintainer persists it once and grows it per batch:
-
-    state_dir/
-      baseline/g{N}/bands/     compacted index up to batch N (see compact())
-      baseline/g{N}/shingles/  compacted verify store up to batch N
-      batches/b{N}/bands/      (id, band_id, band_key)  — the LSH index delta
-      batches/b{N}/shingles/   (id, shingles)           — the verify store delta
-      dups/b{N}/               (new_id, corpus_id, jaccard) for batch N
-      _CURRENT                 highest committed batch id (atomic rename)
-      _BASELINE                batch id the baseline covers (atomic rename)
+this maintainer persists it once and grows it per batch, as a delta chain
+under statedir.py with leaves `bands/` (id, band_id, band_key — the LSH
+index) and `shingles/` (id, shingles — the verify store), plus each batch's
+output pairs (new_id, corpus_id, jaccard) under `dups/b{N}`.
 
 Per batch: probe the union of the baseline (if any) plus newer committed
 index deltas with the new batch (operators/dedup.py:probe_neardup_index —
 cost O(|batch| + matched buckets)), persist the batch's dup pairs, then
-append the batch's own band keys + shingles as a new delta and advance the
-pointer. Same idempotence discipline as streaming/rollup.py:
-RollupMaintainer: writes go to batch-id-keyed dirs (a replayed batch
-overwrites its own dirs, never double-appends) and the pointer moves only
-after all writes, so a batch id at or below the pointer is a no-op.
+append the batch's own band keys + shingles as a new delta and commit it;
+a replayed batch id is a no-op.
 
 compact() folds every committed delta (plus the previous baseline) into
-one baseline generation keyed by the covered batch id, then truncates the
-delta chain — without it, probe cost and file-handle count grow linearly
-with batch count forever (the round-4 verdict's #2 defect). Crash-safe and
-replay-idempotent by the same two-phase discipline: the consolidated dirs
-are keyed by the covered batch id (a replay overwrites them), readers only
-see them after the _BASELINE pointer moves (atomic rename), and
-garbage-collection of superseded dirs runs after the pointer move (a crash
-between leaves stale dirs that readers already exclude; the next compact
-sweeps them).
+one baseline generation — without it, probe cost and file-handle count
+grow linearly with batch count forever (the round-4 verdict's #2 defect).
 
 Scale note: the verify store here holds exact shingle sets so the pytest
 gate (and q70's oracle logic) stays exact; at 100 TB the store would hold
@@ -42,8 +26,6 @@ same maintenance topology, ~constant bytes per document.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_paper_implementation_spark.operators.dedup import (
@@ -51,6 +33,7 @@ from mapreduce_paper_implementation_spark.operators.dedup import (
     _shingle_frame,
     probe_neardup_index,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class DedupIndexMaintainer:
@@ -77,124 +60,39 @@ class DedupIndexMaintainer:
         self.threshold = threshold
         self.seed = seed
         self.max_bucket_size = max_bucket_size
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointers (same discipline as streaming/rollup.py) -----------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _baseline_pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_BASELINE")
-
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _committed_version(self) -> int | None:
-        return self._read_pointer(self._pointer_path())
-
-    def _commit_version(self, version: int) -> None:
-        self._write_pointer(self._pointer_path(), version)
-
-    def _baseline_version(self) -> int | None:
-        return self._read_pointer(self._baseline_pointer_path())
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _baseline_dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", leaf)
-
-    def _committed_dirs(self, leaf: str) -> list[str]:
-        """Dirs holding the current state of `leaf`: the baseline generation
-        (if one is committed) plus every delta NEWER than it, up to the
-        committed pointer. After compact() this is exactly one dir however
-        many batches ever ran."""
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline, leaf))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, leaf)
-            for d in sorted(os.listdir(root))
-            if d.startswith("b")
-            and d[1:].isdigit()
-            and floor < int(d[1:]) <= committed
-        ]
-        return dirs
+        self.store = VersionedStateDir(state_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
         """Fold the baseline + every committed delta into one new baseline
-        generation and truncate the delta chain. Returns the batch id the
-        new baseline covers (None if there is nothing to compact).
+        generation and truncate the delta chain (statedir.py's compact).
+        Returns the batch id the new baseline covers (None if there is
+        nothing to compact); a repeat is a no-op returning the same id."""
 
-        Idempotent under replay: the consolidated dirs are keyed by the
-        covered batch id, so a re-run overwrites them and re-commits the
-        same pointer. A crash before the pointer move leaves the new dirs
-        invisible; a crash after it leaves stale dirs that readers already
-        exclude and the GC pass of the next compact removes."""
-        import shutil
+        def fold(g: int) -> None:
+            for leaf in ("bands", "shingles"):
+                self.store.read_leaf(self.spark, leaf).write.mode(
+                    "overwrite"
+                ).parquet(self.store.generation_dir(g, leaf))
 
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        if self._baseline_version() == committed:
-            return committed  # already compacted through the newest batch
-        # Phase 1: write the consolidated state, keyed by the covered id.
-        for leaf in ("bands", "shingles"):
-            dirs = self._committed_dirs(leaf)
-            self.spark.read.parquet(*dirs).write.mode("overwrite").parquet(
-                self._baseline_dir(committed, leaf)
-            )
-        # Phase 2: atomically publish.
-        self._write_pointer(self._baseline_pointer_path(), committed)
-        # Phase 3: GC superseded dirs (best-effort; readers no longer see
-        # them whether or not this completes).
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        return self.store.compact(fold)
 
     # -- state ------------------------------------------------------------
     def index(self) -> DataFrame | None:
         """Union of committed index deltas (the materialized corpus index)."""
-        dirs = self._committed_dirs("bands")
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "bands")
 
     def corpus_shingles(self) -> DataFrame | None:
-        dirs = self._committed_dirs("shingles")
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "shingles")
 
     def update(self, new_docs: DataFrame, batch_id: int) -> DataFrame | None:
         """Dedup one batch against all committed history, persist its dup
         pairs and its index/verify deltas. Returns the batch's dup pairs
         (None for an already-committed replay)."""
-        committed = self._committed_version()
-        dups_dir = os.path.join(self.state_dir, "dups", f"b{batch_id:010d}")
-        if committed is not None and committed >= batch_id:
+        if self.store.replayed(batch_id):
             return None
+        self.store.begin_batch(batch_id, "dups")
+        dups_dir = self.store.batch_dir(batch_id, group="dups")
         sh_new = _shingle_frame(new_docs, self.id_col, self.text_col, self.shingle_n)
         index = self.index()
         if index is not None:
@@ -215,7 +113,7 @@ class DedupIndexMaintainer:
         dups.write.mode("overwrite").parquet(dups_dir)
         _band_keys(sh_new, self.num_hashes, self.bands, self.seed).write.mode(
             "overwrite"
-        ).parquet(self._batch_dir(batch_id, "bands"))
-        sh_new.write.mode("overwrite").parquet(self._batch_dir(batch_id, "shingles"))
-        self._commit_version(batch_id)
+        ).parquet(self.store.batch_dir(batch_id, "bands"))
+        sh_new.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "shingles"))
+        self.store.commit_batch(batch_id, "dups")
         return self.spark.read.parquet(dups_dir)

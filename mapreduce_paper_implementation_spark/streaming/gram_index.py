@@ -9,17 +9,12 @@ is RETROACTIVE: a gram that batch 1 posted uniquely becomes "repeated" the
 moment batch 2 re-posts it, so batch 2 must re-emit corrected rows for the
 batch-1 docs holding it (the "retroactive repeat credit").
 
-State (dedup_index.py delta-chain + baseline discipline):
+State is a delta chain under statedir.py with three leaves, plus each
+batch's emitted output delta (see below) under `updates/b{N}`:
 
-    state_dir/
-      baseline/g{N}/doc_grams/   compacted (id, gh, npos)   up to batch N
-      baseline/g{N}/doc_totals/  compacted (id, n_grams)
-      baseline/g{N}/gram_docs/   compacted (gh, ndocs)
-      batches/b{N}/doc_grams/    (id, gh, npos)   — positions of gram gh in doc
-      batches/b{N}/doc_totals/   (id, n_grams)    — total k-gram positions
-      batches/b{N}/gram_docs/    (gh, ndocs)      — docs in THIS batch w/ gh
-      updates/b{N}/              emitted output delta (see below)
-      _CURRENT / _BASELINE       atomic-rename pointers
+    doc_grams/   (id, gh, npos)   — positions of gram gh in doc
+    doc_totals/  (id, n_grams)    — total k-gram positions
+    gram_docs/   (gh, ndocs)      — docs in THIS batch w/ gh
 
 Each doc arrives in exactly one batch (ingest contract, same as
 dedup_index.py), so per-batch (gh, id) pairs are disjoint and the global
@@ -39,13 +34,8 @@ semi-joined to the batch's gram set, never scanned wholesale per doc; at
 100 TB the gram_docs leaf would be bucketed by gh so that semi-join
 co-locates without a shuffle.
 
-Idempotence: same two-phase discipline as streaming/rollup.py — all writes
-land in batch-id-keyed dirs (a replay overwrites its own dirs), the
-_CURRENT pointer moves only after every write, and a batch id at or below
-the pointer is a no-op returning None. compact() folds baseline + deltas
-into one new baseline generation keyed by the covered batch id (replay
-overwrites; readers switch only at the atomic _BASELINE rename; GC of
-superseded dirs is best-effort afterwards).
+Idempotence: a replayed batch id is a no-op returning None. compact()
+folds baseline + deltas into one new baseline generation.
 
 Reference analog: none — /root/reference (mr/worker.go) recomputes every
 job from scratch; incremental view maintenance is part of this engine's
@@ -54,14 +44,13 @@ beyond-reference pipeline surface (SURVEY.md §2, VERDICT r06 ask #1).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.operators.text_analysis import (
     gram_positions,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 class GramIndexMaintainer:
     def __init__(
@@ -77,71 +66,12 @@ class GramIndexMaintainer:
         self.k = k
         self.id_col = id_col
         self.text_col = text_col
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointers (rollup.py / dedup_index.py discipline) ------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _baseline_pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_BASELINE")
-
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _committed_version(self) -> int | None:
-        return self._read_pointer(self._pointer_path())
-
-    def _baseline_version(self) -> int | None:
-        return self._read_pointer(self._baseline_pointer_path())
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _baseline_dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", leaf)
-
-    def _committed_dirs(self, leaf: str) -> list[str]:
-        """Baseline generation (if any) plus every newer committed delta —
-        exactly one dir right after compact()."""
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline, leaf))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, leaf)
-            for d in sorted(os.listdir(root))
-            if d.startswith("b")
-            and d[1:].isdigit()
-            and floor < int(d[1:]) <= committed
-        ]
-        return dirs
-
-    def _read_leaf(self, leaf: str) -> DataFrame | None:
-        dirs = self._committed_dirs(leaf)
-        return self.spark.read.parquet(*dirs) if dirs else None
+        self.store = VersionedStateDir(state_dir)
 
     # -- state views -------------------------------------------------------
     def gram_counts(self) -> DataFrame | None:
         """Cumulative (gh, ndocs) over all committed batches."""
-        raw = self._read_leaf("gram_docs")
+        raw = self.store.read_leaf(self.spark, "gram_docs")
         if raw is None:
             return None
         return raw.groupBy("gh").agg(F.sum("ndocs").alias("ndocs"))
@@ -181,34 +111,32 @@ class GramIndexMaintainer:
     def current(self) -> DataFrame | None:
         """The full materialized q75 answer over every committed doc —
         equals crossdoc_repeated_grams over the union of all batches."""
-        doc_grams = self._read_leaf("doc_grams")
+        doc_grams = self.store.read_leaf(self.spark, "doc_grams")
         if doc_grams is None:
             return None
         repeated = self.gram_counts().where(F.col("ndocs") >= 2).select("gh")
-        return self._output_for(doc_grams, self._read_leaf("doc_totals"), repeated)
+        return self._output_for(doc_grams, self.store.read_leaf(self.spark, "doc_totals"), repeated)
 
     def updates(self, batch_id: int) -> DataFrame:
         """The output delta a committed batch emitted (for re-reading)."""
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, "updates", f"b{batch_id:010d}")
-        )
+        return self.spark.read.parquet(self.store.batch_dir(batch_id, group="updates"))
 
     # -- ingest ------------------------------------------------------------
     def update(self, docs: DataFrame, batch_id: int) -> DataFrame | None:
         """Fold one batch of documents into the index and emit the output
         delta (new docs + retroactively-credited prior docs). Idempotent:
         a batch id at or below the committed pointer is a no-op -> None."""
-        committed = self._committed_version()
-        if committed is not None and committed >= batch_id:
+        if self.store.replayed(batch_id):
             return None
+        self.store.begin_batch(batch_id, "updates")
 
         grams = gram_positions(docs, self.k, self.id_col, self.text_col)
         # One aggregation tree: totals and the batch's per-gram doc counts
         # both derive from doc_grams_new, persisted first and reused.
         grams.groupBy("id", "gh").agg(F.count("*").alias("npos")).write.mode(
             "overwrite"
-        ).parquet(self._batch_dir(batch_id, "doc_grams"))
-        doc_grams_new = self.spark.read.parquet(self._batch_dir(batch_id, "doc_grams"))
+        ).parquet(self.store.batch_dir(batch_id, "doc_grams"))
+        doc_grams_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "doc_grams"))
         doc_totals_new = doc_grams_new.groupBy("id").agg(
             F.sum("npos").alias("n_grams")
         )
@@ -216,15 +144,15 @@ class GramIndexMaintainer:
             F.count("*").alias("ndocs")
         )
         doc_totals_new.write.mode("overwrite").parquet(
-            self._batch_dir(batch_id, "doc_totals")
+            self.store.batch_dir(batch_id, "doc_totals")
         )
         gram_docs_new.write.mode("overwrite").parquet(
-            self._batch_dir(batch_id, "gram_docs")
+            self.store.batch_dir(batch_id, "gram_docs")
         )
 
         # Prior state (the pointer has NOT moved yet, so these reads see
         # exactly the pre-batch committed chain).
-        prior_doc_grams = self._read_leaf("doc_grams")
+        prior_doc_grams = self.store.read_leaf(self.spark, "doc_grams")
         out_grams, out_totals = doc_grams_new, doc_totals_new
         if prior_doc_grams is not None:
             # Retroactive repeat credits: prior docs holding a gram whose
@@ -233,7 +161,7 @@ class GramIndexMaintainer:
             # cost is O(|batch| + matched), not O(|corpus|).
             batch_ghs = doc_grams_new.select("gh").distinct()
             prior_counts = (
-                self._read_leaf("gram_docs")
+                self.store.read_leaf(self.spark, "gram_docs")
                 .join(batch_ghs, "gh", "left_semi")
                 .groupBy("gh")
                 .agg(F.sum("ndocs").alias("ndocs"))
@@ -248,7 +176,7 @@ class GramIndexMaintainer:
                 prior_doc_grams.join(affected_ids, "id", "left_semi")
             )
             out_totals = doc_totals_new.unionByName(
-                self._read_leaf("doc_totals").join(affected_ids, "id", "left_semi")
+                self.store.read_leaf(self.spark, "doc_totals").join(affected_ids, "id", "left_semi")
             )
 
         # Post-batch cumulative counts, restricted to the ghs the emitted
@@ -256,7 +184,7 @@ class GramIndexMaintainer:
         # their repeated status entirely to prior batches).
         out_ghs = out_grams.select("gh").distinct()
         cum_sources = [gram_docs_new]
-        prior_gram_docs = self._read_leaf("gram_docs")
+        prior_gram_docs = self.store.read_leaf(self.spark, "gram_docs")
         if prior_gram_docs is not None:
             cum_sources.append(prior_gram_docs)
         cum = cum_sources[0]
@@ -270,44 +198,25 @@ class GramIndexMaintainer:
             .select("gh")
         )
 
-        out_dir = os.path.join(self.state_dir, "updates", f"b{batch_id:010d}")
+        out_dir = self.store.batch_dir(batch_id, group="updates")
         self._output_for(out_grams, out_totals, repeated).write.mode(
             "overwrite"
         ).parquet(out_dir)
-        # Pointer LAST: every dir above is batch-id-keyed, so a crash before
-        # this line leaves no visible state and a replay overwrites cleanly.
-        self._write_pointer(self._pointer_path(), batch_id)
+        self.store.commit_batch(batch_id, "updates")
         return self.spark.read.parquet(out_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
         """Fold baseline + committed deltas into one baseline generation and
-        truncate the delta chain. gram_docs folds by SUM (per-batch doc
-        sets are disjoint); the doc leaves fold by union. Replay-idempotent
-        and crash-safe per the module docstring."""
-        import shutil
+        truncate the delta chain (statedir.py's compact). gram_docs folds by
+        SUM (per-batch doc sets are disjoint); the doc leaves fold by union."""
 
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        if self._baseline_version() == committed:
-            return committed
-        self._read_leaf("doc_grams").write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "doc_grams")
-        )
-        self._read_leaf("doc_totals").write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "doc_totals")
-        )
-        self.gram_counts().write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "gram_docs")
-        )
-        self._write_pointer(self._baseline_pointer_path(), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        def fold(g: int) -> None:
+            for leaf, df in (
+                ("doc_grams", self.store.read_leaf(self.spark, "doc_grams")),
+                ("doc_totals", self.store.read_leaf(self.spark, "doc_totals")),
+                ("gram_docs", self.gram_counts()),
+            ):
+                df.write.mode("overwrite").parquet(self.store.generation_dir(g, leaf))
+
+        return self.store.compact(fold)

@@ -24,14 +24,10 @@ Two serving contracts, deliberately distinct:
    graph) — which is why contract 1, not this one, is the q74-parity
    surface.
 
-State layout (versioned-pointer discipline of streaming/rollup.py /
-cc_index.py — crash-safe, replay-idempotent):
-
-    state_dir/
-      v{N}/edges/   distinct (src, dst) after batch N
-      v{N}/ranks/   converged (node, r) after batch N
-      v{N}/META     {"n_iters": k, "warm": bool}
-      _CURRENT      highest committed batch id (atomic rename)
+State is full-state versions under statedir.py (crash-safe,
+replay-idempotent). Version N holds `edges/` (distinct (src, dst) after
+batch N), `ranks/` (converged (node, r)) and `META`
+({"n_iters": k, "warm": bool}).
 
 At 100 TB the edge store would be bucketed by src (rewrite only buckets
 the delta touches — the cc_index note); ranks are O(|nodes|).
@@ -42,8 +38,6 @@ id — the shared idempotence contract).
 from __future__ import annotations
 
 import json
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +46,7 @@ from mapreduce_paper_implementation_spark.operators.graph import (
     pagerank,
     pagerank_fixpoint,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class PageRankMaintainer:
@@ -72,44 +67,27 @@ class PageRankMaintainer:
         self.scale = scale
         self.damping_pct = damping_pct
         self.max_iter = max_iter
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- pointer (rollup.py discipline) ------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed_version(self) -> int | None:
-        try:
-            with open(self._pointer_path(), encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _commit_version(self, version: int) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer_path())
+        self.store = VersionedStateDir(state_dir)
 
     def _dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, f"v{version:010d}", leaf)
+        return self.store.version_dir(version, leaf)
 
     # -- state -------------------------------------------------------------
     def edges(self) -> DataFrame | None:
-        v = self._committed_version()
+        v = self.store.pointer()
         if v is None:
             return None
         return self.spark.read.parquet(self._dir(v, "edges"))
 
     def ranks(self) -> DataFrame | None:
         """Committed converged (node, r) vector."""
-        v = self._committed_version()
+        v = self.store.pointer()
         if v is None:
             return None
         return self.spark.read.parquet(self._dir(v, "ranks"))
 
     def meta(self, version: int | None = None) -> dict | None:
-        v = self._committed_version() if version is None else version
+        v = self.store.pointer() if version is None else version
         if v is None:
             return None
         with open(self._dir(v, "META"), encoding="ascii") as fh:
@@ -121,7 +99,7 @@ class PageRankMaintainer:
         number of fixpoint rounds the warm re-convergence took (None for a
         replayed batch id — idempotence by version check, never by merge).
         """
-        committed = self._committed_version()
+        committed = self.store.pointer()
         if committed is not None and committed >= batch_id:
             return None
         delta = (
@@ -161,7 +139,7 @@ class PageRankMaintainer:
         ).parquet(self._dir(batch_id, "ranks"))
         with open(self._dir(batch_id, "META"), "w", encoding="ascii") as fh:
             json.dump({"n_iters": n_iters, "warm": warm}, fh)
-        self._commit_version(batch_id)
+        self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
         return n_iters
 
     # -- serving -----------------------------------------------------------
@@ -191,20 +169,6 @@ class PageRankMaintainer:
         )
 
     def vacuum(self, keep: int = 1) -> list[int]:
-        """Drop superseded versions, keeping the committed one plus the
-        newest `keep - 1` below it. Returns removed version ids."""
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(self.state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        keepers = {committed, *versions[-keep:], *(v for v in versions if v > committed)}
-        removed = []
-        for v in versions:
-            if v not in keepers:
-                shutil.rmtree(os.path.join(self.state_dir, f"v{v:010d}"))
-                removed.append(v)
-        return removed
+        """Drop superseded versions (statedir.py's vacuum rule). Returns
+        removed version ids."""
+        return self.store.vacuum(keep)

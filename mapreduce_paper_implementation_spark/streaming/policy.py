@@ -18,8 +18,8 @@ a production job would log them).
 
 Trigger semantics — restart-safe where the state allows it:
 
-- compact_after_n_deltas: fires when the on-disk delta chain (the
-  `batches/b*` dirs every chain maintainer keeps) reaches n dirs. Reading
+- compact_after_n_deltas: fires when the on-disk delta chain (the batch
+  dirs every chain maintainer keeps, statedir.py) reaches n dirs. Reading
   chain length from disk (an O(n)-entry listdir, no data read) makes the
   trigger restart-safe: a relaunched driver sees the same chain and the
   same decision. This is the declarative form of the "probe cost grows
@@ -31,8 +31,9 @@ Trigger semantics — restart-safe where the state allows it:
   store scan). The baseline is captured from the same sidecar at wrap
   time or after each retrain, so it, too, survives restarts.
 - vacuum_keep (versioned maintainers): fires after every update, keeping
-  the newest `keep` superseded versions — bounded-disk as a standing
-  property rather than an occasional chore.
+  the committed version plus `keep - 1` predecessors (statedir.py's
+  vacuum rule) — bounded-disk as a standing property rather than an
+  occasional chore.
 
 Policies compose with the gating topology unchanged: the wrapper returns
 update()'s DataFrame verbatim (None for replays — policy does NOT fire on
@@ -41,7 +42,6 @@ replays, so a crash-replay never doubles maintenance work).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -70,24 +70,10 @@ class MaintainedIngest:
     _occ_baseline: int | None = None
 
     def _committed(self) -> int | None:
-        # Uniform across every maintainer: the atomic _CURRENT pointer file
-        # under state_dir (accessor method names vary per maintainer).
-        try:
-            with open(
-                os.path.join(self.maintainer.state_dir, "_CURRENT"), encoding="ascii"
-            ) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return self.maintainer.store.pointer()
 
     def _chain_length(self) -> int:
-        root = os.path.join(self.maintainer.state_dir, "batches")
-        try:
-            return sum(
-                1 for d in os.listdir(root) if d.startswith("b") and d[1:].isdigit()
-            )
-        except FileNotFoundError:
-            return 0
+        return len(self.maintainer.store.batch_ids())
 
     def _max_occupancy(self) -> int:
         occ = self.maintainer.occupancy()

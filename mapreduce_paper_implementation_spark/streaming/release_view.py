@@ -8,22 +8,15 @@ re-scores every doc (split weights + quality cut). A continuous-ingest
 pipeline pays each of those ONCE, at ingest, as O(batch) map work; the
 release cut is then a readout over state:
 
-  state_dir/
-    cc/                      ComponentsMaintainer (label table) — fed the
-                             batch's near-dup PAIR delta (production:
-                             streaming/dedup_index.py's per-batch output)
-    batches/b{N}/meta/       (doc_id, source, tc, q)     map-only
-    batches/b{N}/grams/      (doc_id, gh) distinct       shingle+hash
-    batches/b{N}/cells/      (id, cell, vec, nrm)        frozen-centroid
-                             assign (operators/dedup.py:assign_cells,
-                             nassign=2 — q127's geometry)
-    batches/b{N}/_COMMITTED  per-batch commit marker (round 14): written
-                             strictly after every leaf write AND the
-                             cc fold; reads include only marker-bearing
-                             dirs and update() purges unmarked crash
-                             residue, so a half-folded batch can never
-                             become visible through a later commit
-    _CURRENT                 atomic-rename pointer (high-water mark)
+  a delta chain under statedir.py with leaves
+    meta/    (doc_id, source, tc, q)     map-only
+    grams/   (doc_id, gh) distinct       shingle+hash
+    cells/   (id, cell, vec, nrm)        frozen-centroid assign
+             (operators/dedup.py:assign_cells, nassign=2 — q127's geometry)
+  plus, under cc/, a ComponentsMaintainer (label table) fed the batch's
+  near-dup PAIR delta (production: streaming/dedup_index.py's per-batch
+  output). A batch commits only after the cc fold, so a half-folded batch
+  is crash residue that no read sees.
 
 current() composes the cut from state through the SAME
 plans/release_queries.py:_release_cut_tail expression tree the hash-gated
@@ -57,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 from mapreduce_paper_implementation_spark.streaming.cc_index import (
     ComponentsMaintainer,
 )
@@ -82,66 +76,7 @@ class ReleaseCutView:
         # frozen geometry: materialize once, every batch re-reads it
         self.centroids = centroids.localCheckpoint(eager=True)
         self.cc = ComponentsMaintainer(spark, os.path.join(state_dir, "cc"))
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-
-    # -- pointer (rollup.py discipline) ------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed_version(self) -> int | None:
-        try:
-            with open(self._pointer_path(), encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _marker_path(self, batch_id: int) -> str:
-        """Per-batch commit marker (round-14 ADVICE fix). The view pointer
-        is only a high-water mark: a crash after batch N's leaf writes but
-        before cc.update left dirs that a LATER commit would silently make
-        visible while N's pair delta never reached the label table. The
-        marker is written strictly after every leaf write AND cc.update,
-        so marker-bearing == fully folded; reads and replay detection key
-        on it, and update() purges unmarked residue before ingesting."""
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", "_COMMITTED")
-
-    def _batch_ids_on_disk(self) -> list[int]:
-        root = os.path.join(self.state_dir, "batches")
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(root)
-            if d.startswith("b") and d[1:].isdigit()
-        )
-
-    def _purge_uncommitted(self) -> None:
-        """Delete batch dirs without a commit marker — crash residue from
-        an ingest that died mid-write. Runs at the top of every update()
-        so residue can never outlive (and be exposed by) a later commit."""
-        import shutil
-
-        for bid in self._batch_ids_on_disk():
-            if not os.path.exists(self._marker_path(bid)):
-                shutil.rmtree(
-                    os.path.join(self.state_dir, "batches", f"b{bid:010d}"),
-                    ignore_errors=True,
-                )
-
-    def _read_leaf(self, leaf: str) -> DataFrame | None:
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        # marker-bearing dirs only: an unmarked dir is crash residue whose
-        # pair delta never reached the label table — including it would
-        # silently diverge the view from the one-shot cut.
-        dirs = [
-            self._batch_dir(bid, leaf)
-            for bid in self._batch_ids_on_disk()
-            if bid <= committed and os.path.exists(self._marker_path(bid))
-        ]
-        return self.spark.read.parquet(*dirs) if dirs else None
+        self.store = VersionedStateDir(state_dir)
 
     # -- ingest: O(batch) map work, once per doc ----------------------------
     def update(
@@ -155,8 +90,7 @@ class ReleaseCutView:
         hashed n-grams, frozen-centroid cell assignments, and the batch's
         near-dup pair delta into the label table. Each projection is the
         EXACT expression q127 would apply to the same rows at cut time.
-        Idempotent via the ingested-batch-dir check (the round-13
-        contamination_index contract)."""
+        A replayed batch id is a no-op (statedir.py's replay rule)."""
         from mapreduce_paper_implementation_spark.functions.text import (
             token_count,
             word_shingles,
@@ -167,21 +101,9 @@ class ReleaseCutView:
             quality_score,
         )
 
-        committed = self._committed_version()
-        if committed is not None and committed >= batch_id:
-            # Replay keys on the commit MARKER, not any single leaf dir
-            # (round-14 ADVICE fix: meta-only crash residue used to be
-            # misclassified as a replay, permanently dropping grams/cells).
-            if os.path.exists(self._marker_path(batch_id)):
-                return None
-            raise ValueError(
-                f"batch_id {batch_id} at or below the committed pointer "
-                f"({committed}) was never ingested — monotone batch ids "
-                "required (the contamination_index contract)"
-            )
-        # Crash residue (unmarked dirs) is purged BEFORE ingesting so a
-        # commit here can never expose a half-folded earlier batch.
-        self._purge_uncommitted()
+        if self.store.replayed(batch_id):
+            return None
+        self.store.begin_batch(batch_id)
 
         docs.select(
             "doc_id",
@@ -191,28 +113,21 @@ class ReleaseCutView:
             .cast("decimal(9,6)")
             .cast("double")
             .alias("q"),
-        ).write.mode("overwrite").parquet(self._batch_dir(batch_id, "meta"))
+        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "meta"))
 
         docs.select(
             "doc_id", F.explode(word_shingles("text", self.n_gram)).alias("shingle")
         ).select("doc_id", F.xxhash64("shingle").alias("gh")).distinct().write.mode(
             "overwrite"
-        ).parquet(self._batch_dir(batch_id, "grams"))
+        ).parquet(self.store.batch_dir(batch_id, "grams"))
 
         assign_cells(emb, self.centroids, nassign=self.nassign).withColumn(
             "nrm", norm(F.col("vec"))
-        ).write.mode("overwrite").parquet(self._batch_dir(batch_id, "cells"))
+        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "cells"))
 
         self.cc.update(pairs, batch_id)
-        # Marker strictly after every leaf write AND the label-table fold:
-        # marker-bearing == fully folded (reads filter on it), then the
-        # high-water pointer moves last.
-        with open(self._marker_path(batch_id), "w", encoding="ascii") as fh:
-            fh.write("1")
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, self._pointer_path())
+        # commit after the label-table fold: a committed batch is fully folded
+        self.store.commit_batch(batch_id)
         return None
 
     def meta(self) -> DataFrame:
@@ -221,7 +136,7 @@ class ReleaseCutView:
         -> budget -> export composes off this view without re-tokenizing
         (equality with the docs-mode export pinned in
         tests/test_round14_additions.py)."""
-        meta = self._read_leaf("meta")
+        meta = self.store.read_leaf(self.spark, "meta")
         if meta is None:
             raise FileNotFoundError("no committed ingest batches")
         return meta.select("doc_id", "source", "tc")
@@ -247,11 +162,11 @@ class ReleaseCutView:
             _release_cut_tail,
         )
 
-        meta = self._read_leaf("meta")
+        meta = self.store.read_leaf(self.spark, "meta")
         if meta is None:
             raise FileNotFoundError("no committed ingest batches")
-        grams = self._read_leaf("grams")
-        cells = self._read_leaf("cells")
+        grams = self.store.read_leaf(self.spark, "grams")
+        cells = self.store.read_leaf(self.spark, "cells")
 
         lab = (
             cluster_split_assign_from_tc(

@@ -7,27 +7,19 @@ so the serving-side rollup is always one cheap `finalize_rollup` away and
 raw history is never re-read. This is the streaming half of the same
 contract q69 gates in batch.
 
-Exactly-once without a transactional store, on two disciplines the engine
-already uses elsewhere (textkv sink, reference mr/worker.go:157 rename
-discipline):
-
-- VERSIONED STATE: batch N writes its merged state to `v{N}`, never in
-  place. A crash mid-write leaves `v{N-1}` untouched.
-- ATOMIC POINTER, LAST: `_CURRENT` (the committed version number) is
-  renamed into place only after the state write completes. foreachBatch is
-  at-least-once; a replay of batch N sees the pointer already >= N and
-  SKIPS — merging twice would double-count, so idempotence comes from the
-  version check, not from the merge.
+Exactly-once without a transactional store: batch N writes its merged
+state to a new full-state version and commits it by moving the pointer
+(layout and commit rule: statedir.py). A replay of batch N sees the pointer
+already >= N and SKIPS — merging twice would double-count, so idempotence
+comes from the version check, not from the merge.
 
 State size is |buckets| x |keys| regardless of stream volume, so the
 per-batch maintenance job is O(|state| + |delta|) — at 100 TB/day the delta
 aggregation dominates and history cost stays constant. Old versions are
-left for time travel/debugging; production would vacuum `v < CURRENT`.
+left for time travel/debugging until `vacuum` drops them.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,6 +27,7 @@ from mapreduce_paper_implementation_spark.operators.incremental import (
     merge_states,
     rollup_state,
 )
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class RollupMaintainer:
@@ -62,34 +55,14 @@ class RollupMaintainer:
             lambda delta: rollup_state(delta, bucket_s=self.bucket_s)
         )
         self._merge_fn = merge_fn or merge_states
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- pointer ----------------------------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed_version(self) -> int | None:
-        try:
-            with open(self._pointer_path(), encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _commit_version(self, version: int) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer_path())  # atomic: commit is the rename
-
-    def _version_dir(self, version: int) -> str:
-        return os.path.join(self.state_dir, f"v{version:010d}")
+        self.store = VersionedStateDir(state_dir)
 
     # -- state ------------------------------------------------------------
     def current_state(self) -> DataFrame | None:
-        v = self._committed_version()
+        v = self.store.pointer()
         if v is None:
             return None
-        return self.spark.read.parquet(self._version_dir(v))
+        return self.spark.read.parquet(self.store.version_dir(v))
 
     def update(self, delta: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch of raw events into the state. Idempotent
@@ -99,7 +72,7 @@ class RollupMaintainer:
             persist_scope,
         )
 
-        committed = self._committed_version()
+        committed = self.store.pointer()
         if committed is not None and committed >= batch_id:
             return
         # persist_scope: the parquet write below materializes the whole
@@ -112,32 +85,13 @@ class RollupMaintainer:
             prev = self.current_state()
             if prev is not None:
                 state = self._merge_fn(prev, state)
-            state.write.mode("overwrite").parquet(self._version_dir(batch_id))
-        self._commit_version(batch_id)
+            state.write.mode("overwrite").parquet(self.store.version_dir(batch_id))
+        self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
 
     def vacuum(self, keep: int = 1) -> list[int]:
-        """Drop superseded state versions, keeping the committed one plus the
-        `keep - 1` most recent predecessors. Never touches versions above the
-        pointer (an in-flight batch may be writing there). Returns the
-        removed version numbers."""
-        import shutil
-
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(self.state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        keepers = set(v for v in versions if v > committed)  # in-flight
-        keepers.update([v for v in versions if v <= committed][-max(keep, 1):])
-        removed = []
-        for v in versions:
-            if v not in keepers:
-                shutil.rmtree(self._version_dir(v))
-                removed.append(v)
-        return removed
+        """Drop superseded state versions (statedir.py's vacuum rule).
+        Returns the removed version numbers."""
+        return self.store.vacuum(keep)
 
 
 def histogram_maintainer(

@@ -17,9 +17,8 @@ maintainers assume):
     merge(A, B).last   = B.last  if present else A.last
 
 which is associative, so per-batch deltas fold into durable state under the
-same versioned-state/atomic-pointer exactly-once discipline as
-streaming/rollup.py (versions never overwritten in place; the `_CURRENT`
-pointer renamed last; at-least-once replays skip on the version check).
+same exactly-once discipline as streaming/rollup.py (full-state versions
+under statedir.py; at-least-once replays skip on the version check).
 
 State size is O(|event_types|^2 + |users|) regardless of stream volume —
 the per-batch job is O(|delta| + |users|), never O(history). Serving side
@@ -106,30 +105,30 @@ class TransitionMaintainer(RollupMaintainer):
         super().__init__(spark, state_dir)
 
     def _read_state(self, v: int) -> tuple[DataFrame, DataFrame]:
-        d = self._version_dir(v)
+        d = self.store.version_dir(v)
         return (
             self.spark.read.parquet(os.path.join(d, "counts")),
             self.spark.read.parquet(os.path.join(d, "endpoints")),
         )
 
     def current_state(self) -> DataFrame | None:
-        v = self._committed_version()
+        v = self.store.pointer()
         if v is None:
             return None
         return self._read_state(v)[0]
 
     def update(self, delta: DataFrame, batch_id: int) -> None:
-        committed = self._committed_version()
+        committed = self.store.pointer()
         if committed is not None and committed >= batch_id:
             return  # at-least-once replay: version already folded in
         counts, endpoints = _batch_state(delta)
         if committed is not None:
             prev_counts, prev_ep = self._read_state(committed)
             counts, endpoints = _merge(prev_counts, prev_ep, counts, endpoints)
-        d = self._version_dir(batch_id)
+        d = self.store.version_dir(batch_id)
         counts.write.mode("overwrite").parquet(os.path.join(d, "counts"))
         endpoints.write.mode("overwrite").parquet(os.path.join(d, "endpoints"))
-        self._commit_version(batch_id)
+        self.store.commit(batch_id, publish=[d])
 
     def transitions(self) -> DataFrame | None:
         """Serving view: the q88 output shape (event_type, next_type,

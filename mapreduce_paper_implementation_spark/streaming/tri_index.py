@@ -23,21 +23,17 @@ chain, no shuffle of history), never rewritten:
    per-node increments (node, d_tri). Counts are served as the sum of the
    committed increment chain — addition is associative (the rollup.py
    property), so increments ARE the state; compact() folds chain + edges
-   into one baseline generation under the dedup_index.py two-pointer
-   discipline, bounding probe fan-in and file-handle count.
+   into one baseline generation, bounding probe fan-in and file-handle
+   count.
 
 Counts only ever increase (edges are only added — deletions would need the
 signed-delta variant). The differential gate in tests/test_tri_index.py
 replays planted and random batches against a full count_triangles recompute
 after every batch, before and after compact().
 
-Layout (dedup_index.py discipline):
-
-    state_dir/
-      batches/b{N}/edges/   canonical new edges accepted in batch N
-      batches/b{N}/tri/     batch N's per-node increments (node, d_tri)
-      baseline/g{N}/...     compacted generation covering batches <= N
-      _CURRENT, _BASELINE   atomic-rename pointers
+State is a delta chain under statedir.py with leaves `edges/` (canonical
+new edges accepted in batch N) and `tri/` (batch N's per-node increments
+(node, d_tri)).
 
 update() returns the increment delta (None for a replayed batch id — the
 idempotence contract shared by every maintainer here).
@@ -45,11 +41,10 @@ idempotence contract shared by every maintainer here).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
 
 
 class TriangleMaintainer:
@@ -64,78 +59,22 @@ class TriangleMaintainer:
         self.state_dir = state_dir
         self.src_col = src_col
         self.dst_col = dst_col
-        os.makedirs(os.path.join(state_dir, "batches"), exist_ok=True)
-        os.makedirs(os.path.join(state_dir, "baseline"), exist_ok=True)
-
-    # -- pointers (dedup_index.py discipline) ------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _baseline_pointer_path(self) -> str:
-        return os.path.join(self.state_dir, "_BASELINE")
-
-    @staticmethod
-    def _read_pointer(path: str) -> int | None:
-        try:
-            with open(path, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    @staticmethod
-    def _write_pointer(path: str, version: int) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, path)
-
-    def _committed_version(self) -> int | None:
-        return self._read_pointer(self._pointer_path())
-
-    def _baseline_version(self) -> int | None:
-        return self._read_pointer(self._baseline_pointer_path())
-
-    def _batch_dir(self, batch_id: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "batches", f"b{batch_id:010d}", leaf)
-
-    def _baseline_dir(self, version: int, leaf: str) -> str:
-        return os.path.join(self.state_dir, "baseline", f"g{version:010d}", leaf)
-
-    def _committed_dirs(self, leaf: str) -> list[str]:
-        committed = self._committed_version()
-        if committed is None:
-            return []
-        baseline = self._baseline_version()
-        dirs: list[str] = []
-        if baseline is not None:
-            dirs.append(self._baseline_dir(baseline, leaf))
-        floor = baseline if baseline is not None else -1
-        root = os.path.join(self.state_dir, "batches")
-        dirs += [
-            os.path.join(root, d, leaf)
-            for d in sorted(os.listdir(root))
-            if d.startswith("b")
-            and d[1:].isdigit()
-            and floor < int(d[1:]) <= committed
-        ]
-        return dirs
+        self.store = VersionedStateDir(state_dir)
 
     # -- state -------------------------------------------------------------
     def edges(self) -> DataFrame | None:
         """The committed canonical (a, b) edge set (union of the chain)."""
-        dirs = self._committed_dirs("edges")
-        return self.spark.read.parquet(*dirs) if dirs else None
+        return self.store.read_leaf(self.spark, "edges")
 
     def counts(self) -> DataFrame | None:
         """The served (node, n_tri) table: sum of the committed increment
         chain (nodes in >= 1 triangle). One aggregate over O(chain) small
         frames — compact() keeps the chain short."""
-        dirs = self._committed_dirs("tri")
-        if not dirs:
+        tri = self.store.read_leaf(self.spark, "tri")
+        if tri is None:
             return None
         return (
-            self.spark.read.parquet(*dirs)
-            .groupBy("node")
+            tri.groupBy("node")
             .agg(F.sum("d_tri").cast("long").alias("n_tri"))
             .where(F.col("n_tri") > 0)
         )
@@ -153,9 +92,9 @@ class TriangleMaintainer:
         returns the (node, d_tri) per-node triangle increments this batch
         caused (empty frame if none). Replay of a committed batch id is a
         no-op returning None."""
-        committed = self._committed_version()
-        if committed is not None and committed >= batch_id:
+        if self.store.replayed(batch_id):
             return None
+        self.store.begin_batch(batch_id)
 
         canon = self._canon(batch)
         old_edges = self.edges()
@@ -200,41 +139,27 @@ class TriangleMaintainer:
         )
 
         # O(|delta|) writes only — history is never rewritten.
-        new_e.write.mode("overwrite").parquet(self._batch_dir(batch_id, "edges"))
-        delta.write.mode("overwrite").parquet(self._batch_dir(batch_id, "tri"))
-        self._write_pointer(self._pointer_path(), batch_id)
-        return self.spark.read.parquet(self._batch_dir(batch_id, "tri"))
+        new_e.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "edges"))
+        delta.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "tri"))
+        self.store.commit_batch(batch_id)
+        return self.spark.read.parquet(self.store.batch_dir(batch_id, "tri"))
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
         """Fold baseline + committed deltas into one new baseline generation
-        (edges unioned, increments summed) and truncate the chain.
-        Idempotent under replay (dedup_index.py discipline: consolidated
-        dirs keyed by the covered batch id, pointer move is the publish)."""
-        committed = self._committed_version()
-        if committed is None:
-            return None
-        if self._baseline_version() == committed:
-            return committed
-        edge_dirs = self._committed_dirs("edges")
-        self.spark.read.parquet(*edge_dirs).write.mode("overwrite").parquet(
-            self._baseline_dir(committed, "edges")
-        )
-        tri_dirs = self._committed_dirs("tri")
-        (
-            self.spark.read.parquet(*tri_dirs)
-            .groupBy("node")
-            .agg(F.sum("d_tri").cast("long").alias("d_tri"))
-            .write.mode("overwrite")
-            .parquet(self._baseline_dir(committed, "tri"))
-        )
-        self._write_pointer(self._baseline_pointer_path(), committed)
-        root = os.path.join(self.state_dir, "batches")
-        for d in os.listdir(root):
-            if d.startswith("b") and d[1:].isdigit() and int(d[1:]) <= committed:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        base_root = os.path.join(self.state_dir, "baseline")
-        for d in os.listdir(base_root):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) < committed:
-                shutil.rmtree(os.path.join(base_root, d), ignore_errors=True)
-        return committed
+        (edges unioned, increments summed) and truncate the chain
+        (statedir.py's compact)."""
+
+        def fold(g: int) -> None:
+            self.edges().write.mode("overwrite").parquet(
+                self.store.generation_dir(g, "edges")
+            )
+            (
+                self.store.read_leaf(self.spark, "tri")
+                .groupBy("node")
+                .agg(F.sum("d_tri").cast("long").alias("d_tri"))
+                .write.mode("overwrite")
+                .parquet(self.store.generation_dir(g, "tri"))
+            )
+
+        return self.store.compact(fold)

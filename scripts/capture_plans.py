@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") output for the current optimization round
-evidence files (plans/r14/<query>_{before,after}.txt). The judge cannot
-run Spark; these files are the committed record that plan-shape claims in
-OPTIMIZATION_r14.md (exchange counts, join strategies, pushdown) match the
-code at the commit that produced them.
+"""Capture .explain("formatted") output as plan evidence files:
+plans/$SPARK_GRAFT_PLANS_ROUND/<query>_{before,after}.txt (default round
+r15). These files are the committed record that plan-shape claims in the
+round's optimization notes (exchange counts, join strategies, pushdown)
+match the code at the commit that produced them; set
+SPARK_GRAFT_PLANS_ROUND to write a new round's directory.
 
 Usage: python scripts/capture_plans.py <before|after> q127_release_cut [more...]
        python scripts/capture_plans.py <before|after> --all

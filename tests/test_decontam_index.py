@@ -100,4 +100,4 @@ def test_decontam_retrain_rescores_from_state(spark, sf_dir, tmp_path):
     assert _rows(got) == _rows(exp)
 
     # new batches after retrain probe the NEW generation automatically
-    assert m._eval_gen() == 1
+    assert m.store.pointer("_EVAL") == 1

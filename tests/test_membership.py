@@ -128,7 +128,7 @@ def test_maintainer_compact_preserves_answers(spark, tmp_path):
     pre_keys = {r["k"] for r in m.keys().collect()}
     assert m.compact() == 1
     assert m.compact() == 1  # idempotent
-    assert len(m._committed_dirs("filter")) == 1
+    assert len(m.store.committed_dirs("filter")) == 1
     assert {(r["word"], r["bits"]) for r in m.filter().collect()} == pre_filter
     assert {r["k"] for r in m.keys().collect()} == pre_keys
     # post-compact batches still answer correctly

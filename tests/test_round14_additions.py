@@ -60,14 +60,14 @@ def test_release_view_crash_residue_invisible_and_purged(spark, sf_dir, tmp_path
         ("grams", d2.select("doc_id")),
         ("cells", e2.select(F.col("vec_id").alias("id"))),
     ]:
-        frame.write.mode("overwrite").parquet(view._batch_dir(2, leaf))
-    assert os.path.isdir(view._batch_dir(2, "meta"))
+        frame.write.mode("overwrite").parquet(view.store.batch_dir(2, leaf))
+    assert os.path.isdir(view.store.batch_dir(2, "meta"))
 
     # batch 3 commits; batch 2's residue must be purged, not exposed
     d3, e3 = sel(200, 300)
     view.update(d3, e3, _empty_pairs(spark), 3)
-    assert not os.path.isdir(view._batch_dir(2, "meta")), "residue outlived commit"
-    ids = {r["doc_id"] for r in view._read_leaf("meta").select("doc_id").collect()}
+    assert not os.path.isdir(view.store.batch_dir(2, "meta")), "residue outlived commit"
+    ids = {r["doc_id"] for r in view.store.read_leaf(spark, "meta").select("doc_id").collect()}
     assert ids == {r["doc_id"] for r in d1.unionByName(d3).collect()}
 
     # replaying batch 2 now raises (never fully ingested, pointer passed it)
@@ -93,13 +93,13 @@ def test_release_view_partial_residue_reingested_before_commit(spark, sf_dir, tm
     e1 = emb.where(F.col("vec_id") < 100)
     # meta leaf only — the mid-write crash shape
     d1.select("doc_id", "source").write.mode("overwrite").parquet(
-        view._batch_dir(1, "meta")
+        view.store.batch_dir(1, "meta")
     )
     view.update(d1, e1, _empty_pairs(spark), 1)  # retry re-ingests fully
     for leaf in ("meta", "grams", "cells"):
-        assert os.path.isdir(view._batch_dir(1, leaf))
-    assert os.path.exists(view._marker_path(1))
-    assert view._read_leaf("grams") is not None
+        assert os.path.isdir(view.store.batch_dir(1, leaf))
+    assert os.path.exists(view.store.marker_path(1))
+    assert view.store.read_leaf(spark, "grams") is not None
     # and the retry is visible: replay is now a marker-keyed no-op
     assert view.update(d1, e1, _empty_pairs(spark), 1) is None
 
@@ -125,10 +125,10 @@ def test_contamination_crash_residue_purged_and_replay_contract(
     # crash residue for batch 2: eval_grams leaf only, no marker
     m._gram_frame(b2).where(F.col("split") != "train").write.mode(
         "overwrite"
-    ).parquet(m._batch_dir(2, "eval_grams"))
+    ).parquet(m.store.batch_dir(2, "eval_grams"))
 
     assert m.update(b3, 3) is not None
-    assert not os.path.isdir(m._batch_dir(2, "eval_grams")), "residue survived"
+    assert not os.path.isdir(m.store.batch_dir(2, "eval_grams")), "residue survived"
     # view == one-shot over batches 1+3 only (batch 2 never committed)
     from tests.test_contamination_index import _one_shot, _rows
 

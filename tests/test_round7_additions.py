@@ -240,6 +240,6 @@ def test_streaming_histogram_maintenance_equals_batch(spark, sf_dir, tmp_path):
     expected = served(hist_state(events, ["event_type"], "value"))
     assert served(m.current_state()) == expected
 
-    committed = m._committed_version()
+    committed = m.store.pointer()
     m.update(events, committed)  # replay: must be a no-op
     assert served(m.current_state()) == expected

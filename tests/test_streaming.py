@@ -310,7 +310,7 @@ def test_streaming_rollup_maintenance_equals_batch(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in got_df.collect()] == expected
 
     # replay of a committed batch id is a no-op (at-least-once safety)
-    committed = maintainer._committed_version()
+    committed = maintainer.store.pointer()
     maintainer.update(ev, committed)
     again = finalize_rollup(maintainer.current_state()).orderBy("bucket_epoch_s", "key")
     assert [tuple(r) for r in again.collect()] == expected
@@ -371,7 +371,7 @@ def test_dedup_index_maintainer_finds_all_cross_batch_pairs(spark, sf_dir, tmp_p
     assert got == expected
 
     assert m.update(docs, 2) is None  # replay: no-op
-    assert m._committed_version() == 2
+    assert m.store.pointer() == 2
 
 
 def test_dedup_index_compact_preserves_probes_and_truncates_chain(
@@ -391,7 +391,7 @@ def test_dedup_index_compact_preserves_probes_and_truncates_chain(
     m = DedupIndexMaintainer(spark, state, threshold=0.8)
     for bid in range(3):
         m.update(docs.where(F.col("doc_id") % 4 == bid), bid)
-    assert len(m._committed_dirs("bands")) == 3
+    assert len(m.store.committed_dirs("bands")) == 3
 
     probe_batch = docs.where(F.col("doc_id") % 4 == 3)
     # reference probe against the uncompacted chain, via a twin maintainer
@@ -400,8 +400,8 @@ def test_dedup_index_compact_preserves_probes_and_truncates_chain(
 
     covered = m.compact()
     assert covered == 2
-    assert len(m._committed_dirs("bands")) == 1
-    assert len(m._committed_dirs("shingles")) == 1
+    assert len(m.store.committed_dirs("bands")) == 1
+    assert len(m.store.committed_dirs("shingles")) == 1
     assert sorted(map(tuple, m.index().collect())) == index_rows_before
     # superseded delta dirs are gone
     import os
@@ -428,7 +428,7 @@ def test_dedup_index_compact_preserves_probes_and_truncates_chain(
     }
     assert got == expected
     # and the chain is again 1 baseline + 1 new delta
-    assert len(m._committed_dirs("bands")) == 2
+    assert len(m.store.committed_dirs("bands")) == 2
 
 
 def test_ann_index_maintainer_equals_one_shot_semantic_dedup(spark, sf_dir, tmp_path):
@@ -463,7 +463,7 @@ def test_ann_index_maintainer_equals_one_shot_semantic_dedup(spark, sf_dir, tmp_
     assert expected, "fixture produced no pairs — the differential is vacuous"
 
     assert m.update(emb, 2) is None  # replay: no-op
-    assert m._committed_version() == 2
+    assert m.store.pointer() == 2
 
 
 def test_ann_index_compact_preserves_state_and_truncates_chain(
@@ -488,12 +488,12 @@ def test_ann_index_compact_preserves_state_and_truncates_chain(
     for bid in range(3):
         m.update(emb.where(F.col("vec_id") % 4 == bid), bid)
         twin.update(emb.where(F.col("vec_id") % 4 == bid), bid)
-    assert len(m._committed_cell_dirs()) == 3
+    assert len(m.store.committed_dirs("cells")) == 3
     rows_before = sorted(map(tuple, m.cells().collect()))
 
     covered = m.compact()
     assert covered == 2
-    assert len(m._committed_cell_dirs()) == 1
+    assert len(m.store.committed_dirs("cells")) == 1
     assert sorted(map(tuple, m.cells().collect())) == rows_before
     assert m.compact() == 2  # replay: no-op
     batch_dirs = [
@@ -533,7 +533,7 @@ def test_ann_index_retrain_rebuilds_generation_and_stays_exact(
 
     covered = m.retrain(k=12)
     assert covered == 1
-    assert len(m._committed_cell_dirs()) == 1  # one baseline, no deltas
+    assert len(m.store.committed_dirs("cells")) == 1  # one baseline, no deltas
     assert m.centroids().count() == 12
     # the store survived the rebuild: same ids (nassign rows each), cells
     # drawn from the new 12-cell space
