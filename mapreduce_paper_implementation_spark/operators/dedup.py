@@ -364,8 +364,12 @@ def _ngram_cooccurrence(
     shared by k docs otherwise makes k^2 join rows). The cut slightly
     UNDER-counts intersections for pairs sharing hot shingles — acceptable
     for dedup (hot shingles carry no similarity signal), and mirrored
-    verbatim in the oracle SQL so correctness stays exactly gated. Set
-    max_df=None for the uncapped ground truth.
+    verbatim in the oracle SQL so correctness stays exactly gated.
+    max_df=None is the uncapped ground truth
+    (tests/test_operators.py:test_ngram_jaccard_hot_shingle_cap compares
+    the cut against it), so it deliberately has no cap: one shingle in
+    every doc then builds one corpus-sized posting list and df^2 pair rows.
+    Production callers keep DEFAULT_MAX_SHINGLE_DF.
 
     Returns (id_a, id_b, inter, n_a, n_b), id_a < id_b — the score
     projections live in the two public wrappers so a fix to this skeleton
@@ -653,33 +657,115 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup: all pairs with round(cos,6) >= threshold.
 
-    Exact O(n^2) formulation (ground truth / small-n path). The scale path
-    is operators/similarity.py's LSH bucketing — same verify expression,
-    candidates restricted to shared buckets.
-
-    Returns (id_a, id_b, cos_sim DOUBLE), id_a < id_b (decimal-exact score,
-    double final projection).
+    Exact O(n^2) formulation: the small-n ground truth that
+    embedding_neardup_pairs_blocked (the scale path) is tested against row
+    for row. Returns cosine_pairs_at's (id_a, id_b, cos_sim DOUBLE),
+    id_a < id_b, ordered.
     """
-    from mapreduce_paper_implementation_spark.functions.vectors import cosine, norm, to_double_vec
+    from mapreduce_paper_implementation_spark.functions.vectors import cosine, norm
 
     v = emb.select(
         F.col(id_col).alias("id"), to_double_vec(vec_col).alias("vec")
     ).withColumn("nrm", norm(F.col("vec")))
     a = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("nrm_a"))
     b = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), F.col("nrm").alias("nrm_b"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("vec_a"), F.col("vec_b"), F.col("nrm_a"), F.col("nrm_b")), 6)
-            .cast("decimal(9,6)")
-            .alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
-        .orderBy("id_a", "id_b")
+    pairs = a.join(b, F.col("id_a") < F.col("id_b")).select(
+        "id_a",
+        "id_b",
+        cosine(F.col("vec_a"), F.col("vec_b"), F.col("nrm_a"), F.col("nrm_b")).alias("cos"),
     )
+    return cosine_pairs_at(pairs, threshold).orderBy("id_a", "id_b")
+
+
+def cosine_pairs_at(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The Spark-side tail of every cosine pair operator, defined once:
+    (id_a, id_b, [cell,] cos DOUBLE) rows -> ROUND(cos, 6) as DECIMAL(9,6),
+    kept where that decimal >= threshold, projected as cos_sim DOUBLE.
+    Rounding and comparing on the decimal makes the cut engine-independent
+    (the DuckDB oracles replay it). With a `cell` column, a pair scored in
+    several cells collapses to ONE row with its lowest cell; MAX over the
+    rounded decimal keeps that deterministic even when two tiles' GEMMs
+    differ by an ulp. Unordered."""
+    cos_dec = F.round("cos", 6).cast("decimal(9,6)")
+    if "cell" in pairs.columns:
+        pairs = pairs.groupBy("id_a", "id_b").agg(
+            F.min("cell").alias("cell"), F.max(cos_dec).alias("cos_sim")
+        )
+    else:
+        pairs = pairs.select("id_a", "id_b", cos_dec.alias("cos_sim"))
+    return pairs.where(F.col("cos_sim") >= threshold).withColumn(
+        "cos_sim", F.col("cos_sim").cast("double")
+    )
+
+
+def gemm_cosine_pairs(tiles: DataFrame, keys: list[str], threshold: float) -> DataFrame:
+    """The blocked-GEMM cosine pair scorer, defined once; callers own only
+    the tile layout. `tiles` rows are (*keys, role, id, vec, mirror): each
+    `keys` group is one tile whose role-"L" rows meet its role-"R" rows in
+    ONE numpy GEMM inside applyInPandas (BLAS speed; the per-group Arrow
+    transfer is the only Python boundary). `mirror` on an R row says the
+    layout also meets that row from the other side, so of the two
+    orientations only id_L < id_R is kept; a non-mirrored R row keeps every
+    id_L != id_R. Each unordered pair is then emitted once per tile layout
+    cell it shares.
+
+    numpy only pre-filters, with a 1e-6 margin: above the max round-half-up
+    shift (5e-7), so a raw score just under threshold that ROUNDS to it is
+    still kept; over-inclusion is harmless because cosine_pairs_at makes the
+    exact cut Spark-side. With "cell" among `keys` the output carries the
+    tile's cell. Returns cosine_pairs_at's (id_a, id_b, [cell,] cos_sim),
+    id_a < id_b, unordered."""
+    import pandas as pd
+
+    with_cell = "cell" in keys
+    margin = 1e-6
+
+    def score(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
+
+        lrows = pdf[pdf["role"] == "L"]
+        rrows = pdf[pdf["role"] == "R"]
+        out: dict = {"id_a": [], "id_b": [], "cos": []}
+        if not (lrows.empty or rrows.empty):
+            ml = np.vstack(lrows["vec"].to_numpy())
+            mr = np.vstack(rrows["vec"].to_numpy())
+            ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
+            mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
+            g = ml @ mr.T
+            ii, jj = np.nonzero(g >= threshold - margin)
+            ia, ib = lrows["id"].to_numpy()[ii], rrows["id"].to_numpy()[jj]
+            keep = np.where(rrows["mirror"].to_numpy()[jj], ia < ib, ia != ib)
+            ia, ib = ia[keep], ib[keep]
+            out = {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib), "cos": g[ii, jj][keep]}
+        if with_cell:
+            out["cell"] = np.full(len(out["id_a"]), int(key[0]), dtype=np.int32)
+        return pd.DataFrame(out)
+
+    schema = "id_a long, id_b long, cos double" + (", cell int" if with_cell else "")
+    return cosine_pairs_at(tiles.groupBy(*keys).applyInPandas(score, schema), threshold)
+
+
+def _block_pair_tiles(v: DataFrame, n_blocks: int, keys: list[str]) -> DataFrame:
+    """gemm_cosine_pairs layout for an all-pairs join of `v` (id, vec
+    [, cell]): rows split into n_blocks blocks by id mod n_blocks, and each
+    unordered block pair (pa <= pb) — per cell, when keys hold "cell" — is
+    one tile with block pa on the L side and pb on the R side. Each
+    unordered pair lands in exactly one tile per shared cell; a pa == pb
+    tile meets its rows from both sides (mirror)."""
+    v = v.withColumn("blk", F.pmod(F.col("id"), F.lit(n_blocks)).cast("int"))
+    block_pairs = F.broadcast(
+        v.sparkSession.createDataFrame(
+            [(a, b) for a in range(n_blocks) for b in range(a, n_blocks)], "pa int, pb int"
+        )
+    )
+
+    def side(role: str, blk: str) -> DataFrame:
+        return v.join(block_pairs, F.col("blk") == F.col(blk)).select(
+            *keys, F.lit(role).alias("role"), "id", "vec",
+            (F.col("pa") == F.col("pb")).alias("mirror"),
+        )
+
+    return side("L", "pa").unionByName(side("R", "pb"))
 
 
 def derive_gemm_blocks(
@@ -731,16 +817,9 @@ def embedding_neardup_pairs_blocked(
     expression evaluation — and the per-group Arrow transfer is the only
     Python boundary.
 
-    Rounding contract: numpy only pre-filters with an epsilon margin; the
-    final round(.,6)/decimal cast and threshold compare are Spark-side,
-    identical to embedding_neardup_pairs.
-
-    Returns (id_a, id_b, cos_sim DOUBLE), id_a < id_b (decimal-exact score,
-    double final projection).
+    Returns (id_a, id_b, cos_sim DOUBLE), id_a < id_b, ordered — the
+    gemm_cosine_pairs scorer over _block_pair_tiles.
     """
-    import pandas as pd
-
-    spark = emb.sparkSession
     v = emb.select(F.col(id_col).alias("id"), to_double_vec(vec_col).alias("vec"))
     if n_blocks is None:
         stats = v.agg(
@@ -749,58 +828,8 @@ def embedding_neardup_pairs_blocked(
         n_blocks = derive_gemm_blocks(
             stats["n"] or 0, stats["dim"] or 0, tile_mem_bytes
         )
-    v = v.withColumn("blk", F.pmod(F.col("id"), F.lit(n_blocks)).cast("int"))
-    block_pairs = spark.createDataFrame(
-        [(a, b) for a in range(n_blocks) for b in range(n_blocks) if a <= b], "pa int, pb int"
-    )
-    left = v.join(F.broadcast(block_pairs), F.col("blk") == F.col("pa")).select(
-        "pa", "pb", F.lit("L").alias("role"), "id", "vec"
-    )
-    right = v.join(F.broadcast(block_pairs), F.col("blk") == F.col("pb")).select(
-        "pa", "pb", F.lit("R").alias("role"), "id", "vec"
-    )
-    both = left.unionByName(right)
-
-    # Pre-filter margin: must exceed the max round-half-up shift (5e-7) so a
-    # raw score just under threshold that ROUNDS to threshold is still kept;
-    # the exact round+compare is Spark-side. Over-inclusion is harmless.
-    margin = 1e-6
-
-    def score(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        pa, pb = int(key[0]), int(key[1])
-        lrows = pdf[pdf["role"] == "L"]
-        rrows = pdf[pdf["role"] == "R"]
-        if lrows.empty or rrows.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-        lids = lrows["id"].to_numpy()
-        rids = rrows["id"].to_numpy()
-        ml = np.vstack(lrows["vec"].to_numpy())
-        mr = np.vstack(rrows["vec"].to_numpy())
-        ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
-        mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
-        g = ml @ mr.T
-        ii, jj = np.nonzero(g >= threshold - margin)
-        ia, ib = lids[ii], rids[jj]
-        if pa == pb:
-            keep = ia < ib
-        else:
-            keep = np.ones(len(ia), dtype=bool)
-        ia, ib, cs = ia[keep], ib[keep], g[ii, jj][keep]
-        return pd.DataFrame(
-            {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib), "cos": cs}
-        )
-
-    scored = both.groupBy("pa", "pb").applyInPandas(score, "id_a long, id_b long, cos double")
-    return (
-        scored.select(
-            "id_a", "id_b", F.round("cos", 6).cast("decimal(9,6)").alias("cos_sim")
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
-        .orderBy("id_a", "id_b")
-    )
+    tiles = _block_pair_tiles(v, n_blocks, ["pa", "pb"])
+    return gemm_cosine_pairs(tiles, ["pa", "pb"], threshold).orderBy("id_a", "id_b")
 
 
 def assign_cells(
@@ -811,49 +840,25 @@ def assign_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, vec, cell) rows assigning each vector to its `nassign` nearest
-    centroids by cosine — the shared assignment step of the semantic-dedup
-    operator and the streaming ANN-index maintainer. Ranks ROUND(cosine, 6)
-    with ties to the lower cell (the ivf_topk contract), so every consumer
-    agrees on cell boundaries across calls — the determinism that makes a
-    STORED assignment delta joinable with tomorrow's batch."""
-    from mapreduce_paper_implementation_spark.functions.vectors import cosine, norm
-
-    # Round-14 shape (guide §2.4): the centroid frame collapses to ONE
-    # array-of-structs broadcast row and the top-nassign cells are a NARROW
-    # per-vector array_sort + slice + explode — the old crossJoin(k) +
-    # row_number window shuffled every vector k times per call. Ordering is
-    # the identical total order: array_sort ascends on (-c_cos, cell), which
-    # equals (c_cos DESC, cell ASC) for every non-NaN score incl. +/-0.0
-    # (Spark's double ordering negates cleanly; cosine is NaN-free for the
-    # nonzero vectors this operator is defined over).
-    carr = centroids.select(
-        "cell", "c_vec", norm(F.col("c_vec")).alias("c_nrm")
-    ).agg(F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents"))
+    centroids by cosine (operators/kmeans.py:nearest_centroids) — the
+    shared assignment step of the semantic-dedup operator, ivf_topk and
+    the streaming ANN-index maintainer. The rule is deterministic across
+    calls, which is what makes a STORED assignment delta joinable with
+    tomorrow's batch. One broadcast centroid-array row and a NARROW
+    per-vector array_sort + slice + explode: the vectors never shuffle."""
+    from mapreduce_paper_implementation_spark.functions.vectors import norm
+    from mapreduce_paper_implementation_spark.operators.kmeans import nearest_centroids
     from mapreduce_paper_implementation_spark.operators.parallel import (
         spread_partitions,
     )
 
+    carr = centroids.select(
+        "cell", "c_vec", norm(F.col("c_vec")).alias("c_nrm")
+    ).agg(F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents"))
     v = spread_partitions(
         emb.select(F.col(id_col).alias("id"), to_double_vec(vec_col).alias("vec"))
     ).withColumn("nrm", norm(F.col("vec")))
-    top = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.struct(
-                    (
-                        -F.round(
-                            cosine(F.col("vec"), c["c_vec"], F.col("nrm"), c["c_nrm"]),
-                            6,
-                        )
-                    ).alias("_nc"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        ),
-        1,
-        nassign,
-    )
+    top = F.slice(nearest_centroids(F.col("vec"), F.col("_cents"), nrm=F.col("nrm")), 1, nassign)
     return (
         v.crossJoin(F.broadcast(carr))
         .select(
@@ -894,9 +899,8 @@ def semantic_dedup_pairs(
     Centroids come from `centroids` ((cell, c_vec)) or are trained inline
     with operators/kmeans.py:kmeans_fit (2 Lloyd iterations, tol=0 so the
     iteration count is deterministic — the q29/q72 oracle unrolls exactly
-    that many). Assignment ranks ROUND(cosine, 6) with ties to the lower
-    cell, identical to operators/similarity.py:ivf_topk, so index build and
-    dedup agree on cell boundaries.
+    that many). Assignment is assign_cells, so index build and dedup agree
+    on cell boundaries.
 
     `nassign` is the boundary-recall knob (the nprobe analog): each vector
     joins its nassign nearest cells, and a pair is scored when the two
@@ -907,87 +911,17 @@ def semantic_dedup_pairs(
     data replication, the same trade IVF makes.
 
     Returns (id_a, id_b, cell INT, cos_sim DOUBLE), id_a < id_b, ordered;
-    a pair sharing several cells reports the lowest shared cell once.
-    Rounding contract matches the other similarity operators: numpy only
-    pre-filters with an epsilon margin; the decimal(9,6) round + threshold
-    compare happen Spark-side.
+    a pair sharing several cells reports the lowest shared cell once
+    (gemm_cosine_pairs over _block_pair_tiles keyed by cell).
     """
-    import pandas as pd
-
     from mapreduce_paper_implementation_spark.operators.kmeans import kmeans_fit
 
-    spark = emb.sparkSession
     if centroids is None:
         centroids = kmeans_fit(emb, k=n_cells, max_iter=2, tol=0.0)
-    assigned = assign_cells(
-        emb, centroids, nassign=nassign, id_col=id_col, vec_col=vec_col
-    ).withColumn("blk", F.pmod(F.col("id"), F.lit(n_blocks)).cast("int"))
-
-    block_pairs = spark.createDataFrame(
-        [(a, b) for a in range(n_blocks) for b in range(n_blocks) if a <= b],
-        "pa int, pb int",
-    )
-    left = assigned.join(F.broadcast(block_pairs), F.col("blk") == F.col("pa")).select(
-        "cell", "pa", "pb", F.lit("L").alias("role"), "id", "vec"
-    )
-    right = assigned.join(F.broadcast(block_pairs), F.col("blk") == F.col("pb")).select(
-        "cell", "pa", "pb", F.lit("R").alias("role"), "id", "vec"
-    )
-    both = left.unionByName(right)
-
-    margin = 1e-6  # exceeds the max round-half-up shift; see blocked GEMM
-
-    def score(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        cell, pa, pb = int(key[0]), int(key[1]), int(key[2])
-        lrows = pdf[pdf["role"] == "L"]
-        rrows = pdf[pdf["role"] == "R"]
-        if lrows.empty or rrows.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cell": [], "cos": []})
-        lids = lrows["id"].to_numpy()
-        rids = rrows["id"].to_numpy()
-        ml = np.vstack(lrows["vec"].to_numpy())
-        mr = np.vstack(rrows["vec"].to_numpy())
-        ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
-        mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
-        g = ml @ mr.T
-        ii, jj = np.nonzero(g >= threshold - margin)
-        ia, ib = lids[ii], rids[jj]
-        keep = ia < ib if pa == pb else np.ones(len(ia), dtype=bool)
-        ia, ib, cs = ia[keep], ib[keep], g[ii, jj][keep]
-        return pd.DataFrame(
-            {
-                "id_a": np.minimum(ia, ib),
-                "id_b": np.maximum(ia, ib),
-                "cell": np.full(len(ia), cell, dtype=np.int32),
-                "cos": cs,
-            }
-        )
-
-    scored_pairs = both.groupBy("cell", "pa", "pb").applyInPandas(
-        score, "id_a long, id_b long, cell int, cos double"
-    )
-    # A pair sharing several of its nassign cells is scored once per shared
-    # cell (identical vectors, identical rounded score): collapse to one row
-    # reporting the lowest shared cell. MAX over the rounded decimal keeps
-    # the aggregate deterministic even in the 1-ulp tile-order corner.
-    return (
-        scored_pairs.select(
-            "id_a",
-            "id_b",
-            "cell",
-            F.round("cos", 6).cast("decimal(9,6)").alias("cos_dec"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.min("cell").alias("cell"),
-            F.max("cos_dec").alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .withColumn("cos_sim", F.col("cos_sim").cast("double"))
-        .orderBy("id_a", "id_b")
-    )
+    assigned = assign_cells(emb, centroids, nassign=nassign, id_col=id_col, vec_col=vec_col)
+    keys = ["cell", "pa", "pb"]
+    tiles = _block_pair_tiles(assigned, n_blocks, keys)
+    return gemm_cosine_pairs(tiles, keys, threshold).orderBy("id_a", "id_b")
 
 
 def survivor_stats(
@@ -1136,8 +1070,8 @@ def semantic_decontaminate(
     n-gram one.
 
     Shares the ENTIRE trained index with q29/q72: kmeans_fit centroids
-    (2 Lloyd rounds, lowest-id seeding, tol=0) + assign_cells ranking
-    ROUND(cos, 6) ties-to-lower-cell, with `nassign` cells per vector as
+    (2 Lloyd rounds, lowest-id seeding, tol=0) + assign_cells, with
+    `nassign` cells per vector as
     the boundary-recall knob — so the oracle replays the identical
     _ivf_build_ctes and cell boundaries cannot drift between the three
     semantic queries.

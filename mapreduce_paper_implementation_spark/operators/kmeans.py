@@ -26,12 +26,12 @@ iterations re-reading a materialized frame like before. Classic MapReduce
 workload shape (map = assign, reduce = re-center), expressed
 declaratively.
 
-Exactness contract (unchanged): assignment ranks ROUND(d2, 6) with ties
-to the lower cell id; means are the identical posexplode/avg aggregation;
-doubles cross the py4j boundary losslessly (IEEE-754 both sides), so the
-returned centroids are bit-identical to the previous formulation (pinned
-by the q29/q118 oracles and tests/test_properties.py's pure-Python Lloyd
-replay).
+Exactness: assignment is nearest_centroids' squared-L2 rule (defined
+below, shared by every vector operator); means are one posexplode/avg
+aggregation (_mean_rows, shared with pq_train); doubles cross the py4j
+boundary losslessly (IEEE-754 both sides), so the returned centroids are
+pinned bit-for-bit by the q29/q118 oracles and tests/test_properties.py's
+pure-Python Lloyd replay.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
-from mapreduce_paper_implementation_spark.functions.vectors import to_double_vec
+from mapreduce_paper_implementation_spark.functions.vectors import cosine, to_double_vec
 
 CENTROID_SCHEMA = StructType(
     [
@@ -60,32 +60,46 @@ def _sq_dist(a, b):
     )
 
 
-def _nearest_cell(vec_col, cents_arr):
-    """Nearest-centroid cell over a bound array<struct<cell,c_vec>> column:
-    ROUND(d2, 6) ascending, ties to the lower cell id — the exact total
-    order the old explode+row_number formulation ranked by (struct sort is
-    lexicographic on (d2, cell)). A narrow expression: no explode, no
-    window, no shuffle."""
+def nearest_centroids(vec, cents, key: str = "cell", nrm=None):
+    """The nearest-centroid rule every vector operator ranks by, defined
+    once: `cents` is an array<struct<key, c_vec[, c_nrm]>> column (the
+    centroids collected into ONE broadcast row: k literal structs inline
+    would bloat the expression tree and re-pay codegen per call — measured
+    slower), and the result is that array mapped to struct<score, key> and
+    sorted ascending, per vector:
+
+    - squared L2 (nrm=None): score = ROUND(d2, 6);
+    - cosine (nrm = the vector's norm; structs carry c_nrm):
+      score = -ROUND(cos, 6), so ascending is cos DESC.
+
+    Scores are rounded BEFORE ranking: the oracles replay these ranks in
+    DuckDB, and raw-double order can flip on cross-engine ulp differences
+    (different summation orders); equal rounded scores break to the lower
+    key, because struct order is lexicographic. Negation is exact, so the
+    cosine order equals (cos DESC, key ASC) for every non-NaN score.
+    `[0][key]` is the nearest centroid, `[0]["score"]` its score, and a
+    slice(1, n) the n nearest. A narrow expression: no explode, no window,
+    no shuffle of the vectors."""
+
+    def score(c):
+        if nrm is None:
+            return F.round(_sq_dist(vec, c["c_vec"]), 6)
+        return -F.round(cosine(vec, c["c_vec"], nrm, c["c_nrm"]), 6)
+
     return F.array_sort(
-        F.transform(
-            cents_arr,
-            lambda c: F.struct(
-                F.round(_sq_dist(vec_col, c["c_vec"]), 6).alias("d2"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )[0]["cell"]
+        F.transform(cents, lambda c: F.struct(score(c).alias("score"), c[key].alias(key)))
+    )
 
 
-def _mean_rows(assigned: DataFrame) -> list:
-    """One Spark job: element-wise mean per cell — posexplode ->
-    (cell, pos) partial/final average -> ordered re-assembly, collected as
-    the <= k bounded centroid rows (never data)."""
+def _mean_rows(assigned: DataFrame, keys: tuple[str, ...] = ("cell",)) -> list:
+    """One Spark job: element-wise mean of `vec` per `keys` group —
+    posexplode -> (keys, pos) partial/final average -> ordered re-assembly,
+    collected as the bounded centroid rows (never data)."""
     return (
-        assigned.select("cell", F.posexplode("vec").alias("pos", "x"))
-        .groupBy("cell", "pos")
+        assigned.select(*keys, F.posexplode("vec").alias("pos", "x"))
+        .groupBy(*keys, "pos")
         .agg(F.avg("x").alias("m"))
-        .groupBy("cell")
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
@@ -135,15 +149,7 @@ def kmeans_fit(
     ]
 
     for _ in range(max_iter):
-        # centroids ride as ONE broadcast array row (a local-relation agg —
-        # k literal structs inline would bloat the expression tree and
-        # re-pay codegen per iteration; measured slower)
-        carr = spark.createDataFrame(cents, CENTROID_SCHEMA).agg(
-            F.collect_list(F.struct("cell", "c_vec")).alias("_cents")
-        )
-        assigned = v.crossJoin(F.broadcast(carr)).select(
-            _nearest_cell(F.col("vec"), F.col("_cents")).alias("cell"), "vec"
-        )
+        assigned = _assign(v, spark.createDataFrame(cents, CENTROID_SCHEMA))
         means = {r["cell"]: list(r["n_vec"]) for r in _mean_rows(assigned)}
         # A cell that lost every member produces no mean row; carry the old
         # vector forward — the cell keeps existing and can re-acquire
@@ -161,20 +167,9 @@ def kmeans_fit(
 
 
 def _assign(v: DataFrame, cents: DataFrame) -> DataFrame:
-    # Rank on ROUND(d2, 6), not raw doubles: the q29 oracle replays these
-    # iterations in DuckDB, and raw-double ordering can flip on cross-engine
-    # ulp differences (different summation forms/orders). Same contract as
-    # similarity.py's ROUND(cos, 6) ranks; sub-1e-6 ties break to the lower
-    # cell id deterministically in both engines.
-    #
-    # Round-14 shape: the centroid frame collapses to ONE array-of-structs
-    # row (collect_list agg) broadcast onto the vectors, and the argmin is
-    # a narrow array_sort — the old crossJoin(k) + row_number window
-    # shuffled every vector k times per call (guide §2.4).
     carr = cents.agg(F.collect_list(F.struct("cell", "c_vec")).alias("_cents"))
-    return (
-        v.crossJoin(F.broadcast(carr))
-        .select("id", "vec", _nearest_cell(F.col("vec"), F.col("_cents")).alias("cell"))
+    return v.crossJoin(F.broadcast(carr)).select(
+        "id", "vec", nearest_centroids(F.col("vec"), F.col("_cents"))[0]["cell"].alias("cell")
     )
 
 

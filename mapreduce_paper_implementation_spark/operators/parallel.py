@@ -10,18 +10,17 @@ kmeans_fit's per-iteration argmin+re-center job ran single-threaded on a
 32-core box.
 
 `spread_partitions` round-robin repartitions ONLY when the input has
-fewer partitions than the session's parallelism — and only inside a size
-band where the fan-out can pay for itself:
-
-- below MIN_SPREAD_BYTES (plan-stats estimate) the frame is returned
-  untouched: a few KB per task cannot amortize task launch + shuffle
-  write, and the streaming maintainers push small per-batch frames
-  through the same operators (round-15; the round-14 partition-count-only
-  guard fanned every tiny frame out — VERDICT r14 #1);
-- above target * maxPartitionBytes the scan is necessarily already
-  parallel, so the guard skips without even building the RDD;
-- in between, the actual plan partitioning decides (one physical-plan
-  build, ~50 ms — only ever paid at the head of a heavy pipeline).
+fewer partitions than the session's parallelism, and never below
+MIN_SPREAD_BYTES (plan-stats estimate): a few KB per task cannot amortize
+task launch + shuffle write, and the streaming maintainers push small
+per-batch frames through the same operators (round-15; the round-14
+partition-count-only guard fanned every tiny frame out — VERDICT r14 #1).
+Above the floor the actual plan partitioning decides (one physical-plan
+build, ~50 ms — only ever paid at the head of a heavy pipeline). A large
+estimate is not trusted as proof of a parallel scan: a frame built from an
+RDD reports Long.MaxValue and a join reports the product of its inputs
+(318,956,651,838 bytes for two 0.8 MB single-partition scans), so an upper
+size gate silently kept such heads on one core.
 
 Round-15 A/B (interleaved pairs, sf0.1): the guard stays ONLY at the
 vector heads. The round-14 doc-text spread sites (_shingle_frame,
@@ -54,23 +53,13 @@ def spread_partitions(df: DataFrame) -> DataFrame:
     enough for the fan-out to pay; otherwise return it untouched. Call at
     the head of CPU-heavy vector map pipelines that are about to be
     materialized or consumed by interpreted HOF work."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # stats unavailable — fall through to the plan probe
         est_bytes = None
-    if est_bytes is not None:
-        if est_bytes < MIN_SPREAD_BYTES:
-            return df
-        # session.py sets maxPartitionBytes as a plain byte count; a
-        # suffixed deployment value just falls back to the 128 MB default
-        # (the gate only needs the order of magnitude).
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        max_part = int(raw) if raw.isdigit() else 128 * 1024 * 1024
-        if est_bytes >= target * max_part:
-            return df
+    if est_bytes is not None and est_bytes < MIN_SPREAD_BYTES:
+        return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -13,6 +13,9 @@ Scale posture (100 TB / billions of vectors):
   offline build step in a real deployment.
 - All dot products are JVM higher-order functions; hyperplanes/centroids are
   broadcast literals/DataFrames. No Python per-row.
+
+Every search ends in cosine_topk (the exact rounded-cosine rank) and every
+cell or code assignment is operators/kmeans.py:nearest_centroids.
 """
 
 from __future__ import annotations
@@ -23,12 +26,50 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.functions.vectors import cosine, dot, norm, to_double_vec
+from mapreduce_paper_implementation_spark.operators.kmeans import (
+    _mean_rows,
+    nearest_centroids,
+)
+from mapreduce_paper_implementation_spark.operators.parallel import spread_partitions
 
 
 def _prep(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return emb.select(
         F.col(id_col).alias("id"), to_double_vec(vec_col).alias("vec")
     ).withColumn("nrm", norm(F.col("vec")))
+
+
+def _probe_side(probes: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return _prep(probes, id_col, vec_col).select(
+        F.col("id").alias("probe_id"), F.col("vec").alias("p_vec"), F.col("nrm").alias("p_nrm")
+    )
+
+
+def cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The cosine top-k rule every similarity search ends in, defined once.
+    `pairs` holds candidate rows (probe_id, p_vec, p_nrm, id, vec, nrm);
+    each scores ROUND(cos, 6) as DECIMAL(9,6), and ranks per probe by
+    (cos DESC, neighbor_id ASC) on that exact decimal, so no cross-engine
+    ulp difference can reorder neighbours. Returns (probe_id, neighbor_id,
+    cos_sim DOUBLE, rnk BIGINT) for rnk <= k, ordered by (probe_id, rnk)."""
+    scored = pairs.select(
+        "probe_id",
+        F.col("id").alias("neighbor_id"),
+        F.round(cosine(F.col("p_vec"), F.col("vec"), F.col("p_nrm"), F.col("nrm")), 6)
+        .cast("decimal(9,6)")
+        .alias("cos_sim"),
+    )
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.select(
+            "probe_id",
+            "neighbor_id",
+            F.col("cos_sim").cast("double").alias("cos_sim"),
+            F.row_number().over(w).cast("long").alias("rnk"),
+        )
+        .where(F.col("rnk") <= k)
+        .orderBy("probe_id", "rnk")
+    )
 
 
 def brute_force_topk(
@@ -39,34 +80,10 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast probes, scan candidates once.
-    Returns (probe_id, neighbor_id, cos_sim DECIMAL(9,6), rnk)."""
-    from mapreduce_paper_implementation_spark.operators.parallel import (
-        spread_partitions,
-    )
-
+    Returns cosine_topk's (probe_id, neighbor_id, cos_sim DOUBLE, rnk)."""
     cand = spread_partitions(_prep(emb, id_col, vec_col))
-    p = _prep(probes, id_col, vec_col).select(
-        F.col("id").alias("probe_id"), F.col("vec").alias("p_vec"), F.col("nrm").alias("p_nrm")
-    )
-    pairs = cand.join(F.broadcast(p), F.col("id") != F.col("probe_id")).select(
-        "probe_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(cosine(F.col("p_vec"), F.col("vec"), F.col("p_nrm"), F.col("nrm")), 6)
-        .cast("decimal(9,6)")
-        .alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    # Rank on the exact decimal; project DOUBLE (output dtype contract).
-    return (
-        pairs.select(
-            "probe_id",
-            "neighbor_id",
-            F.col("cos_sim").cast("double").alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rnk"),
-        )
-        .where(F.col("rnk") <= k)
-        .orderBy("probe_id", "rnk")
-    )
+    p = _probe_side(probes, id_col, vec_col)
+    return cosine_topk(cand.join(F.broadcast(p), F.col("id") != F.col("probe_id")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -100,8 +117,8 @@ def lsh_topk(
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates restricted to LSH buckets within
-    `multiprobe_hamming` of the probe's bucket. Returns the same schema as
-    brute_force_topk; recall is tested against it.
+    `multiprobe_hamming` of the probe's bucket, ranked by cosine_topk; recall
+    is tested against brute_force_topk.
 
     Parameter note: random-hyperplane LSH trades recall for scan fraction by
     collision probability (1 - angle/pi)^planes. On weakly-clustered data
@@ -120,23 +137,11 @@ def lsh_topk(
             "would be a driver-side job per call)"
         )
     planes = _hyperplanes(dim, n_planes, seed)
-
-    from mapreduce_paper_implementation_spark.operators.parallel import (
-        spread_partitions,
-    )
-
     cand = spread_partitions(_prep(emb, id_col, vec_col)).withColumn(
         "bucket", lsh_bucket_expr("vec", planes)
     )
-    p = (
-        _prep(probes, id_col, vec_col)
-        .withColumn("bucket", lsh_bucket_expr("vec", planes))
-        .select(
-            F.col("id").alias("probe_id"),
-            F.col("vec").alias("p_vec"),
-            F.col("nrm").alias("p_nrm"),
-            F.col("bucket").alias("p_bucket"),
-        )
+    p = _probe_side(probes, id_col, vec_col).withColumn(
+        "p_bucket", lsh_bucket_expr("p_vec", planes)
     )
     pairs = cand.join(
         F.broadcast(p),
@@ -145,25 +150,8 @@ def lsh_topk(
             F.bit_count(F.col("bucket").bitwiseXOR(F.col("p_bucket")))
             <= multiprobe_hamming
         ),
-    ).select(
-        "probe_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(cosine(F.col("p_vec"), F.col("vec"), F.col("p_nrm"), F.col("nrm")), 6)
-        .cast("decimal(9,6)")
-        .alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    # Rank on the exact decimal; project DOUBLE (output dtype contract).
-    return (
-        pairs.select(
-            "probe_id",
-            "neighbor_id",
-            F.col("cos_sim").cast("double").alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rnk"),
-        )
-        .where(F.col("rnk") <= k)
-        .orderBy("probe_id", "rnk")
-    )
+    return cosine_topk(pairs, k)
 
 
 def ivf_topk(
@@ -179,90 +167,29 @@ def ivf_topk(
     """IVF-style approximate top-k. Coarse centroids come from `centroids`
     ((cell, c_vec array<double>) — e.g. operators/kmeans.py:kmeans_fit, the
     offline index-build step) or default to the deterministic n_cells
-    lowest-id vectors: assign every vector to its nearest centroid by
-    cosine, probes scan their `nprobe` nearest cells."""
-    from mapreduce_paper_implementation_spark.operators.parallel import (
-        spread_partitions,
+    lowest-id vectors. Every vector is assigned to its nearest cell and
+    every probe to its `nprobe` nearest (operators/dedup.py:assign_cells);
+    a probe scores only the candidates in its cells. A candidate holds one
+    cell and a probe's cells are distinct, so each pair meets once."""
+    from mapreduce_paper_implementation_spark.operators.dedup import assign_cells
+
+    if centroids is None:
+        centroids = emb.select(
+            F.col(id_col).alias("cell"), to_double_vec(vec_col).alias("c_vec")
+        ).orderBy("cell").limit(n_cells)
+    cand = assign_cells(emb, centroids, 1, id_col, vec_col).withColumn(
+        "nrm", norm(F.col("vec"))
     )
-
-    v = spread_partitions(_prep(emb, id_col, vec_col))
-    if centroids is not None:
-        cents = centroids.select(
-            "cell", F.col("c_vec"), norm(F.col("c_vec")).alias("c_nrm")
-        )
-    else:
-        cents = (
-            v.orderBy("id")
-            .limit(n_cells)
-            .select(F.col("id").alias("cell"), F.col("vec").alias("c_vec"), F.col("nrm").alias("c_nrm"))
-        )
-
-    carr = cents.agg(F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents"))
-
-    def assign(df: DataFrame, n_keep: int, id_alias: str) -> DataFrame:
-        # Cell assignment ranks by ROUND(cos, 6): raw-double ordering could
-        # flip on cross-engine ulp differences; rounded scores tie-break by
-        # cell id deterministically (same contract as the output ranks).
-        # Round-14 shape (guide §2.4): ONE broadcast array row + a narrow
-        # array_sort on (-c_cos, cell) == (c_cos DESC, cell ASC) — the old
-        # crossJoin(k) + row_number window shuffled every vector k times.
-        top = F.slice(
-            F.array_sort(
-                F.transform(
-                    F.col("_cents"),
-                    lambda c: F.struct(
-                        (
-                            -F.round(
-                                cosine(
-                                    F.col("vec"), c["c_vec"], F.col("nrm"), c["c_nrm"]
-                                ),
-                                6,
-                            )
-                        ).alias("_nc"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            n_keep,
-        )
-        return (
-            df.crossJoin(F.broadcast(carr))
-            .select(
-                F.col("id").alias(id_alias),
-                F.explode(F.transform(top, lambda t: t["cell"])).alias("cell"),
-            )
-        )
-
-    cand_cells = assign(v, 1, "id")
-    cand = v.join(cand_cells, "id")
-    p = _prep(probes, id_col, vec_col)
-    probe_cells = assign(p, nprobe, "probe_id").withColumnRenamed("cell", "p_cell")
-    pv = p.select(
-        F.col("id").alias("probe_id"), F.col("vec").alias("p_vec"), F.col("nrm").alias("p_nrm")
-    ).join(probe_cells, "probe_id")
-
+    pv = assign_cells(probes, centroids, nprobe, id_col, vec_col).select(
+        F.col("id").alias("probe_id"),
+        F.col("vec").alias("p_vec"),
+        norm(F.col("vec")).alias("p_nrm"),
+        F.col("cell").alias("p_cell"),
+    )
     pairs = cand.join(
         F.broadcast(pv), (F.col("cell") == F.col("p_cell")) & (F.col("id") != F.col("probe_id"))
-    ).select(
-        "probe_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(cosine(F.col("p_vec"), F.col("vec"), F.col("p_nrm"), F.col("nrm")), 6)
-        .cast("decimal(9,6)")
-        .alias("cos_sim"),
-    ).distinct()
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    # Rank on the exact decimal; project DOUBLE (output dtype contract).
-    return (
-        pairs.select(
-            "probe_id",
-            "neighbor_id",
-            F.col("cos_sim").cast("double").alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rnk"),
-        )
-        .where(F.col("rnk") <= k)
-        .orderBy("probe_id", "rnk")
     )
+    return cosine_topk(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -278,9 +205,8 @@ def ivf_topk(
 # codebooks, and a candidate's approximate cosine is the sum of m table
 # lookups — the candidate VECTORS are never touched at query time.
 #
-# Determinism contract (the q29 discipline, one level deeper): every
-# assignment ranks ROUND(metric, 6) with ties to the lower code; each LUT
-# partial is ROUND(dot, 6) cast DECIMAL(12,6) BEFORE the sum, so the ADC
+# Determinism: every assignment is kmeans.nearest_centroids' squared-L2
+# rule over one subspace's codes; each LUT partial is ROUND(dot, 6) cast DECIMAL(12,6) BEFORE the sum, so the ADC
 # score is an exact decimal sum — associative, order-free, identical in
 # DuckDB's unrolled replay (q118's oracle) regardless of join order.
 # ---------------------------------------------------------------------------
@@ -321,10 +247,6 @@ def pq_train(
     assert dim % m == 0, "dim must split evenly into m subspaces"
     spark = emb.sparkSession
     sd = dim // m
-    from mapreduce_paper_implementation_spark.operators.parallel import (
-        spread_partitions,
-    )
-
     nv = spread_partitions(
         emb.select(
             F.col(id_col).alias("vec_id"),
@@ -347,19 +269,15 @@ def pq_train(
     }
     cb_schema = "sub_j int, code int, c_vec array<double>"
 
-    def _cb_arr():
-        rows = [(j, c, v) for (j, c), v in sorted(cb.items())]
-        return spark.createDataFrame(rows, cb_schema).agg(
-            F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb")
-        )
-
     for _ in range(2):  # max_iter=2, tol=0.0 — the exact unrollable build
-        # ONE job: explode each vector into its m (sub_j, code, sub) slices
-        # map-side (narrow), then the (sub_j, code, pos) partial/final
-        # average — the same avg over the same groups the per-subspace
-        # loops computed.
+        # ONE job: explode each vector into its m (sub_j, sub) slices
+        # map-side (narrow), rank each slice against its subspace's codes,
+        # then kmeans' (keys, pos) partial/final average per (sub_j, code).
+        cb_row = spark.createDataFrame(
+            [(j, c, v) for (j, c), v in sorted(cb.items())], cb_schema
+        ).agg(F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb"))
         sliced = (
-            nv.crossJoin(F.broadcast(_cb_arr()))
+            nv.crossJoin(F.broadcast(cb_row))
             .select(
                 F.explode(
                     F.transform(
@@ -374,50 +292,21 @@ def pq_train(
             )
             .select(
                 F.col("a.sub_j").alias("sub_j"),
-                F.col("a.sub").alias("sub"),
-                F.array_sort(
-                    F.transform(
-                        F.filter(
-                            F.col("_cb"), lambda c: c["sub_j"] == F.col("a.sub_j")
-                        ),
-                        lambda c: F.struct(
-                            F.round(_pq_sq_dist(F.col("a.sub"), c["c_vec"]), 6).alias(
-                                "d2"
-                            ),
-                            c["code"].alias("code"),
-                        ),
-                    )
+                F.col("a.sub").alias("vec"),
+                nearest_centroids(
+                    F.col("a.sub"),
+                    F.filter(F.col("_cb"), lambda c: c["sub_j"] == F.col("a.sub_j")),
+                    key="code",
                 )[0]["code"].alias("code"),
             )
         )
-        mean_rows = (
-            sliced.select("sub_j", "code", F.posexplode("sub").alias("pos", "x"))
-            .groupBy("sub_j", "code", "pos")
-            .agg(F.avg("x").alias("mm"))
-            .groupBy("sub_j", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mm"))),
-                    lambda s: s["mm"],
-                ).alias("n_vec")
-            )
-            .collect()
-        )
-        means = {(r["sub_j"], r["code"]): list(r["n_vec"]) for r in mean_rows}
+        means = {(r["sub_j"], r["code"]): list(r["n_vec"]) for r in _mean_rows(sliced, ("sub_j", "code"))}
         # empty-cell carry-forward — kmeans_fit's left-join/coalesce rule
         cb = {key: means.get(key, old) for key, old in cb.items()}
 
     return spark.createDataFrame(
         [(j, c, v) for (j, c), v in sorted(cb.items())], cb_schema
     )
-
-
-def _pq_sq_dist(a, b):
-    # kmeans._sq_dist, re-exported here so pq_train's fused round uses the
-    # byte-identical fold expression the per-subspace kmeans_fit runs used
-    from mapreduce_paper_implementation_spark.operators.kmeans import _sq_dist
-
-    return _sq_dist(a, b)
 
 
 def pq_encode(
@@ -429,8 +318,7 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, sub_j, code): each normalized subvector assigned to its
-    nearest codebook centroid by ROUND(squared-L2, 6), ties to the lower
-    code — kmeans._assign's contract, so encode and training agree.
+    nearest codebook centroid — pq_codes_arr's codes, one row per subspace.
 
     Round-14 shape: ONE narrow pass over the vectors computes all m codes
     per row (pq_codes_arr) and posexplodes them — the previous formulation
@@ -453,20 +341,12 @@ def pq_codes_arr(
 ) -> DataFrame:
     """(vec_id, codes array<int>) with codes[j+1] = the sub_j=j PQ code —
     the array form ivf_pq_topk's ADC stage consumes directly (one narrow
-    map; the codebooks collapse to ONE broadcast array row). Per-subspace
-    arithmetic is identical to pq_encode's row contract: nearest code by
-    ROUND(squared-L2, 6) over the j-th slice, ties to the lower code."""
-    from mapreduce_paper_implementation_spark.operators.kmeans import _sq_dist
-
+    map; the codebooks collapse to ONE broadcast array row). The j-th code
+    is the nearest_centroids squared-L2 winner over the j-th slice among
+    subspace j's codes — the rule pq_train trains with."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
     sd = dim // m
-    from mapreduce_paper_implementation_spark.operators.parallel import (
-        spread_partitions,
-    )
-
-    cb = codebooks.agg(
-        F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb")
-    )
+    cb = codebooks.agg(F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb"))
     nv = spread_partitions(
         emb.select(
             F.col(id_col).alias("vec_id"),
@@ -475,16 +355,10 @@ def pq_codes_arr(
     )
     codes = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.array_sort(
-            F.transform(
-                F.filter(F.col("_cb"), lambda c: c["sub_j"] == j),
-                lambda c: F.struct(
-                    F.round(
-                        _sq_dist(F.slice(F.col("nvec"), j * sd + 1, sd), c["c_vec"]), 6
-                    ).alias("d2"),
-                    c["code"].alias("code"),
-                ),
-            )
+        lambda j: nearest_centroids(
+            F.slice(F.col("nvec"), j * sd + 1, sd),
+            F.filter(F.col("_cb"), lambda c: c["sub_j"] == j),
+            key="code",
         )[0]["code"],
     )
     return nv.crossJoin(F.broadcast(cb)).select("vec_id", codes.alias("codes"))
@@ -511,8 +385,8 @@ def ivf_pq_topk(
     two-stage retrieve+refine): ADC ranks every candidate in the probed
     cells from codes alone, the top-`refine` per probe survive, and only
     those touch their float vectors for an exact-cosine re-rank. Returns
-    (probe_id, neighbor_id, cos_sim DOUBLE, rnk) — cos_sim is the EXACT
-    rounded cosine of the refined winners (q16/q29 semantics).
+    cosine_topk's ranking of the refined winners by their EXACT rounded
+    cosine.
 
     Why refinement is load-bearing at scale (measured, BENCH_SCALE): the
     per-candidate ADC error is constant, but the MAX error across the
@@ -599,9 +473,7 @@ def ivf_pq_topk(
     # m x |pairs| join rows and a (probe, neighbor) re-aggregation; here
     # the ADC score is a narrow m-lookup decimal fold after ONE join of
     # the pair list with the candidate code arrays (guide §2.3/§2.4).
-    cbw = codebooks.agg(
-        F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb")
-    )
+    cbw = codebooks.agg(F.collect_list(F.struct("sub_j", "code", "c_vec")).alias("_cb"))
     np_ = probes.select(
         F.col(id_col).alias("probe_id"), normalized(to_double_vec(vec_col)).alias("nvec")
     )
@@ -648,38 +520,12 @@ def ivf_pq_topk(
     shortlist = (
         adc.withColumn("arnk", F.row_number().over(w_adc))
         .where(F.col("arnk") <= refine)
-        .select("probe_id", "neighbor_id")
+        .select("probe_id", F.col("neighbor_id").alias("id"))
     )
     # exact re-rank of the shortlist: probes x refine rows broadcast against
     # the float vectors (point lookups at serving scale — the only stage
     # that ever touches candidate floats)
-    cand_v = _prep(emb, id_col, vec_col).select(
-        F.col("id").alias("neighbor_id"), F.col("vec").alias("c_vec"), F.col("nrm").alias("c_nrm")
+    exact = _prep(emb, id_col, vec_col).join(F.broadcast(shortlist), "id").join(
+        F.broadcast(_probe_side(probes, id_col, vec_col)), "probe_id"
     )
-    probe_v = _prep(probes, id_col, vec_col).select(
-        F.col("id").alias("probe_id"), F.col("vec").alias("p_vec"), F.col("nrm").alias("p_nrm")
-    )
-    exact = (
-        cand_v.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(probe_v), "probe_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(
-                cosine(F.col("p_vec"), F.col("c_vec"), F.col("p_nrm"), F.col("c_nrm")), 6
-            )
-            .cast("decimal(9,6)")
-            .alias("cos_dec"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_dec"), F.asc("neighbor_id"))
-    return (
-        exact.select(
-            "probe_id",
-            "neighbor_id",
-            F.col("cos_dec").cast("double").alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rnk"),
-        )
-        .where(F.col("rnk") <= k)
-        .orderBy("probe_id", "rnk")
-    )
+    return cosine_topk(exact, k)

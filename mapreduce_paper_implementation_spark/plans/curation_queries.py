@@ -459,11 +459,13 @@ ORDER BY cell, rk
 @query("q83_embedding_outliers", _q83_oracle())
 def q83_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_paper_implementation_spark.functions.vectors import (
-        dot,
         norm,
         to_double_vec,
     )
-    from mapreduce_paper_implementation_spark.operators.kmeans import kmeans_fit
+    from mapreduce_paper_implementation_spark.operators.kmeans import (
+        kmeans_fit,
+        nearest_centroids,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=16, max_iter=2, tol=0.0).withColumn(
@@ -472,33 +474,17 @@ def q83_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         F.col("vec_id"), to_double_vec("embedding").alias("vec")
     ).withColumn("nrm", norm(F.col("vec")))
-    # same cell assignment as the q29/q72 index: best cosine, tie -> lower
-    # cell — computed as a NARROW per-vector argmax over the broadcast
-    # centroid array (round-14, guide §2.4: the old crossJoin(16) +
-    # row_number window shuffled every vector 16 times; the struct sort on
-    # (-cos_c, cell) is the identical (cos_c DESC, cell ASC) total order,
-    # negation exact on the decimal-backed doubles).
-    carr = cents.agg(
-        F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents")
-    )
-    best = F.array_sort(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                (
-                    -F.round(
-                        dot(F.col("vec"), c["c_vec"]) / (F.col("nrm") * c["c_nrm"]), 6
-                    )
-                    .cast("decimal(9,6)")
-                ).alias("_nc"),
-                c["cell"].alias("cell"),
-            ),
-        )
+    # the q29/q72 cell assignment (nearest_centroids by cosine), keeping
+    # the winner's rounded score: a NARROW per-vector argmax over the
+    # broadcast centroid array — the vectors never shuffle.
+    best = nearest_centroids(
+        F.col("vec"), F.col("_cents"), nrm=F.col("nrm")
     )[0]
+    carr = cents.agg(F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents"))
     assigned = v.crossJoin(F.broadcast(carr)).select(
         "vec_id",
         best["cell"].alias("cell"),
-        (-best["_nc"]).cast("decimal(9,6)").alias("cos_c"),
+        (-best["score"]).cast("decimal(9,6)").alias("cos_c"),
     )
     rw = Window.partitionBy("cell").orderBy(F.asc("cos_c"), F.asc("vec_id"))
     return (

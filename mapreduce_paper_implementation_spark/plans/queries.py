@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_paper_implementation_spark.functions.text import token_count, tokens
-from mapreduce_paper_implementation_spark.functions.vectors import cosine, norm, to_double_vec
 from mapreduce_paper_implementation_spark.shipping import ensure_shipped
 from mapreduce_paper_implementation_spark.sources.credit_fixture import credit_paths
 from mapreduce_paper_implementation_spark.sources.tables import load_table
@@ -639,43 +638,13 @@ ORDER BY probe_id, rnk
 
 @query("q16_knn_cosine", _Q16_ORACLE)
 def q16_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-3 for probes vec_id<10: broadcast the
-    probe set, one pass over candidates (BroadcastNestedLoopJoin), per-probe
-    top-k via window. Dot products are JVM higher-order functions — no
-    Python in the scan. The LSH-bucketed scale path is
-    operators/similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_vec("embedding").alias("vec")
-    )
-    emb = emb.withColumn("nrm", norm(F.col("vec")))
-    probes = (
-        emb.where(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("vec").alias("p_vec"),
-            F.col("nrm").alias("p_nrm"),
-        )
-    )
-    pairs = emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id")).select(
-        "probe_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine(F.col("p_vec"), F.col("vec"), F.col("p_nrm"), F.col("nrm")), 6
-        )
-        .cast("decimal(9,6)")
-        .alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        pairs.select(
-            "probe_id",
-            "neighbor_id",
-            F.col("cos_sim").cast("double").alias("cos_sim"),
-            F.row_number().over(w).cast("long").alias("rnk"),
-        )
-        .where(F.col("rnk") <= 3)
-        .orderBy("probe_id", "rnk")
-    )
+    """Exact brute-force cosine top-3 for probes vec_id<10
+    (operators/similarity.py:brute_force_topk): broadcast the probe set,
+    one pass over candidates (BroadcastNestedLoopJoin), per-probe top-k via
+    window. Dot products are JVM higher-order functions — no Python in the
+    scan."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return brute_force_topk(emb, emb.where(F.col("vec_id") < 10))
 
 
 # ---------------------------------------------------------------------------
@@ -716,7 +685,6 @@ def q17_user_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from mapreduce_paper_implementation_spark.operators.dedup import (  # noqa: E402
     DEFAULT_MAX_SHINGLE_DF,
-    embedding_neardup_pairs,
     embedding_neardup_pairs_blocked,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -731,6 +699,7 @@ from mapreduce_paper_implementation_spark.operators.multimodal import (  # noqa:
 )
 from mapreduce_paper_implementation_spark.operators.sessionize import session_stats  # noqa: E402
 from mapreduce_paper_implementation_spark.operators.similarity import (  # noqa: E402
+    brute_force_topk,
     ivf_topk,
     lsh_topk,
 )

@@ -135,8 +135,8 @@ def _split_labels(spark: SparkSession, docs: DataFrame) -> DataFrame:
     THIS corpus; the publisher owns that match; set-but-missing raises,
     see _cc_cut_dir). Fallback: rebuild inline (banded pair graph +
     iterative min-label CC). The two inputs yield bit-identical
-    assignments whenever the label tables agree — scripts/bench_q124_cut.py
-    asserts it and prices the gap (0.39 s cut vs 5.9 s inline at sf0.1);
+    assignments whenever the label tables agree (measured gap: 0.39 s cut
+    vs 5.9 s inline at sf0.1, BASELINE_HISTORY.md);
     tests/test_round12_additions.py gates the env-var path end-to-end."""
     from mapreduce_paper_implementation_spark.operators.dedup import (
         ngram_jaccard_pairs,
@@ -375,8 +375,8 @@ def q125_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: the split assignment reuses cluster_split_assign over
 # _split_labels (DEFAULT: the materialized cc_index release cut when
-# published via SPARK_GRAFT_CC_CUT — bench_q124_cut.py prices that at
-# ~0.4 s vs 5.9 s inline at sf0.1; inline CC rebuild as fallback); the
+# published via SPARK_GRAFT_CC_CUT — ~0.4 s vs 5.9 s inline at sf0.1;
+# inline CC rebuild as fallback); the
 # 8-gram audit is an inverted-index SHUFFLE join on the xxhash64 GRAM
 # HASH (the q20 class — both sides are corpus-scale, so neither
 # broadcasts; partial aggregation collapses per-doc hits map-side; the
@@ -460,16 +460,6 @@ ORDER BY m.rule, m.split
 
 @query("q126_residual_contamination", _q126_oracle())
 def q126_residual_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _q126_frame(spark, sf_dir, hashed=True)
-
-
-def _q126_frame(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFrame:
-    """q126 body with the gram-key representation as a knob: hashed=True is
-    the REGISTERED production shape (xxhash64 keys cross the shuffle);
-    hashed=False keeps the raw gram text as the join key — kept ONLY for
-    scripts/bench_q126_hash.py to price the delta (wall + shuffle bytes)
-    honestly. Results are identical unless xxhash64 collides, which the
-    text-joined DuckDB oracle would catch."""
     from mapreduce_paper_implementation_spark.functions.text import word_shingles
     from mapreduce_paper_implementation_spark.operators.caching import scoped_persist
     from mapreduce_paper_implementation_spark.operators.serving import (
@@ -511,7 +501,7 @@ def _q126_frame(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFrame:
         )
         .select(
             "doc_id",
-            (F.xxhash64("shingle") if hashed else F.col("shingle")).alias("gh"),
+            F.xxhash64("shingle").alias("gh"),
             "split_c",
             "split_d",
         )

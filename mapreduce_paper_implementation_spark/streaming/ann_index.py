@@ -39,8 +39,8 @@ codes). This maintainer keeps the centroids and cell assignments current
 between cuts; a release job runs publish_ann_index over the vector store
 (or the maintainer's compacted cells()) to snapshot them.
 
-Scale note: scoring uses the same tiled-GEMM kernel as the batch operator
-(one BLAS tile per (cell, L-block, R-block)); BENCH_INGEST.json records the
+Scale note: scoring is operators/dedup.py:gemm_cosine_pairs (one BLAS tile
+per (cell, L-block, R-block)); BENCH_INGEST.json records the
 per-batch cost curve — the per-pair JVM-expression formulation measured
 11 s -> 142 s over 10 batches of the x10 corpus before the GEMM rewrite.
 GEMM flops remain linear in history at fixed n_cells (the coarse-cell
@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.operators.dedup import assign_cells
+from mapreduce_paper_implementation_spark.operators.dedup import assign_cells, gemm_cosine_pairs
 from mapreduce_paper_implementation_spark.statedir import CENTROIDS, VersionedStateDir
 
 
@@ -243,21 +243,16 @@ class AnnIndexMaintainer:
         # Candidate families, so ingest ids need no ordering assumption:
         # cross-batch = new x ALL history (each such pair is completed by
         # exactly this batch, whatever the id order), within-batch = new x
-        # new under id_a > id_b (counted once). A pair sharing several cells
-        # collapses to its lowest shared cell, same as the batch operator.
+        # new, counted once.
         #
-        # Scoring is the tiled-GEMM kernel, NOT a per-pair JVM expression:
+        # Scoring is dedup.gemm_cosine_pairs, NOT a per-pair JVM expression:
         # with coarse cells every historical cell-mate is a candidate, so
         # the per-pair path re-evaluates an interpreted 64-dim fold
         # O(|batch| x occupancy) times per batch — measured 11 s -> 142 s
-        # over 10 ingest batches of the x10 corpus. One BLAS tile per
-        # (cell, L-block, R-block) scores the same pairs at matrix speed.
-        # (Flops stay linear in history at fixed n_cells — the coarse-cell
-        # trade — bounded in production by retraining with larger k as the
-        # corpus grows; what must not happen is paying interpreter cost on
-        # each of them.)
-        import pandas as pd
-
+        # over 10 ingest batches of the x10 corpus. (Flops stay linear in
+        # history at fixed n_cells — the coarse-cell trade — bounded in
+        # production by retraining with larger k as the corpus grows.)
+        #
         # Tile split derived from occupancy, not hardcoded (r05 ask #3): the
         # L side splits by this batch's per-cell rows, the R side by
         # batch+history rows, both targeting rows_per_tile per operand — a
@@ -283,6 +278,9 @@ class AnnIndexMaintainer:
                 "cell int, bl int, br int",
             )
         )
+        # Tile (cell, pa, pb): the batch's rows of block pa (L) meet block
+        # pb of batch+history (R). A batch row on the R side is also an L
+        # row, so it is mirrored (kept once); a history row is not.
         ln = assigned.join(blocks_df, "cell").select(
             "cell",
             F.pmod(F.col("id"), F.col("bl")).cast("int").alias("pa"),
@@ -290,72 +288,21 @@ class AnnIndexMaintainer:
             F.lit("L").alias("role"),
             "id",
             "vec",
-            F.lit(True).alias("is_new"),
+            F.lit(True).alias("mirror"),
         )
-        right_src = assigned.withColumn("is_new", F.lit(True))
+        right_src = assigned.withColumn("mirror", F.lit(True))
         if hist is not None:
-            right_src = right_src.unionByName(hist.withColumn("is_new", F.lit(False)))
+            right_src = right_src.unionByName(hist.withColumn("mirror", F.lit(False)))
         rn = right_src.join(blocks_df, "cell").select(
             "cell",
-            F.pmod(F.col("id"), F.col("br")).cast("int").alias("pb"),
             F.explode(F.sequence(F.lit(0), F.col("bl") - 1)).alias("pa"),
+            F.pmod(F.col("id"), F.col("br")).cast("int").alias("pb"),
             F.lit("R").alias("role"),
             "id",
             "vec",
-            "is_new",
+            "mirror",
         )
-        both = ln.select("cell", "pa", "pb", "role", "id", "vec", "is_new").unionByName(
-            rn.select("cell", "pa", "pb", "role", "id", "vec", "is_new")
-        )
-
-        threshold = self.threshold
-        margin = 1e-6  # same pre-filter contract as the batch operator
-
-        def score(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import numpy as np
-
-            cell = int(key[0])
-            lrows = pdf[pdf["role"] == "L"]
-            rrows = pdf[pdf["role"] == "R"]
-            if lrows.empty or rrows.empty:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cell": [], "cos": []})
-            lids = lrows["id"].to_numpy()
-            rids = rrows["id"].to_numpy()
-            rnew = rrows["is_new"].to_numpy()
-            ml = np.vstack(lrows["vec"].to_numpy())
-            mr = np.vstack(rrows["vec"].to_numpy())
-            ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
-            mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
-            g = ml @ mr.T
-            ii, jj = np.nonzero(g >= threshold - margin)
-            ia, ib, bn = lids[ii], rids[jj], rnew[jj]
-            # keep: cross-batch (R from history) always, within-batch once
-            keep = (~bn) & (ia != ib) | (bn & (ia > ib))
-            ia, ib, cs = ia[keep], ib[keep], g[ii, jj][keep]
-            return pd.DataFrame(
-                {
-                    "id_a": np.minimum(ia, ib),
-                    "id_b": np.maximum(ia, ib),
-                    "cell": np.full(len(ia), cell, dtype=np.int32),
-                    "cos": cs,
-                }
-            )
-
-        scored = both.groupBy("cell", "pa", "pb").applyInPandas(
-            score, "id_a long, id_b long, cell int, cos double"
-        )
-        pairs = (
-            scored.select(
-                "id_a",
-                "id_b",
-                "cell",
-                F.round("cos", 6).cast("decimal(9,6)").alias("cos_dec"),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.min("cell").alias("cell"), F.max("cos_dec").alias("cos_sim"))
-            .where(F.col("cos_sim") >= self.threshold)
-            .withColumn("cos_sim", F.col("cos_sim").cast("double"))
-        )
+        pairs = gemm_cosine_pairs(ln.unionByName(rn), ["cell", "pa", "pb"], self.threshold)
         dups_dir = self.store.batch_dir(batch_id, group="dups")
         pairs.write.mode("overwrite").parquet(dups_dir)
         assigned.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "cells"))

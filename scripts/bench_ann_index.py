@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """ANN release index: inline-retrain vs published-index walls for the three
-semantic consumers (VERDICT r12 ask #1 — the bench_q124_cut.py pattern
-applied to the trained ANN artifacts).
+semantic consumers (VERDICT r12 ask #1 — the inline-vs-materialized
+release-cut comparison applied to the trained ANN artifacts).
 
 Registered q118 rebuilds its IVF-PQ index (coarse k-means + 8 codebook
 fits + corpus encode) inline on every run; q116 and q127's semantic gate

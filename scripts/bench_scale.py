@@ -773,7 +773,7 @@ def main() -> None:
             "--queries produces a subset document: it would clobber the "
             "standing BENCH_SCALE.json (all factors + skew_join + x100 "
             "sections). Pass an explicit --out (e.g. /tmp/sub.json) and "
-            "merge (scripts/merge_x100.py pattern)."
+            "merge its per-query rows into BENCH_SCALE.json."
         )
 
     spark = get_spark("bench_scale")
