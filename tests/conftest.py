@@ -15,7 +15,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    # Default parallelism is capped at the local core count. createDataFrame
+    # over Python rows and sc.parallelize slice by it, and every slice is a
+    # Python task costing ~0.1-0.2 s to launch, so twice as many slices as
+    # cores only adds task waves on test-sized data (about a quarter of the
+    # wall time of the Spark-bound test files on a 4-core box).
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    s = get_spark(
+        app_name="tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.default.parallelism": str(min(8, cpus))},
+    )
     yield s
 
 

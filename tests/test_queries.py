@@ -15,10 +15,30 @@ from mapreduce_paper_implementation_spark.testing.compare import compare_query
 ORACLE_BACKED = sorted(n for n in QUERIES if n in ORACLES)
 ROWS_ONLY = sorted(n for n in QUERIES if n not in ORACLES)
 
+# Output schema of each query, recorded when a test builds it. Many query
+# builders run Spark jobs eagerly (k-means fits, graph iterations, tokenizer
+# training), so building all of them again only to read `.schema` cost
+# about 70 s of the suite.
+_SCHEMAS: dict = {}
+
+
+def _build(spark, sf_dir, name):
+    df = QUERIES[name](spark, sf_dir)
+    _SCHEMAS[name] = df.schema
+    return df
+
+
+def _schema(spark, sf_dir, name):
+    if name not in _SCHEMAS:
+        _build(spark, sf_dir, name)
+    return _SCHEMAS[name]
+
 
 @pytest.mark.parametrize("name", ORACLE_BACKED)
 def test_query_matches_oracle(spark, oracle, sf_dir, name):
-    res = compare_query(spark, oracle, name, QUERIES[name], ORACLES[name], sf_dir)
+    res = compare_query(
+        spark, oracle, name, lambda s, d: _build(s, d, name), ORACLES[name], sf_dir
+    )
     assert res.ok, f"{name}: {res.detail}"
 
 
@@ -57,7 +77,7 @@ def test_no_decimal_in_final_output_schemas(spark, sf_dir):
     from pyspark.sql.types import ArrayType, DecimalType
 
     for name in sorted(QUERIES):
-        schema = QUERIES[name](spark, sf_dir).schema
+        schema = _schema(spark, sf_dir, name)
         for f in schema.fields:
             assert not isinstance(f.dataType, DecimalType), (
                 f"{name}.{f.name} is {f.dataType} — final outputs must be DOUBLE"
