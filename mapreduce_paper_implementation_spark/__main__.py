@@ -26,18 +26,6 @@ import os
 import sys
 
 
-def _build_session(local_threads: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{local_threads}]")
-        .appName("mapreduce-paper-implementation-spark-cli")
-        .config("spark.sql.shuffle.partitions", str(max(local_threads, 4)))
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-
-
 def cmd_sequential(args, spark) -> int:
     """mrsequential analog: one sorted output file mr-out-0."""
     from mapreduce_paper_implementation_spark.apps import APPS
@@ -141,7 +129,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
     own_session = spark is None
     if own_session:
-        spark = _build_session(args.local)
+        # the engine's session: its UTC timezone keeps to_date day buckets
+        # equal to the oracle's
+        from mapreduce_paper_implementation_spark.session import get_spark
+
+        spark = get_spark(master=f"local[{args.local}]")
     try:
         from mapreduce_paper_implementation_spark.shipping import ensure_shipped
 

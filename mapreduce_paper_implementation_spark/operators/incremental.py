@@ -187,11 +187,6 @@ def hist_state(
     )
 
 
-def merge_hist_states(states: Sequence[DataFrame], group_cols: Sequence[str]) -> DataFrame:
-    """Union + re-add: O(|state|), raw data never re-read."""
-    return merge_rollups(states, [*group_cols, "bin"], add_cols=["cnt"])
-
-
 def quantiles_from_hist(
     hist: DataFrame,
     group_cols: Sequence[str],
@@ -328,7 +323,7 @@ def tile_assign_via_hist(
     the first (still within the bin-tolerance contract). The cutpoint
     table is O(groups x (n_tiles-1)) and BROADCAST; assignment is one
     array comparison per row over n_tiles-1 elements — no per-group sort
-    anywhere. Pass a pre-built/merged `hist` (hist_state/merge_hist_states)
+    anywhere. Pass a pre-built/merged `hist` (hist_state/merge_rollups)
     to assign from maintained state instead of rescanning; a row whose
     group is ABSENT from that hist gets tile NULL (a LEFT join — an inner
     join would silently drop new groups the maintained state has not seen

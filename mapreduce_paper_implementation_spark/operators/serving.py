@@ -162,7 +162,7 @@ def ab_readout(u: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# KL drift readout (q93 + kl_from_bins)
+# KL drift readout (q93 + source_bins_maintainer)
 # ---------------------------------------------------------------------------
 
 
@@ -187,7 +187,7 @@ def kl_readout(state: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Adaptive quality threshold (q103 + adaptive_threshold_view)
+# Adaptive quality threshold (q103 + quality_hist_maintainer)
 # ---------------------------------------------------------------------------
 
 
@@ -354,7 +354,7 @@ def tile_decile_readout(assigned: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rolling 7-day p95 readout (q112 + rolling_p95_view)
+# Rolling 7-day p95 readout (q112 + day_value_hist_maintainer)
 # ---------------------------------------------------------------------------
 
 
@@ -411,7 +411,7 @@ def rolling_p95_readout(h: DataFrame, window_days: int = 7) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sliding 7-day distinct users readout (q96 + sliding_distinct_view)
+# Sliding 7-day distinct users readout (q96 + user_day_maintainer)
 # ---------------------------------------------------------------------------
 
 
@@ -486,7 +486,7 @@ def vocab_sketch_frame(docs: DataFrame, lg_k: int = 12) -> DataFrame:
 
 def hll_estimate_readout(state: DataFrame) -> DataFrame:
     """(source, n_distinct_est) from (source, sketch) state — shared by
-    q114's bracket check and the streaming hll_vocab_view, so batch and
+    q114's bracket check and hll_vocab_maintainer's serving, so batch and
     served estimates are the SAME register readout."""
     return state.select(
         "source",
@@ -495,7 +495,7 @@ def hll_estimate_readout(state: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Benford first-digit readout (q107 + benford_view)
+# Benford first-digit readout (q107 + digit_counts_maintainer)
 # ---------------------------------------------------------------------------
 
 

@@ -142,8 +142,8 @@ def bpe_merges_from_wordfreq(wc: DataFrame, n_merges: int = 10) -> DataFrame:
     """The training loop over an already-aggregated (w, freq) table — the
     shared tail between batch q115 (word_freq over the corpus) and the
     streaming twin (streaming/rollup.py:wordfreq_maintainer keeps (w, freq)
-    as additive state, and bpe_view retrains from STATE — the corpus is
-    never re-read). Because the merge table is a pure deterministic
+    as additive state, and this function retrains from STATE — the corpus
+    is never re-read). Because the merge table is a pure deterministic
     function of exact integer word counts, served == batch bit-exactly
     whenever the maintained counts equal the corpus counts."""
     spark = wc.sparkSession

@@ -476,15 +476,21 @@ def q83_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("nrm", norm(F.col("vec")))
     # the q29/q72 cell assignment (nearest_centroids by cosine), keeping
     # the winner's rounded score: a NARROW per-vector argmax over the
-    # broadcast centroid array — the vectors never shuffle.
+    # broadcast centroid array — the vectors never shuffle. The winner
+    # struct is projected once and both fields read from that column; each
+    # field read off the expression itself would rank every vector again.
     best = nearest_centroids(
         F.col("vec"), F.col("_cents"), nrm=F.col("nrm")
     )[0]
     carr = cents.agg(F.collect_list(F.struct("cell", "c_vec", "c_nrm")).alias("_cents"))
-    assigned = v.crossJoin(F.broadcast(carr)).select(
-        "vec_id",
-        best["cell"].alias("cell"),
-        (-best["score"]).cast("decimal(9,6)").alias("cos_c"),
+    assigned = (
+        v.crossJoin(F.broadcast(carr))
+        .select("vec_id", best.alias("_best"))
+        .select(
+            "vec_id",
+            F.col("_best.cell").alias("cell"),
+            (-F.col("_best.score")).cast("decimal(9,6)").alias("cos_c"),
+        )
     )
     rw = Window.partitionBy("cell").orderBy(F.asc("cos_c"), F.asc("vec_id"))
     return (
@@ -1157,8 +1163,8 @@ ORDER BY sc.source
 @query("q93_source_drift_kl", _Q93_ORACLE)
 def q93_source_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the KL tail is kl_readout (operators/serving.py) — the SAME function
-    # the streaming kl_from_bins view serves from maintained state, so
-    # batch == served structurally.
+    # that serves source_bins_maintainer's state, so batch == served
+    # structurally.
     from mapreduce_paper_implementation_spark.operators.serving import kl_readout
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1376,8 +1382,8 @@ ORDER BY c.target_day
 
 @query("q96_sliding_distinct_users", _Q96_ORACLE)
 def q96_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # head + tail shared with the streaming user_day_maintainer /
-    # sliding_distinct_view (operators/serving.py), so batch == served
+    # head + tail shared with the streaming user_day_maintainer's
+    # serving readout (operators/serving.py), so batch == served
     # structurally.
     from mapreduce_paper_implementation_spark.operators.serving import (
         sliding_distinct_readout,
@@ -2024,7 +2030,7 @@ def q103_adaptive_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("q"),
     )
     # the selection rule is quartile_threshold (operators/serving.py) —
-    # the SAME function the streaming adaptive_threshold_view serves from,
+    # the SAME rule quality_hist_maintainer's state is served with,
     # so the cut logic cannot drift between batch and served.
     from mapreduce_paper_implementation_spark.operators.serving import (
         quartile_threshold,
@@ -2321,8 +2327,8 @@ ORDER BY event_type, digit
 @query("q107_benford_audit", _Q107_ORACLE)
 def q107_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the chi-square tail is benford_readout (operators/serving.py) — the
-    # SAME function the streaming benford_view serves from maintained
-    # digit counts, so batch == served structurally.
+    # SAME function digit_counts_maintainer's maintained digit counts are
+    # served with, so batch == served structurally.
     from mapreduce_paper_implementation_spark.operators.serving import (
         benford_readout,
     )
@@ -2683,8 +2689,8 @@ ORDER BY day_num
 def q112_rolling_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the entire tail after histogram construction is rolling_p95_readout
     # (operators/serving.py) — the SAME function the streaming
-    # day_value_hist_maintainer's rolling_p95_view serves from maintained
-    # state, so batch == served structurally.
+    # day_value_hist_maintainer's maintained state is served with, so
+    # batch == served structurally.
     from mapreduce_paper_implementation_spark.operators.serving import (
         day_cent_hist,
         rolling_p95_readout,

@@ -1,7 +1,7 @@
 """SparkSession factory.
 
 Scale posture: AQE on (runtime partition coalescing + skew-join splitting),
-shuffle partitions sized to the local core count for tests (a real cluster
+shuffle partitions sized to the local core count (a real cluster
 deployment would raise this to ~2-3x total cores), UTC session timezone so
 results compare bit-for-bit with the DuckDB oracle, Arrow enabled for every
 pandas-UDF boundary.
@@ -17,13 +17,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def core_count() -> int:
+    """Local Spark slots: SPARK_GRAFT_CPUS when set, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
     app_name: str = "mapreduce_paper_implementation_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -31,15 +34,14 @@ def get_spark(
     local[N] for tests; on a real cluster the caller passes master=None and
     lets spark-submit supply it. Every config here is cluster-safe.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = core_count()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(nshuffle))
-        .config("spark.default.parallelism", str(nshuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

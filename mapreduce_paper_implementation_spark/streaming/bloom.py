@@ -15,9 +15,10 @@ false-positive sliver; false negatives cannot exist).
 State is a delta chain under statedir.py with leaves `filter/` (the
 batch's own word-map delta) and `keys/` (the batch's distinct keys), plus
 each batch's answer — its rows tagged `seen` — under `seen/b{N}`. A
-replayed batch id is a no-op returning the persisted answer. compact()
-folds deltas into a baseline generation so probe cost is O(1) dirs
-regardless of batch count.
+replayed batch id is a no-op returning the persisted answer, so a stream
+wired in with rollup.py:maintain_rollup gets exactly-once state under
+at-least-once delivery. compact() folds deltas into a baseline generation
+so probe cost is O(1) dirs regardless of batch count.
 
 At 100 TB the word map stays <= num_bits/64 rows forever (size it for the
 projected key cardinality up front, or retrain-style rebuild at a larger
@@ -145,20 +146,3 @@ class SeenKeysMaintainer:
             )
 
         return self.store.compact(fold)
-
-
-def maintain_seen_keys(
-    stream_df: DataFrame, maintainer: SeenKeysMaintainer, checkpoint_dir: str
-):
-    """Wire a raw record stream into the maintainer (foreachBatch, same
-    pattern as streaming/rollup.py:maintain_rollup). Each micro-batch is
-    tagged against all history committed before it and appended; replays of
-    a committed epoch are no-ops by the pointer discipline, so at-least-once
-    delivery yields exactly-once state. Returns the started StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, batch_id: maintainer.update(df, batch_id)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

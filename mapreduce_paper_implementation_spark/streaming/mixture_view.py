@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_paper_implementation_spark.operators.incremental import merge_rollups
 from mapreduce_paper_implementation_spark.streaming.rollup import RollupMaintainer
 
 
@@ -46,11 +47,7 @@ def source_tokens_maintainer(
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("source")
-            .agg(F.sum("toks").cast("long").alias("toks"))
-        )
+        return merge_rollups([a, b], ["source"], add_cols=["toks"])
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_paper_implementation_spark.operators.incremental import (
+    merge_rollups,
     merge_states,
     rollup_state,
 )
@@ -107,17 +108,14 @@ def histogram_maintainer(
     `quantiles_from_hist(maintainer.current_state(), ...)` — always one
     cheap interpolation away, raw history never re-read; state size is
     O(groups x value_range/width) regardless of stream volume."""
-    from mapreduce_paper_implementation_spark.operators.incremental import (
-        hist_state,
-        merge_hist_states,
-    )
+    from mapreduce_paper_implementation_spark.operators.incremental import hist_state
 
     gc = list(group_cols)
     return RollupMaintainer(
         spark,
         state_dir,
         state_fn=lambda delta: hist_state(delta, gc, value_col, inv_width),
-        merge_fn=lambda a, b: merge_hist_states([a, b], gc),
+        merge_fn=lambda a, b: merge_rollups([a, b], [*gc, "bin"], add_cols=["cnt"]),
     )
 
 
@@ -155,9 +153,10 @@ def ntile_view(
 def maintain_rollup(
     events_stream: DataFrame, maintainer: RollupMaintainer, checkpoint_dir: str
 ):
-    """Wire a raw event stream into the maintainer. Returns the started
-    StreamingQuery; callers drive it (processAllAvailable in tests, just
-    run in production)."""
+    """Wire a raw event stream into the maintainer — any object with
+    `update(df, batch_id)`, e.g. bloom.py's SeenKeysMaintainer. Returns the
+    started StreamingQuery; callers drive it (processAllAvailable in tests,
+    just run in production)."""
     return (
         events_stream.writeStream.foreachBatch(
             lambda df, batch_id: maintainer.update(df, batch_id)
@@ -198,10 +197,8 @@ def qi_counts_maintainer(
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("user_bucket", "event_type", "hour_of_day")
-            .agg(F.sum("n").cast("long").alias("n"))
+        return merge_rollups(
+            [a, b], ["user_bucket", "event_type", "hour_of_day"], add_cols=["n"]
         )
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
@@ -223,9 +220,10 @@ def source_bins_maintainer(
     """Streaming twin of q93's source-drift monitor: maintains the
     (source, length-bin) -> c counts from per-batch document deltas
     (additive, O(sources x bins) state). Serving side:
-    `kl_from_bins(maintainer.current_state())` recomputes the per-source KL
-    divergence against the corpus marginal from the state alone — the drift
-    dashboard updates per ingest without re-reading any document."""
+    `serving.kl_readout(maintainer.current_state())` — the readout batch
+    q93 runs — recomputes the per-source KL divergence against the corpus
+    marginal from the state alone; the drift dashboard updates per ingest
+    without re-reading any document."""
     from pyspark.sql import functions as F
 
     def state_fn(delta: DataFrame) -> DataFrame:
@@ -237,21 +235,9 @@ def source_bins_maintainer(
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b).groupBy("source", "bin").agg(F.sum("c").cast("long").alias("c"))
-        )
+        return merge_rollups([a, b], ["source", "bin"], add_cols=["c"])
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
-
-
-def kl_from_bins(state: DataFrame) -> DataFrame:
-    """q93's output shape (source, n_docs, kl_vs_corpus) from maintained
-    (source, bin, c) state — the batch query and this view call the SAME
-    kl_readout (operators/serving.py), so served == one-shot structurally,
-    not by convention."""
-    from mapreduce_paper_implementation_spark.operators.serving import kl_readout
-
-    return kl_readout(state)
 
 
 def quality_hist_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
@@ -261,8 +247,9 @@ def quality_hist_maintainer(spark: SparkSession, state_dir: str) -> RollupMainta
     #sources x 1e6+1 REGARDLESS of ingest volume — the same property the
     batch query exploits to avoid a per-doc sort. Counts are additive, so
     the generic versioned RollupMaintainer applies unchanged. Serving side:
-    `adaptive_threshold_view(maintainer.current_state())` re-derives the
-    exact per-source bottom-quartile cut from the histogram alone — and a
+    `serving.adaptive_threshold_from_hist(maintainer.current_state())`
+    re-derives the exact per-source bottom-quartile cut from the histogram
+    alone, with the SAME quartile_threshold rule batch q103 calls — and a
     cut moves as ingest shifts a source's score distribution, which a
     per-batch-only filter would never revisit."""
     from pyspark.sql import functions as F
@@ -285,25 +272,9 @@ def quality_hist_maintainer(spark: SparkSession, state_dir: str) -> RollupMainta
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b).groupBy("source", "q").agg(F.sum("c").cast("long").alias("c"))
-        )
+        return merge_rollups([a, b], ["source", "q"], add_cols=["c"])
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
-
-
-def adaptive_threshold_view(state: DataFrame) -> DataFrame:
-    """q103's output shape (source, threshold, n_total, n_kept, avg_kept)
-    from maintained (source, q, c) state. The selection rule is the SAME
-    quartile_threshold the batch query calls (operators/serving.py); the
-    kept mass/mean come from the histogram (see
-    adaptive_threshold_from_hist for the ROUND-grain equivalence
-    argument)."""
-    from mapreduce_paper_implementation_spark.operators.serving import (
-        adaptive_threshold_from_hist,
-    )
-
-    return adaptive_threshold_from_hist(state)
 
 
 def ab_counters_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
@@ -326,14 +297,7 @@ def ab_counters_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintai
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("user_id")
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.sum("n_purchases").cast("long").alias("n_purchases"),
-            )
-        )
+        return merge_rollups([a, b], ["user_id"], add_cols=["n_events", "n_purchases"])
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
 
@@ -376,21 +340,12 @@ def postings_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer
     re-ranks from state alone — the corpus-derived query terms and the idf
     weights shift as ingest changes document frequencies, which a
     per-batch-only scorer would never revisit."""
-    from pyspark.sql import functions as F
-
     from mapreduce_paper_implementation_spark.operators.serving import postings_frame
 
-    def state_fn(delta: DataFrame) -> DataFrame:
-        return postings_frame(delta)
-
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("doc_id", "term")
-            .agg(F.sum("tf").cast("long").alias("tf"))
-        )
+        return merge_rollups([a, b], ["doc_id", "term"], add_cols=["tf"])
 
-    return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
+    return RollupMaintainer(spark, state_dir, state_fn=postings_frame, merge_fn=merge_fn)
 
 
 def bm25_view(state: DataFrame) -> DataFrame:
@@ -499,36 +454,17 @@ def day_value_hist_maintainer(spark: SparkSession, state_dir: str) -> RollupMain
     """Streaming twin of q112's rolling p95: maintains the (day_num, cent)
     -> c value histogram from event deltas — additive, state bounded by
     #days x value domain (cents), independent of event volume. Serving
-    side: `rolling_p95_view(maintainer.current_state())` re-derives every
-    day's trailing-7-day exact p95 from state alone — late events for a
+    side: `serving.rolling_p95_readout(maintainer.current_state())` — the
+    readout batch q112 runs — re-derives every day's trailing-7-day exact
+    p95 from state alone — late events for a
     past day fold into that day's bins and move the affected trailing
     windows, which a per-batch-only monitor would never revisit."""
-    from pyspark.sql import functions as F
-
     from mapreduce_paper_implementation_spark.operators.serving import day_cent_hist
 
-    def state_fn(delta: DataFrame) -> DataFrame:
-        return day_cent_hist(delta)
-
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("day_num", "cent")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        return merge_rollups([a, b], ["day_num", "cent"], add_cols=["c"])
 
-    return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
-
-
-def rolling_p95_view(state: DataFrame) -> DataFrame:
-    """q112's output from maintained (day_num, cent, c) state — the batch
-    query and this view call the SAME rolling_p95_readout
-    (operators/serving.py), so served == one-shot structurally."""
-    from mapreduce_paper_implementation_spark.operators.serving import (
-        rolling_p95_readout,
-    )
-
-    return rolling_p95_readout(state)
+    return RollupMaintainer(spark, state_dir, state_fn=day_cent_hist, merge_fn=merge_fn)
 
 
 def user_day_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
@@ -539,8 +475,9 @@ def user_day_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer
     re-ingesting the same events, overlapping batches, late data for old
     days — all fold exactly. State is bounded by active users x days,
     independent of raw event volume (the frame every DAU/WAU system
-    maintains). Serving: `sliding_distinct_view(maintainer.current_state())`
-    re-derives every trailing-7-day distinct-user count from state alone —
+    maintains). Serving: `serving.sliding_distinct_readout(maintainer.current_state())`
+    — the readout batch q96 runs — re-derives every trailing-7-day
+    distinct-user count from state alone —
     late events for an old day extend that day's user set and move the
     windows it feeds, which a per-batch-only counter would never revisit."""
     from mapreduce_paper_implementation_spark.operators.serving import user_day_frame
@@ -553,17 +490,6 @@ def user_day_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer
     )
 
 
-def sliding_distinct_view(state: DataFrame) -> DataFrame:
-    """q96's output from maintained (user_id, day_num) state — the batch
-    query and this view call the SAME sliding_distinct_readout
-    (operators/serving.py), so served == one-shot structurally."""
-    from mapreduce_paper_implementation_spark.operators.serving import (
-        sliding_distinct_readout,
-    )
-
-    return sliding_distinct_readout(state)
-
-
 def hll_vocab_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
     """Streaming twin of q114's vocabulary audit: maintains one HLL
     sketch per source (Apache DataSketches, lgK=12) over the token
@@ -571,8 +497,9 @@ def hll_vocab_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintaine
     associative, commutative, and IDEMPOTENT — so overlapping re-ingest,
     replays under new batch ids, and any batch partitioning all converge
     to the registers of a one-shot sketch over the union: served
-    estimates == batch estimates EXACTLY (shared hll_estimate_readout),
-    not merely within error. State is O(sources x 2^lgK) bytes no matter
+    estimates == batch estimates EXACTLY (serving side:
+    `serving.hll_estimate_readout(maintainer.current_state())`, the readout
+    batch q114 runs), not merely within error. State is O(sources x 2^lgK) bytes no matter
     how many tokens stream through — the bounded-state sibling of the
     exact user_day set (whose state grows with distinct keys)."""
     from pyspark.sql import functions as F
@@ -593,21 +520,11 @@ def hll_vocab_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintaine
     )
 
 
-def hll_vocab_view(state: DataFrame) -> DataFrame:
-    """q114's estimate path from maintained (source, sketch) state — the
-    batch query and this view call the SAME hll_estimate_readout
-    (operators/serving.py), so served == one-shot structurally."""
-    from mapreduce_paper_implementation_spark.operators.serving import (
-        hll_estimate_readout,
-    )
-
-    return hll_estimate_readout(state)
-
-
 def digit_counts_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
     """Streaming twin of q107's Benford audit: maintains (event_type,
     leading-digit) -> cnt from event deltas — additive, state bounded by
-    #types x 9. Serving side: `benford_view(maintainer.current_state())`
+    #types x 9. Serving side: `serving.benford_readout(maintainer.current_state())` —
+    the readout batch q107 runs, so served == one-shot bit-for-bit —
     re-derives frequencies and the per-type chi-square; the forensic
     readout updates per ingest batch without re-scanning value history."""
     from pyspark.sql import functions as F
@@ -625,23 +542,9 @@ def digit_counts_maintainer(spark: SparkSession, state_dir: str) -> RollupMainta
         )
 
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("event_type", "digit")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
+        return merge_rollups([a, b], ["event_type", "digit"], add_cols=["cnt"])
 
     return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
-
-
-def benford_view(state: DataFrame) -> DataFrame:
-    """q107's output shape from maintained (event_type, digit, cnt) state —
-    the batch query and this view call the SAME benford_readout
-    (operators/serving.py), so served == one-shot bit-for-bit (the counts
-    are exact; every float derives from them the same way)."""
-    from mapreduce_paper_implementation_spark.operators.serving import benford_readout
-
-    return benford_readout(state)
 
 
 def wordfreq_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer:
@@ -653,38 +556,19 @@ def wordfreq_maintainer(spark: SparkSession, state_dir: str) -> RollupMaintainer
     the other additive maintainers: doc-disjoint batches (a re-sent doc
     would double its counts).
 
-    Serving side: `bpe_view(maintainer.current_state(), n_merges)` retrains
-    the merge table FROM STATE — the corpus is never re-read at retrain
+    Serving side:
+    `tokenizer.bpe_merges_from_wordfreq(maintainer.current_state(), n_merges)`
+    — the function batch q115 calls, so served == batch BIT-exactly —
+    retrains the merge table FROM STATE — the corpus is never re-read at retrain
     time, which is the whole point: tokenizer retraining after a day's
     ingest costs O(vocab x rounds), not O(corpus). Pair with
     streaming/policy.py's retrain triggers exactly like ann_index."""
-    from pyspark.sql import functions as F
-
     from mapreduce_paper_implementation_spark.operators.tokenizer import word_freq
 
-    def state_fn(delta: DataFrame) -> DataFrame:
-        return word_freq(delta)
-
     def merge_fn(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b).groupBy("w").agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        return merge_rollups([a, b], ["w"], add_cols=["freq"])
 
-    return RollupMaintainer(spark, state_dir, state_fn=state_fn, merge_fn=merge_fn)
-
-
-def bpe_view(state: DataFrame, n_merges: int = 10) -> DataFrame:
-    """q115's merge table from maintained (w, freq) state — the batch query
-    and this view call the SAME bpe_merges_from_wordfreq, and the merge
-    table is a pure deterministic function of exact integer counts, so
-    served == batch BIT-exactly whenever the maintained counts equal the
-    corpus counts (differentially gated after every batch in
-    tests/test_counts_maintainers.py)."""
-    from mapreduce_paper_implementation_spark.operators.tokenizer import (
-        bpe_merges_from_wordfreq,
-    )
-
-    return bpe_merges_from_wordfreq(state, n_merges)
+    return RollupMaintainer(spark, state_dir, state_fn=word_freq, merge_fn=merge_fn)
 
 
 def unigram_view(
@@ -694,7 +578,7 @@ def unigram_view(
     em_rounds: int = 2,
 ) -> DataFrame:
     """q121's trained piece table from the SAME maintained (w, freq) state
-    wordfreq_maintainer feeds bpe_view — one counter state serves BOTH
+    wordfreq_maintainer feeds the BPE retrain — one counter state serves BOTH
     tokenizer families' retrains. unigram_train is a pure deterministic
     function of exact integer word counts (every float inside derives from
     them identically on every run), so served == batch BIT-exactly whenever
@@ -757,8 +641,10 @@ def quantile_sketch_maintainer(
     answer for value domains the exact histogram maintainers
     (histogram_maintainer, day_value_hist_maintainer) cannot bin.
 
-    Serving side: `quantile_view(maintainer.current_state(), phis)` — an
-    O(sketch) readout; no value history is ever re-read."""
+    Serving side:
+    `sketch.quantiles_from_sketch(maintainer.current_state(), "event_type",
+    phis)` — the readout batch q120 runs, O(sketch); no value history is
+    ever re-read."""
     from mapreduce_paper_implementation_spark.operators.serving import (
         continuous_value_frame,
     )
@@ -777,14 +663,3 @@ def quantile_sketch_maintainer(
         ),
         merge_fn=lambda a, b: merge_quantile_states(a, b, "event_type", kk),
     )
-
-
-def quantile_view(state: DataFrame, phis: tuple[float, ...] = (0.5, 0.95, 0.99)) -> DataFrame:
-    """(event_type, phi, est) from maintained sketch state — the same
-    quantiles_from_sketch readout batch q120 runs, so served == batch
-    structurally; accuracy is gated by the q120 bracket contract."""
-    from mapreduce_paper_implementation_spark.operators.sketch import (
-        quantiles_from_sketch,
-    )
-
-    return quantiles_from_sketch(state, "event_type", phis)

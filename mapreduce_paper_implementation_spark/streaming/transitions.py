@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_paper_implementation_spark.operators.incremental import merge_rollups
 from mapreduce_paper_implementation_spark.streaming.rollup import RollupMaintainer
 
 _EP_FIELDS = ("type", "t_us", "event_id")
@@ -80,11 +81,8 @@ def _merge(
         )
         .agg(F.count("*").cast("long").alias("n"))
     )
-    counts = (
-        prev_counts.unionByName(b_counts)
-        .unionByName(boundary)
-        .groupBy("event_type", "next_type")
-        .agg(F.sum("n").cast("long").alias("n"))
+    counts = merge_rollups(
+        [prev_counts, b_counts, boundary], ["event_type", "next_type"], add_cols=["n"]
     )
     p, b = prev_ep.alias("p"), b_ep.alias("b")
     merged_ep = p.join(b, "user_id", "full_outer").select(

@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mapreduce_paper_implementation_spark.session import get_spark  # noqa: E402
+from mapreduce_paper_implementation_spark.session import core_count, get_spark  # noqa: E402
 from mapreduce_paper_implementation_spark.testing.compare import duckdb_connect  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -20,11 +20,12 @@ def spark():
     # Python task costing ~0.1-0.2 s to launch, so twice as many slices as
     # cores only adds task waves on test-sized data (about a quarter of the
     # wall time of the Spark-bound test files on a 4-core box).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     s = get_spark(
         app_name="tests",
-        shuffle_partitions=8,
-        extra_conf={"spark.default.parallelism": str(min(8, cpus))},
+        extra_conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.default.parallelism": str(min(8, core_count())),
+        },
     )
     yield s
 

@@ -61,3 +61,43 @@ def test_cli_explain(spark, sf_dir, capsys):
     out = capsys.readouterr().out
     assert "PushedFilters" in out  # formatted plan shows scan pushdown
     assert main(["explain", "nonexistent", "--sf-dir", sf_dir], spark=spark) == 2
+
+
+def test_cli_builds_its_session_through_get_spark(monkeypatch, tmp_path):
+    """Without an injected session the CLI takes the engine's session
+    (UTC timezone, AQE, Arrow) from session.get_spark on local[--local],
+    and stops it afterwards. get_spark is replaced so the shared test
+    session is neither reconfigured nor stopped."""
+    import mapreduce_paper_implementation_spark.__main__ as cli
+    from mapreduce_paper_implementation_spark import session, shipping
+
+    seen = {}
+
+    class FakeSession:
+        def stop(self):
+            seen["stopped"] = True
+
+    fake = FakeSession()
+
+    def fake_get_spark(**kwargs):
+        seen["kwargs"] = kwargs
+        return fake
+
+    def fake_cmd(args, spark):
+        seen["ran_with"] = spark
+        return 0
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(shipping, "ensure_shipped", lambda spark: None)
+    monkeypatch.setattr(cli, "cmd_query", fake_cmd)
+    assert main(["--local", "3", "query", "q01_wordcount", "--sf-dir", str(tmp_path)]) == 0
+    assert seen == {"kwargs": {"master": "local[3]"}, "ran_with": fake, "stopped": True}
+
+
+def test_core_count_defaults_to_this_process_cores(monkeypatch):
+    from mapreduce_paper_implementation_spark.session import core_count
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert core_count() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert core_count() == 3

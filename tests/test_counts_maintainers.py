@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.plans.queries import QUERIES
 from mapreduce_paper_implementation_spark.sources.tables import load_table
+from mapreduce_paper_implementation_spark.operators.serving import kl_readout
 from mapreduce_paper_implementation_spark.streaming.rollup import (
     k_anonymity_view,
-    kl_from_bins,
     qi_counts_maintainer,
     source_bins_maintainer,
 )
@@ -72,16 +72,18 @@ def test_source_bins_match_q93_and_replay_noop(spark, sf_dir, tmp_path):
     n_batches = 3
     for bid in range(n_batches):
         m.update(docs.where(F.col("doc_id") % n_batches == bid), bid)
-    got = sorted(map(tuple, kl_from_bins(m.current_state()).collect()))
+    got = sorted(map(tuple, kl_readout(m.current_state()).collect()))
     q93 = sorted(map(tuple, QUERIES["q93_source_drift_kl"](spark, sf_dir).collect()))
     assert got == q93
     m.update(docs.where(F.col("doc_id") % n_batches == 1), 1)  # replay
-    assert sorted(map(tuple, kl_from_bins(m.current_state()).collect())) == q93
+    assert sorted(map(tuple, kl_readout(m.current_state()).collect())) == q93
 
 
 def test_quality_hist_matches_q103_after_each_batch(spark, sf_dir, tmp_path):
+    from mapreduce_paper_implementation_spark.operators.serving import (
+        adaptive_threshold_from_hist,
+    )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
-        adaptive_threshold_view,
         quality_hist_maintainer,
     )
 
@@ -90,13 +92,13 @@ def test_quality_hist_matches_q103_after_each_batch(spark, sf_dir, tmp_path):
     n_batches = 3
     for bid in range(n_batches):
         m.update(docs.where(F.col("doc_id") % n_batches == bid), bid)
-    got = sorted(map(tuple, adaptive_threshold_view(m.current_state()).collect()))
+    got = sorted(map(tuple, adaptive_threshold_from_hist(m.current_state()).collect()))
     q103 = sorted(map(tuple, QUERIES["q103_adaptive_quality"](spark, sf_dir).collect()))
     assert got == q103
     # replay is a no-op under the versioned pointer discipline
     m.update(docs.where(F.col("doc_id") % n_batches == 0), 0)
     assert (
-        sorted(map(tuple, adaptive_threshold_view(m.current_state()).collect())) == q103
+        sorted(map(tuple, adaptive_threshold_from_hist(m.current_state()).collect())) == q103
     )
 
 
@@ -127,8 +129,8 @@ def test_ab_counters_match_q104_and_ratio_flip(spark, sf_dir, tmp_path):
 
 
 def test_digit_counts_match_q107_bitwise(spark, sf_dir, tmp_path):
+    from mapreduce_paper_implementation_spark.operators.serving import benford_readout
     from mapreduce_paper_implementation_spark.streaming.rollup import (
-        benford_view,
         digit_counts_maintainer,
     )
 
@@ -137,7 +139,7 @@ def test_digit_counts_match_q107_bitwise(spark, sf_dir, tmp_path):
     n_batches = 3
     for bid in range(n_batches):
         m.update(events.where(F.col("event_id") % n_batches == bid), bid)
-    got = sorted(map(tuple, benford_view(m.current_state()).collect()))
+    got = sorted(map(tuple, benford_readout(m.current_state()).collect()))
     q107 = sorted(map(tuple, QUERIES["q107_benford_audit"](spark, sf_dir).collect()))
     assert got == q107
 
@@ -176,9 +178,11 @@ def test_day_value_hist_matches_q112_and_late_data_moves_windows(spark, sf_dir, 
     batch q112 once all batches land (shared rolling_p95_readout), and a
     late batch for an old day genuinely MOVES already-served windows (the
     reason the histogram is maintained rather than appended)."""
+    from mapreduce_paper_implementation_spark.operators.serving import (
+        rolling_p95_readout,
+    )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
         day_value_hist_maintainer,
-        rolling_p95_view,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -188,9 +192,9 @@ def test_day_value_hist_matches_q112_and_late_data_moves_windows(spark, sf_dir, 
     # days have already been served
     late = (F.col("event_id") % 5 == 0)
     m.update(events.where(~late), 0)
-    first = sorted(map(tuple, rolling_p95_view(m.current_state()).collect()))
+    first = sorted(map(tuple, rolling_p95_readout(m.current_state()).collect()))
     m.update(events.where(late), 1)
-    got = sorted(map(tuple, rolling_p95_view(m.current_state()).collect()))
+    got = sorted(map(tuple, rolling_p95_readout(m.current_state()).collect()))
     q112 = sorted(
         map(tuple, QUERIES["q112_rolling_p95"](spark, sf_dir).collect())
     )
@@ -199,7 +203,7 @@ def test_day_value_hist_matches_q112_and_late_data_moves_windows(spark, sf_dir, 
     # replay no-op: the STATE must be invariant (update() always returns
     # None, so asserting on the return value would be vacuous)
     m.update(events.where(late), 1)
-    assert sorted(map(tuple, rolling_p95_view(m.current_state()).collect())) == got
+    assert sorted(map(tuple, rolling_p95_readout(m.current_state()).collect())) == got
 
 
 def test_ntile_view_matches_q110_and_late_data_moves_cutpoints(spark, sf_dir, tmp_path):
@@ -296,8 +300,10 @@ def test_user_day_matches_q96_and_overlapping_reingest_is_exact(spark, sf_dir, t
     sliding_distinct_readout), and — the set-union property the additive
     maintainers lack — OVERLAPPING re-ingest under a NEW batch id folds
     exactly: feeding half the corpus again changes nothing."""
+    from mapreduce_paper_implementation_spark.operators.serving import (
+        sliding_distinct_readout,
+    )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
-        sliding_distinct_view,
         user_day_maintainer,
     )
 
@@ -315,7 +321,7 @@ def test_user_day_matches_q96_and_overlapping_reingest_is_exact(spark, sf_dir, t
         )
 
         served = sorted(
-            map(tuple, sliding_distinct_view(m.current_state()).collect())
+            map(tuple, sliding_distinct_readout(m.current_state()).collect())
         )
         batch = sorted(
             map(tuple, sliding_distinct_readout(user_day_frame(seen)).collect())
@@ -329,7 +335,7 @@ def test_user_day_matches_q96_and_overlapping_reingest_is_exact(spark, sf_dir, t
     # genuinely re-fed data): set union is idempotent, served is unchanged
     m.update(events.where(F.col("event_id") % 2 == 0), n_batches)
     assert (
-        sorted(map(tuple, sliding_distinct_view(m.current_state()).collect())) == q96
+        sorted(map(tuple, sliding_distinct_readout(m.current_state()).collect())) == q96
     )
 
 
@@ -405,7 +411,6 @@ def test_hll_vocab_matches_batch_sketch_exactly(spark, sf_dir, tmp_path):
     )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
         hll_vocab_maintainer,
-        hll_vocab_view,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -417,7 +422,7 @@ def test_hll_vocab_matches_batch_sketch_exactly(spark, sf_dir, tmp_path):
         m.update(b, bid)
         seen = b if seen is None else seen.unionByName(b)
         served = sorted(
-            map(tuple, hll_vocab_view(m.current_state()).collect())
+            map(tuple, hll_estimate_readout(m.current_state()).collect())
         )
         oneshot = sorted(
             map(tuple, hll_estimate_readout(vocab_sketch_frame(seen)).collect())
@@ -430,20 +435,22 @@ def test_hll_vocab_matches_batch_sketch_exactly(spark, sf_dir, tmp_path):
         assert q114[src]["est_ok"]
     # overlapping re-ingest under a NEW batch id: idempotent registers
     m.update(docs.where(F.col("doc_id") % 2 == 0), n_batches)
-    assert sorted(map(tuple, hll_vocab_view(m.current_state()).collect())) == served
+    assert sorted(map(tuple, hll_estimate_readout(m.current_state()).collect())) == served
 
 
 def test_wordfreq_state_serves_q115_merge_table_after_every_batch(spark, sf_dir, tmp_path):
     """q115's streaming twin: fold doc-disjoint batches into the (w, freq)
     counter state; after EVERY batch the merge table retrained from state
-    (bpe_view) must equal bpe_train over the documents ingested so far —
+    (bpe_merges_from_wordfreq) must equal bpe_train over the documents ingested so far —
     bit-exact, because the merge table is a pure function of exact integer
     word counts. Also pins the replay no-op as state invariance."""
     from pyspark.sql import functions as F
 
-    from mapreduce_paper_implementation_spark.operators.tokenizer import bpe_train
+    from mapreduce_paper_implementation_spark.operators.tokenizer import (
+        bpe_merges_from_wordfreq,
+        bpe_train,
+    )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
-        bpe_view,
         wordfreq_maintainer,
     )
 
@@ -457,7 +464,7 @@ def test_wordfreq_state_serves_q115_merge_table_after_every_batch(spark, sf_dir,
     for bid in range(n_batches):
         m.update(docs.where(F.col("doc_id") % n_batches == bid), bid)
         seen = docs.where(F.col("doc_id") % n_batches <= bid)
-        served = rows(bpe_view(m.current_state(), n_merges=6))
+        served = rows(bpe_merges_from_wordfreq(m.current_state(), n_merges=6))
         batch = rows(bpe_train(seen, n_merges=6))
         assert served == batch, f"batch {bid}"
     # replay no-op: re-feeding an old batch id under ANY payload leaves
@@ -479,9 +486,11 @@ def test_quantile_sketch_maintainer_weight_exact_and_bracket(spark, sf_dir, tmp_
     from mapreduce_paper_implementation_spark.operators.serving import (
         continuous_value_frame,
     )
+    from mapreduce_paper_implementation_spark.operators.sketch import (
+        quantiles_from_sketch,
+    )
     from mapreduce_paper_implementation_spark.streaming.rollup import (
         quantile_sketch_maintainer,
-        quantile_view,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -508,7 +517,7 @@ def test_quantile_sketch_maintainer_weight_exact_and_bracket(spark, sf_dir, tmp_
         for r in continuous_value_frame(seen).collect():
             exact_vals.setdefault(r["event_type"], []).append(r["v"])
         assert got_w == {g: len(v) for g, v in exact_vals.items()}, f"batch {bid}"
-        for r in quantile_view(state, phis).collect():
+        for r in quantiles_from_sketch(state, "event_type", phis).collect():
             vals = sorted(exact_vals[r["event_type"]])
             n = len(vals)
             rank = sum(1 for v in vals if v <= r["est"])
@@ -524,7 +533,7 @@ def test_quantile_sketch_maintainer_weight_exact_and_bracket(spark, sf_dir, tmp_
 
 def test_wordfreq_state_serves_unigram_family_after_every_batch(spark, sf_dir, tmp_path):
     """q121/q122's streaming twins over the SAME wordfreq counter state
-    that serves bpe_view: after every doc-disjoint batch, the unigram piece
+    that serves the BPE retrain: after every doc-disjoint batch, the unigram piece
     table retrained from state (unigram_view) and the greedy segmentation
     under the state-derived seed vocabulary (greedy_segment_view) must each
     equal their batch counterparts over the documents ingested so far —

@@ -102,7 +102,7 @@ def test_q80_histogram_merges_across_batches(spark, sf_dir):
     # continuous-aggregate contract (operators/incremental.py §3).
     from mapreduce_paper_implementation_spark.operators.incremental import (
         hist_state,
-        merge_hist_states,
+        merge_rollups,
         quantiles_from_hist,
     )
 
@@ -112,7 +112,7 @@ def test_q80_histogram_merges_across_batches(spark, sf_dir):
         hist_state(events.where(F.col("event_id") % 3 == i), ["event_type"], "value")
         for i in range(3)
     ]
-    merged = merge_hist_states(batches, ["event_type"])
+    merged = merge_rollups(batches, ["event_type", "bin"], add_cols=["cnt"])
     diff = one_shot.exceptAll(merged).union(merged.exceptAll(one_shot))
     assert diff.count() == 0
 

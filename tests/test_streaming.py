@@ -567,10 +567,8 @@ def test_streaming_seen_keys_maintenance_matches_batchwise_truth(spark, sf_dir, 
     store must cover exactly the distinct input keys."""
     import os
 
-    from mapreduce_paper_implementation_spark.streaming.bloom import (
-        SeenKeysMaintainer,
-        maintain_seen_keys,
-    )
+    from mapreduce_paper_implementation_spark.streaming.bloom import SeenKeysMaintainer
+    from mapreduce_paper_implementation_spark.streaming.rollup import maintain_rollup
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     src = str(tmp_path / "src")
@@ -581,7 +579,7 @@ def test_streaming_seen_keys_maintenance_matches_batchwise_truth(spark, sf_dir, 
     stream = (
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = maintain_seen_keys(stream, m, str(tmp_path / "ckpt"))
+    q = maintain_rollup(stream, m, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
     finally:
