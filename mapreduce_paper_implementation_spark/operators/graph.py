@@ -8,18 +8,25 @@ when no label changes. Rounds needed = graph diameter (near-dup clusters
 are small and dense, so typically 2-4).
 
 Scale notes:
-- each round is one self-contained join + aggregate on the edge list —
-  shuffle size O(|E|), no driver-side data;
+- a vertex of degree d is ONE state row (id, lbl, nbrs) holding its d
+  neighbor ids; round 1 is the aggregate that builds those rows, so the
+  symmetrized edge list is never materialized on its own;
+- each later round is one shuffle: the vertices whose label moved in the
+  previous round explode `nbrs` into (neighbor, lbl) messages, the
+  messages union with the state rows, and one groupBy(id) takes the min
+  label and keeps the state row's `nbrs` — shuffle size O(|V| + messages),
+  no join, no driver-side data;
 - `localCheckpoint` truncates the lineage each round, without it the plan
   doubles every iteration and the job dies on plan-compile time long before
   data size matters;
-- the convergence check is a driver-side count of changed labels (a scalar
-  per round, not a collect of data).
+- convergence is the number of labels that moved in the round, observed
+  (Spark `Observation`) on the SAME checkpoint job that materializes the
+  round — no separate driver job per round for the stop test.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -30,53 +37,55 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in `pairs`; component =
-    min vertex id reachable. Deterministic for any edge order."""
-    # Symmetrize in ONE pass over `pairs` (explode of the two directions),
-    # not a self-union — a union's two branches each re-evaluate the
-    # upstream pair pipeline (for near-dup graphs that is the full
-    # shingle/similarity join, the most expensive stage of the query).
-    edges = (
-        pairs.select(
+    min vertex id reachable. Deterministic for any edge order. A row with a
+    NULL endpoint is not an edge."""
+    src, dst = F.col(src_col), F.col(dst_col)
+    # Round 1 = the vertex-state build: both orientations of every edge in
+    # ONE pass over `pairs` (explode, not a self-union — a union's two
+    # branches each re-evaluate the upstream pair pipeline, for near-dup
+    # graphs the full shingle/similarity join), grouped per endpoint.
+    # collect_set drops duplicate edges; lbl = min(self, direct neighbors).
+    # `prev` is the label before the round, so lbl < prev marks a move.
+    state, moved = _checkpoint_counting(
+        pairs.where(src.isNotNull() & dst.isNotNull())
+        .select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src_col).alias("a"), F.col(dst_col).alias("b")),
-                    F.struct(F.col(dst_col).alias("a"), F.col(src_col).alias("b")),
+                    F.struct(src.alias("id"), dst.alias("nbr")),
+                    F.struct(dst.alias("id"), src.alias("nbr")),
                 )
             ).alias("e")
         )
-        .select("e.a", "e.b")
-        .distinct()
-        .localCheckpoint()
+        .groupBy(F.col("e.id").alias("id"))
+        .agg(F.collect_set("e.nbr").alias("nbrs"))
+        .select(
+            "id",
+            F.least("id", F.array_min("nbrs")).alias("lbl"),
+            "nbrs",
+            F.col("id").alias("prev"),
+        ),
+        F.col("lbl") < F.col("prev"),
     )
-    # Initial label = min(self, direct neighbors): one aggregate over the
-    # edge list, which IS the first propagation round — the loop below then
-    # only runs the remaining (diameter - 1) rounds.
-    labels = edges.groupBy("a").agg(
-        F.least(F.col("a"), F.min("b")).alias("lbl")
-    ).select(F.col("a").alias("id"), "lbl")
-    # Convergence metric: labels only ever decrease, so sum(lbl) is strictly
-    # monotone until the fixpoint — one cheap scalar aggregate per round
-    # instead of a join-and-count of changed rows.
-    prev_sum: int | None = None
-    converged = False
     for _ in range(max_iter):
-        # candidate label per vertex: min over neighbors' labels and its own
-        neighbor_lbl = (
-            edges.join(labels, edges["b"] == labels["id"])
-            .select(F.col("a").alias("id"), "lbl")
-        )
-        labels = (
-            labels.unionByName(neighbor_lbl)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
+        if moved == 0:
             break
-        prev_sum = cur_sum
-    if not converged:
+        # Only a vertex whose label moved last round has news for its
+        # neighbors; every other label already reached them.
+        messages = state.where(F.col("lbl") < F.col("prev")).select(
+            F.explode("nbrs").alias("id"), "lbl"
+        )
+        state, moved = _checkpoint_counting(
+            state.select("id", "lbl", "nbrs", F.col("lbl").alias("prev"))
+            .unionByName(messages, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(
+                F.min("lbl").alias("lbl"),
+                F.any_value("nbrs", ignoreNulls=True).alias("nbrs"),
+                F.max("prev").alias("prev"),
+            ),
+            F.col("lbl") < F.col("prev"),
+        )
+    if moved:
         # Returning silently here would emit SPLIT clusters (wrong labels)
         # on chain-shaped graphs with diameter > max_iter. Fail loudly.
         raise RuntimeError(
@@ -84,7 +93,16 @@ def connected_components(
             "rounds (labels still changing) — the pair graph has diameter > "
             f"{max_iter}; raise max_iter"
         )
-    return labels.select("id", F.col("lbl").alias("component"))
+    return state.select("id", F.col("lbl").alias("component"))
+
+
+def _checkpoint_counting(frame: DataFrame, cond) -> tuple[DataFrame, int]:
+    """localCheckpoint `frame` and return it with the number of its rows
+    where `cond` holds, counted by an Observation on the checkpoint job
+    itself (no second job over the frame)."""
+    obs = Observation()
+    frame = frame.observe(obs, F.count(F.when(cond, 1)).alias("n")).localCheckpoint()
+    return frame, obs.get["n"]
 
 
 def dedup_clusters(pairs: DataFrame, src_col: str = "id_a", dst_col: str = "id_b") -> DataFrame:
@@ -293,7 +311,8 @@ def bfs_hops(
       node's block exactly once (a per-round visited checkpoint would
       accumulate O(rounds x |visited|) superseded copies for the life of
       the session);
-    - early exit on an empty frontier is a scalar isEmpty() per round.
+    - early exit on an empty frontier reads the frontier's row count,
+      observed on the same checkpoint job that materializes it.
 
     Reference analog: iterative jobs are out of scope for the one-shot
     MapReduce runtime (/root/reference/mr-main/mr/coordinator.go runs a
@@ -317,14 +336,14 @@ def bfs_hops(
     frontier = visited.select("node")
     hops = itertools.count(1) if max_hops is None else range(1, max_hops + 1)
     for k in hops:
-        nxt = (
+        nxt, n_new = _checkpoint_counting(
             frontier.join(e, frontier["node"] == e["s"])
             .select(F.col("d").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()
+            .join(visited.select("node"), "node", "left_anti"),
+            F.lit(True),
         )
-        if nxt.isEmpty():
+        if n_new == 0:
             break
         visited = visited.union(
             nxt.select("node", F.lit(k).cast("long").alias("hop"))
@@ -369,8 +388,9 @@ def pagerank_fixpoint(
 
     Nodes absent from r0 (delta-new vertices) start at the uniform
     floor(scale/n). Per round: contribution join/agg exactly as
-    `pagerank`, plus one O(|nodes|) equality probe for the stop test;
-    localCheckpoint per round truncates lineage (deep iteration counts).
+    `pagerank`; the stop test counts moved ranks with an Observation on the
+    round's own localCheckpoint (which truncates lineage for deep
+    iteration counts), so it costs no job of its own.
     """
     src, dst = F.col(src_col), F.col(dst_col)
     e = edges.select(src.alias("src"), dst.alias("dst")).distinct().localCheckpoint()
@@ -410,18 +430,16 @@ def pagerank_fixpoint(
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        new_ranks = (
-            nodes.crossJoin(n_row)
-            .join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select("node", (base + F.coalesce("s", F.lit(0))).alias("r"))
-            .localCheckpoint()
+        # `ranks` holds every node once, so it doubles as the node list
+        # and carries the old rank into the row that computes the new one.
+        ranks, moved = _checkpoint_counting(
+            ranks.withColumnRenamed("r", "r_old")
+            .crossJoin(n_row)
+            .join(contribs, F.col("node") == F.col("dst"), "left")
+            .select("node", (base + F.coalesce("s", F.lit(0))).alias("r"), "r_old"),
+            F.col("r") != F.col("r_old"),
         )
-        moved = (
-            new_ranks.withColumnRenamed("r", "nr")
-            .join(ranks, "node")
-            .where(F.col("nr") != F.col("r"))
-        )
-        ranks = new_ranks
-        if moved.isEmpty():
+        ranks = ranks.select("node", "r")
+        if moved == 0:
             return _out(ranks), i
     return _out(ranks), None

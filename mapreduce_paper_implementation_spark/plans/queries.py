@@ -2264,7 +2264,7 @@ def q41_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.1, sort=False
-    )  # dedup_clusters -> CC symmetrize+distinct: output sort is dead cost
+    )  # dedup_clusters -> CC groups pairs per endpoint: output sort is dead cost
     return dedup_clusters(pairs)
 
 

@@ -148,7 +148,7 @@ def _split_labels(spark: SparkSession, docs: DataFrame) -> DataFrame:
     cut = _cc_cut_dir()
     if cut:
         return spark.read.parquet(cut)
-    # sort=False: connected_components symmetrizes + distincts the pair set
+    # sort=False: connected_components groups the pair set per endpoint
     # immediately — the global (id_a, id_b) sort is dead cost here.
     return connected_components(ngram_jaccard_pairs(docs, threshold=0.1, sort=False))
 

@@ -7,14 +7,18 @@ historical pairs each day is O(corpus). This maintainer keeps the
 (id, component) table materialized and folds each edge batch in at
 O(|delta| + |affected components|):
 
-1. Map the batch's edge endpoints to their CURRENT labels (an unseen
-   vertex labels itself). Edges inside one component map to a self-loop
-   and drop out.
+1. Look up the CURRENT label of every batch edge endpoint once (an unseen
+   vertex labels itself and is flagged new) and localCheckpoint it; the
+   steps below read that table instead of re-joining the label store.
+   Edges inside one component map to a self-loop and drop out.
 2. Run connected_components on the resulting COMPONENT graph — contracted,
-   so its size is O(|batch|) regardless of corpus size.
-3. Apply the resulting old-label -> new-label mapping to the label table
-   (mapping is O(|batch|) rows -> broadcast join, a map-only pass), and
-   append the batch's new vertices.
+   so its size is O(|batch|) regardless of corpus size. A batch that
+   merges nothing contracts to no edges, and CC returns no rows for it.
+3. One relabel pass over the label table: append the batch's new
+   vertices and apply the old-label -> new-label mapping (O(|batch|) rows
+   -> broadcast join, map-only). The pass flags each row that is new or
+   remapped; those rows are the batch's output delta, so the delta needs
+   no second join against the previous labels.
 
 Correctness rests on the standard contraction argument: component labels
 are min-reachable-vertex ids, so merging components by min over the
@@ -100,64 +104,57 @@ class ComponentsMaintainer:
         edges = pairs.select(
             F.col(self.src_col).alias("u"), F.col(self.dst_col).alias("v")
         )
-        verts = (
-            edges.select(F.col("u").alias("id"))
-            .unionByName(edges.select(F.col("v").alias("id")))
+        # current label per batch endpoint (unseen vertex labels itself and
+        # is flagged new), evaluated ONCE: the contraction reads it twice
+        # and the new-vertex append once. prior is read keyed by id; at
+        # scale this join co-locates against the bucketed label store.
+        vlab = (
+            edges.select(F.explode(F.array("u", "v")).alias("id"))
             .distinct()
-        )
-        # current label per batch endpoint (unseen vertex labels itself) —
-        # prior is read keyed by id; at scale this join co-locates against
-        # the bucketed label store.
-        vlab = verts.join(prior, "id", "left").select(
-            "id", F.coalesce("component", "id").alias("lbl")
-        )
-        # contracted component graph: O(|batch|) edges, self-loops dropped.
-        comp_edges = (
-            edges.join(vlab.withColumnRenamed("id", "u"), "u")
-            .withColumnRenamed("lbl", "la")
-            .join(
-                vlab.withColumnRenamed("id", "v").withColumnRenamed("lbl", "lb"),
-                "v",
+            .join(prior, "id", "left")
+            .select(
+                "id",
+                F.coalesce("component", "id").alias("lbl"),
+                F.col("component").isNull().alias("is_new"),
             )
-            .select("la", "lb")
+            .localCheckpoint()
+        )
+        lab = vlab.select("id", "lbl")
+        # contracted component graph: O(|batch|) edges, self-loops dropped
+        # (connected_components drops duplicate edges itself).
+        comp_edges = (
+            edges.join(lab.withColumnRenamed("id", "u").withColumnRenamed("lbl", "la"), "u")
+            .join(lab.withColumnRenamed("id", "v").withColumnRenamed("lbl", "lb"), "v")
             .where(F.col("la") != F.col("lb"))
-            .distinct()
         )
         # old-label -> merged-label mapping (only labels that actually
-        # change); min-over-contraction == min-over-union, so applying it
-        # reproduces the full recompute exactly.
+        # change; empty when the batch merges nothing); min-over-contraction
+        # == min-over-union, so applying it reproduces the full recompute.
         mapping = (
             connected_components(comp_edges, "la", "lb", max_iter=self.max_iter)
             .where(F.col("id") != F.col("component"))
             .select(F.col("id").alias("old_lbl"), F.col("component").alias("new_lbl"))
-            if not comp_edges.isEmpty()
-            else None
         )
-
-        new_verts = vlab.join(prior, "id", "left_anti").select(
-            "id", F.col("lbl").alias("component")
-        )
-        all_labels = prior.unionByName(new_verts)
-        if mapping is not None:
-            # O(|batch|)-row mapping: broadcast, map-only relabel pass.
-            all_labels = all_labels.join(
-                F.broadcast(mapping),
-                all_labels["component"] == mapping["old_lbl"],
-                "left",
-            ).select(
-                "id", F.coalesce("new_lbl", "component").alias("component")
+        # O(|batch|)-row mapping: broadcast, map-only relabel pass. A row is
+        # in the output delta iff it is new or its label was remapped.
+        relabeled = (
+            prior.withColumn("is_new", F.lit(False))
+            .unionByName(
+                vlab.where("is_new").select("id", F.col("lbl").alias("component"), "is_new")
             )
-
-        all_labels.write.mode("overwrite").parquet(self._dir(batch_id, "labels"))
-        committed_labels = self.spark.read.parquet(self._dir(batch_id, "labels"))
-        # output delta: new vertices + every vertex whose label moved.
-        delta = committed_labels.join(
-            prior.withColumnRenamed("component", "old_component"), "id", "left"
-        ).where(
-            F.col("old_component").isNull()
-            | (F.col("old_component") != F.col("component"))
-        ).select("id", "component")
-        delta.write.mode("overwrite").parquet(self._dir(batch_id, "changed"))
+            .join(F.broadcast(mapping), F.col("component") == F.col("old_lbl"), "left")
+            .select(
+                "id",
+                F.coalesce("new_lbl", "component").alias("component"),
+                (F.col("is_new") | F.col("new_lbl").isNotNull()).alias("changed"),
+            )
+        )
+        relabeled.select("id", "component").write.mode("overwrite").parquet(
+            self._dir(batch_id, "labels")
+        )
+        relabeled.where("changed").select("id", "component").write.mode(
+            "overwrite"
+        ).parquet(self._dir(batch_id, "changed"))
         self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
         return self.spark.read.parquet(self._dir(batch_id, "changed"))
 

@@ -393,6 +393,20 @@ def test_connected_components_chain(spark):
     assert rows == {1: (5, "1,2,3,4,5"), 10: (2, "10,11")}
 
 
+def test_connected_components_large_vertex_ids(spark):
+    """Regression: a convergence test that summed the labels overflowed
+    BIGINT under ANSI mode once the ids summed past 2**63 (ARITHMETIC_OVERFLOW
+    on two pairs of ids near 2**62)."""
+    from mapreduce_paper_implementation_spark.operators.graph import connected_components
+
+    big = 2**62
+    pairs = spark.createDataFrame(
+        [(big, big + 1), (big + 2, big + 3)], "id_a long, id_b long"
+    )
+    got = sorted(map(tuple, connected_components(pairs).collect()))
+    assert got == [(big, big), (big + 1, big), (big + 2, big + 2), (big + 3, big + 2)]
+
+
 def test_credit_read_observes_dropped_rows(spark, sf_dir):
     """Observation metrics: the permissive CSV reader reports the raw row
     count inside the SAME job that consumes the parsed rows (no second
