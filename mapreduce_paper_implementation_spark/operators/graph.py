@@ -21,7 +21,7 @@ Scale notes:
   data size matters;
 - convergence is the number of labels that moved in the round, observed
   (Spark `Observation`) on the SAME checkpoint job that materializes the
-  round — no separate driver job per round for the stop test.
+  round — no separate Spark job per round for the stop test.
 """
 
 from __future__ import annotations
