@@ -61,12 +61,6 @@ def lower_tokens(col: Column | str) -> Column:
     return tokens(F.lower(c))
 
 
-def stopword_count(col: Column | str) -> Column:
-    """Number of tokens (lowercased) that are in STOPWORDS."""
-    sw = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(lower_tokens(col), lambda t: F.array_contains(sw, t)))
-
-
 def let(value: Column, body) -> Column:
     """Bind `value` to a lambda variable so `body` can reference it without
     re-evaluating it. Spark's higher-order functions are CodegenFallback

@@ -86,12 +86,10 @@ def mr_run_to_text(
     "this is the correct format" per mrsequential.go:82-83). Output order
     within a file is partition-local; correctness is defined on the sorted
     union, as in the reference's tests (test-mr.sh:58)."""
+    # mr_run's groupByKey already yields exactly n_reduce partitions, one
+    # part file each; a repartition here would only add a shuffle.
     df = mr_run(spark, mapf, reducef, input_glob, n_reduce)
-    (
-        df.rdd.map(lambda r: f"{r['key']} {r['value']}")
-        .repartition(n_reduce)
-        .saveAsTextFile(out_dir)
-    )
+    df.rdd.map(lambda r: f"{r['key']} {r['value']}").saveAsTextFile(out_dir)
 
 
 def mr_df_run(

@@ -42,7 +42,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 # The shared index geometry: q118's coarse/PQ parameters and q116/q127's
 # coarse cell count all resolve to these (plans/curation_queries.py pins
@@ -100,19 +104,21 @@ def publish_ann_index(
         emb, k=n_cells, max_iter=2, tol=0.0, id_col=id_col, vec_col=vec_col
     )
     codebooks = pq_train(emb, m=m, ks=ks, dim=dim, id_col=id_col, vec_col=vec_col)
-    centroids.write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
-    codebooks.write.mode("overwrite").parquet(os.path.join(vdir, "codebooks"))
+    write_parquet(centroids, os.path.join(vdir, "centroids"))
+    write_parquet(codebooks, os.path.join(vdir, "codebooks"))
     # corpus-side artifacts derive from the JUST-WRITTEN small artifacts so
     # a re-read can never disagree with what consumers will load
     spark = emb.sparkSession
-    cents = spark.read.parquet(os.path.join(vdir, "centroids"))
-    books = spark.read.parquet(os.path.join(vdir, "codebooks"))
-    assign_cells(emb, cents, nassign=1, id_col=id_col, vec_col=vec_col).select(
-        F.col("id").alias("vec_id"), "cell"
-    ).write.mode("overwrite").parquet(os.path.join(vdir, "cells"))
-    pq_encode(emb, books, m=m, dim=dim, id_col=id_col, vec_col=vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(vdir, "codes"))
+    cents = read_parquet(spark, os.path.join(vdir, "centroids"))
+    books = read_parquet(spark, os.path.join(vdir, "codebooks"))
+    cells = assign_cells(emb, cents, nassign=1, id_col=id_col, vec_col=vec_col)
+    write_parquet(
+        cells.select(F.col("id").alias("vec_id"), "cell"), os.path.join(vdir, "cells")
+    )
+    write_parquet(
+        pq_encode(emb, books, m=m, dim=dim, id_col=id_col, vec_col=vec_col),
+        os.path.join(vdir, "codes"),
+    )
 
     store.commit(version, publish=[vdir])
     return version
@@ -122,7 +128,7 @@ def load_ann_index(spark: SparkSession, index_dir: str) -> dict[str, DataFrame]:
     """Load the current published version; returns {leaf: DataFrame}."""
     vdir = VersionedStateDir(index_dir).current_dir()
     return {
-        leaf: spark.read.parquet(os.path.join(vdir, leaf)) for leaf in LEAVES
+        leaf: read_parquet(spark, os.path.join(vdir, leaf)) for leaf in LEAVES
     }
 
 

@@ -145,9 +145,11 @@ def _split_labels(spark: SparkSession, docs: DataFrame) -> DataFrame:
         connected_components,
     )
 
+    from mapreduce_paper_implementation_spark.statedir import read_parquet
+
     cut = _cc_cut_dir()
     if cut:
-        return spark.read.parquet(cut)
+        return read_parquet(spark, cut)
     # sort=False: connected_components groups the pair set per endpoint
     # immediately — the global (id_a, id_b) sort is dead cost here.
     return connected_components(ngram_jaccard_pairs(docs, threshold=0.1, sort=False))

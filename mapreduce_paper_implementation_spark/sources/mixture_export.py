@@ -40,7 +40,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 def export_mixture(
@@ -81,9 +85,7 @@ def export_mixture(
         docs, n_shards=n_shards or _Q136_SHARDS, meta=meta
     ).localCheckpoint(eager=True)
     data = stream if payload is None else stream.join(payload, "doc_id")
-    data.write.mode("overwrite").partitionBy("epoch", "shard").parquet(
-        os.path.join(vdir, "data")
-    )
+    write_parquet(data, os.path.join(vdir, "data"), "epoch", "shard")
 
     shards = [
         {
@@ -146,7 +148,7 @@ def read_mixture(spark: SparkSession, out_dir: str) -> tuple[DataFrame, dict]:
     writer's schema."""
     vdir = VersionedStateDir(out_dir).current_dir()
     df = (
-        spark.read.parquet(os.path.join(vdir, "data"))
+        read_parquet(spark, os.path.join(vdir, "data"))
         .withColumn("epoch", F.col("epoch").cast("long"))
         .withColumn("shard", F.col("shard").cast("long"))
     )

@@ -40,7 +40,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 
@@ -73,9 +77,7 @@ def export_release(
     # also saves recomputing the whole composed cut twice).
     perdoc = perdoc.localCheckpoint(eager=True)
     data = perdoc if payload is None else perdoc.join(payload, "doc_id")
-    data.write.mode("overwrite").partitionBy("split", "shard").parquet(
-        os.path.join(vdir, "data")
-    )
+    write_parquet(data, os.path.join(vdir, "data"), "split", "shard")
 
     counts = [
         {
@@ -155,9 +157,7 @@ def export_packed_release(
         "tc",
         "bin_id",
     ).localCheckpoint(eager=True)  # one assignment feeds files AND counts
-    packed.write.mode("overwrite").partitionBy("split", "shard").parquet(
-        os.path.join(vdir, "data")
-    )
+    write_parquet(packed, os.path.join(vdir, "data"), "split", "shard")
 
     counts = [
         {
@@ -206,7 +206,7 @@ def read_release(
     split/shard come back as typed columns (partition values); shard is
     re-cast long to match the writer's schema exactly."""
     vdir = VersionedStateDir(out_dir).current_dir()
-    df = spark.read.parquet(os.path.join(vdir, "data")).withColumn(
+    df = read_parquet(spark, os.path.join(vdir, "data")).withColumn(
         "shard", F.col("shard").cast("long")
     )
     with open(os.path.join(vdir, "manifest.json"), encoding="ascii") as fh:

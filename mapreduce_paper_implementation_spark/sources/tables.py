@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -185,16 +186,57 @@ def _normalize_table(df: DataFrame, declared: dict[str, str | None]) -> DataFram
     return df
 
 
+# Spark's own inferred schema per source-file version; see read_source.
+_INFERRED: dict[tuple, StructType] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """The real path of `path` plus (real path, inode, size, mtime_ns) of
+    each data file it holds: the file itself, or every file of a directory
+    tree outside the `_`/`.`-prefixed names Spark skips."""
+    root = os.path.realpath(path)
+    files = [root]
+    if os.path.isdir(root):
+        files = []
+        for d, dirs, names in os.walk(root):
+            dirs[:] = sorted(n for n in dirs if not n.startswith(("_", ".")))
+            files += [os.path.join(d, n) for n in sorted(names) if not n.startswith(("_", "."))]
+    stats = [(f, os.stat(f)) for f in files]
+    return (root, *((f, st.st_ino, st.st_size, st.st_mtime_ns) for f, st in stats))
+
+
+def read_source(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at `path`, read with the schema Spark inferred the
+    first time this process read the same version of its files. Inference
+    runs a footer-reading Spark job; a repeated read of an unchanged table
+    in one process runs none. A rewritten file has a new inode, size or
+    mtime, so it is inferred afresh."""
+    try:
+        key = _file_identity(path)
+    except FileNotFoundError:
+        return spark.read.parquet(path)  # Spark names the missing path
+    schema = _INFERRED.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _INFERRED[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one parquet table and normalize it to the canonical logical
     schema (CANONICAL_SCHEMAS). Column pruning + predicate pushdown are left
     to Catalyst — callers express filters declaratively.
 
+    The read goes through read_source: the schema is memoized per process,
+    keyed by the real path, inode, size and mtime_ns of every data file, so
+    only the first read of a file version pays Spark's inference job.
+
     The legacy nanosAsLong conf stays on so a TIMESTAMP(NANOS) fixture reads
     as int64 (then normalized by cast) instead of erroring in the vectorized
     reader."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_source(spark, os.path.join(sf_dir, f"{name}.parquet"))
     declared = CANONICAL_SCHEMAS.get(name)
     return _normalize_table(df, declared) if declared else df
 

@@ -38,19 +38,32 @@ Rules, decided here and nowhere else:
   new batch writes, so no later commit can expose a half-written batch.
 - VACUUM(keep). Keeps the committed version plus `keep - 1` predecessors
   and never touches a version above the pointer.
+- SCHEMA. Every parquet leaf under a root is written by `write_parquet`,
+  which records the schema a reader sees in `<leaf>/_schema.json` (the `_`
+  prefix hides it from Spark, pyarrow and DuckDB globs; the commit that
+  publishes the leaf fsyncs it with the data), and read by `read_parquet`,
+  which hands that schema to the reader, so planning a state read runs no
+  footer-inference job. A leaf without the file (written before it
+  existed) is read by inference; that is the only fall-back. A file that
+  does not parse raises ValueError naming it, like a torn pointer.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from collections.abc import Callable, Iterable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 CURRENT = "_CURRENT"
 BASELINE = "_BASELINE"
 EVAL = "_EVAL"
 CENTROIDS = "_CENTROIDS"
 MARKER = "_COMMITTED"
+SCHEMA = "_schema.json"
 
 
 def _fsync(path: str) -> None:
@@ -67,6 +80,43 @@ def _fsync_tree(path: str) -> None:
             _fsync(os.path.join(d, f))
         _fsync(d)
     _fsync(os.path.dirname(path))
+
+
+def write_parquet(df: DataFrame, path: str, *partition_by: str) -> None:
+    """Write `df` as the parquet leaf `path` (replacing it), then record the
+    schema a reader of it sees (SCHEMA rule). Partition columns are left out
+    of the record: the reader takes their names and types from the
+    directory names, as an inferring reader does, and appends them."""
+    writer = df.write.mode("overwrite")
+    (writer.partitionBy(*partition_by) if partition_by else writer).parquet(path)
+    data = StructType([f for f in df.schema.fields if f.name not in partition_by])
+    with open(os.path.join(path, SCHEMA), "w", encoding="utf-8") as fh:
+        fh.write(data.json())
+
+
+def _recorded_schema(path: str) -> StructType | None:
+    """The schema `write_parquet` recorded for leaf `path`; None if the leaf
+    has no record; ValueError naming the file if the record does not parse."""
+    rec = os.path.join(path, SCHEMA)
+    try:
+        with open(rec, "rb") as fh:
+            raw = fh.read()
+    except FileNotFoundError:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError, TypeError, AttributeError) as e:
+        raise ValueError(f"torn schema record {rec}: read {raw[:80]!r}") from e
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """The parquet leaves `paths` as one DataFrame, read with the schema
+    `write_parquet` recorded (no inference job); by inference when any leaf
+    has no record."""
+    schemas = [_recorded_schema(p) for p in paths]
+    if any(s is None for s in schemas):
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schemas[0]).parquet(*paths)
 
 
 class VersionedStateDir:
@@ -186,7 +236,7 @@ class VersionedStateDir:
     def read_leaf(self, spark, leaf: str):
         """The committed state of `leaf` as one DataFrame, or None."""
         dirs = self.committed_dirs(leaf)
-        return spark.read.parquet(*dirs) if dirs else None
+        return read_parquet(spark, *dirs) if dirs else None
 
     def replayed(self, batch_id: int) -> bool:
         """True for a replay of a committed chain batch (a no-op); False for

@@ -54,7 +54,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.operators.dedup import assign_cells, gemm_cosine_pairs
-from mapreduce_paper_implementation_spark.statedir import CENTROIDS, VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    CENTROIDS,
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 def derive_tile_blocks(
@@ -113,7 +118,7 @@ class AnnIndexMaintainer:
     # -- frozen centroids ---------------------------------------------------
     def centroids(self) -> DataFrame | None:
         gen = self.store.pointer(CENTROIDS)
-        return self.spark.read.parquet(self._centroid_dir(gen)) if gen is not None else None
+        return read_parquet(self.spark, self._centroid_dir(gen)) if gen is not None else None
 
     def _ensure_centroids(self, emb: DataFrame, batch_id: int) -> DataFrame:
         cents = self.centroids()
@@ -128,7 +133,7 @@ class AnnIndexMaintainer:
             emb, k=self.n_cells, max_iter=2, tol=0.0,
             id_col=self.id_col, vec_col=self.vec_col,
         )
-        trained.write.mode("overwrite").parquet(self._centroid_dir(batch_id))
+        write_parquet(trained, self._centroid_dir(batch_id))
         self.store.commit(
             batch_id, name=CENTROIDS, publish=[self._centroid_dir(batch_id)]
         )
@@ -154,9 +159,8 @@ class AnnIndexMaintainer:
         return {r["cell"]: int(r["n"]) for r in agg.collect()}
 
     def _write_counts(self, counts: dict[int, int], path: str) -> None:
-        self.spark.createDataFrame(
-            [(int(c), int(n)) for c, n in sorted(counts.items())], "cell int, n long"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
+        rows = [(int(c), int(n)) for c, n in sorted(counts.items())]
+        write_parquet(self.spark.createDataFrame(rows, "cell int, n long").coalesce(1), path)
 
     def compact(self) -> int | None:
         """Fold committed assignment deltas into one baseline generation and
@@ -164,9 +168,7 @@ class AnnIndexMaintainer:
 
         def fold(g: int) -> None:
             occ = self.occupancy()  # read sidecars BEFORE the fold rewrites them
-            self.cells().write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "cells")
-            )
+            write_parquet(self.cells(), self.store.generation_dir(g, "cells"))
             self._write_counts(occ, self.store.generation_dir(g, "counts"))
 
         return self.store.compact(fold)
@@ -203,17 +205,18 @@ class AnnIndexMaintainer:
         trained = kmeans_fit(
             store, k=self.n_cells, max_iter=2, tol=0.0, id_col="id", vec_col="vec"
         )
-        trained.write.mode("overwrite").parquet(self._centroid_dir(committed))
-        cents = self.spark.read.parquet(self._centroid_dir(committed))
+        write_parquet(trained, self._centroid_dir(committed))
+        cents = read_parquet(self.spark, self._centroid_dir(committed))
         cells_dir = self.store.generation_dir(committed, "cells")
-        assign_cells(
-            store, cents, nassign=self.nassign, id_col="id", vec_col="vec"
-        ).write.mode("overwrite").parquet(cells_dir)
+        write_parquet(
+            assign_cells(store, cents, nassign=self.nassign, id_col="id", vec_col="vec"),
+            cells_dir,
+        )
         # reassignment moved rows between cells: rebuild the counts sidecar
         # from the new baseline (retrain is O(corpus) by design already)
         new_occ = {
             r["cell"]: int(r["n"])
-            for r in self.spark.read.parquet(cells_dir)
+            for r in read_parquet(self.spark, cells_dir)
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -304,8 +307,8 @@ class AnnIndexMaintainer:
         )
         pairs = gemm_cosine_pairs(ln.unionByName(rn), ["cell", "pa", "pb"], self.threshold)
         dups_dir = self.store.batch_dir(batch_id, group="dups")
-        pairs.write.mode("overwrite").parquet(dups_dir)
-        assigned.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "cells"))
+        write_parquet(pairs, dups_dir)
+        write_parquet(assigned, self.store.batch_dir(batch_id, "cells"))
         self._write_counts(batch_counts, self.store.batch_dir(batch_id, "counts"))
         self.store.commit_batch(batch_id, "dups")
-        return self.spark.read.parquet(dups_dir)
+        return read_parquet(self.spark, dups_dir)

@@ -42,7 +42,11 @@ from mapreduce_paper_implementation_spark.operators.membership import (
     bloom_maybe_seen,
     build_bloom,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class SeenKeysMaintainer:
@@ -85,7 +89,7 @@ class SeenKeysMaintainer:
         returning the persisted answer."""
         seen_dir = self.store.batch_dir(batch_id, group="seen")
         if self.store.replayed(batch_id):
-            return self.spark.read.parquet(seen_dir)
+            return read_parquet(self.spark, seen_dir)
         self.store.begin_batch(batch_id, "seen")
         hist_filter = self.filter()
         batch_keys = batch.select(*self.key_cols).distinct()
@@ -119,17 +123,20 @@ class SeenKeysMaintainer:
         tagged = batch.join(flags, self.key_cols, "left").withColumn(
             "seen", F.coalesce("seen", F.lit(False))  # NULL keys: not seen
         )
-        tagged.write.mode("overwrite").parquet(seen_dir)
-        build_bloom(
-            batch_keys,
-            self.key_cols,
-            num_bits=self.num_bits,
-            num_hashes=self.num_hashes,
-            seed=self.seed,
-        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "filter"))
-        batch_keys.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "keys"))
+        write_parquet(tagged, seen_dir)
+        write_parquet(
+            build_bloom(
+                batch_keys,
+                self.key_cols,
+                num_bits=self.num_bits,
+                num_hashes=self.num_hashes,
+                seed=self.seed,
+            ),
+            self.store.batch_dir(batch_id, "filter"),
+        )
+        write_parquet(batch_keys, self.store.batch_dir(batch_id, "keys"))
         self.store.commit_batch(batch_id, "seen")
-        return self.spark.read.parquet(seen_dir)
+        return read_parquet(self.spark, seen_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
@@ -138,11 +145,7 @@ class SeenKeysMaintainer:
         (statedir.py's compact)."""
 
         def fold(g: int) -> None:
-            self.filter().write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "filter")
-            )
-            self.keys().distinct().write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "keys")
-            )
+            write_parquet(self.filter(), self.store.generation_dir(g, "filter"))
+            write_parquet(self.keys().distinct(), self.store.generation_dir(g, "keys"))
 
         return self.store.compact(fold)

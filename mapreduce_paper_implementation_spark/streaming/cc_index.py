@@ -32,7 +32,11 @@ State is full-state versions under statedir.py (labels are a full small
 table per version; at 100 TB you'd store them bucketed by id and rewrite
 only the buckets whose rows changed — same commit rule). Version N holds
 `labels/` (id, component) after batch N and `changed/`, the batch's output
-delta: rows added OR relabeled.
+delta: rows added OR relabeled. Batch 0 (no prior labels) writes both
+leaves straight from the CC output, which ends in a checkpoint; nothing is
+read back between or after the writes. Both leaves are written and read
+through statedir.py's recorded schemas, so `labels()`, `changed()` and
+update's return value plan without a Spark job.
 
 update() returns the changed-rows delta (None for a replayed batch id —
 the idempotence contract shared by every maintainer here). vacuum()
@@ -47,7 +51,11 @@ from pyspark.sql import functions as F
 from mapreduce_paper_implementation_spark.operators.graph import (
     connected_components,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class ComponentsMaintainer:
@@ -78,11 +86,11 @@ class ComponentsMaintainer:
         v = self.store.pointer()
         if v is None:
             return None
-        return self.spark.read.parquet(self._dir(v, "labels"))
+        return read_parquet(self.spark, self._dir(v, "labels"))
 
     def changed(self, batch_id: int) -> DataFrame:
         """The output delta a committed batch emitted (for re-reading)."""
-        return self.spark.read.parquet(self._dir(batch_id, "changed"))
+        return read_parquet(self.spark, self._dir(batch_id, "changed"))
 
     def update(self, pairs: DataFrame, batch_id: int) -> DataFrame | None:
         """Fold one batch of pair edges in; returns the (id, component)
@@ -94,12 +102,13 @@ class ComponentsMaintainer:
         prior = self.labels()
 
         if prior is None:
+            # every vertex is new: both leaves are the CC output, which ends
+            # in a checkpoint, so writing it twice re-reads no file
             labels = connected_components(pairs, self.src_col, self.dst_col, max_iter=self.max_iter)
-            labels.write.mode("overwrite").parquet(self._dir(batch_id, "labels"))
-            labels = self.spark.read.parquet(self._dir(batch_id, "labels"))
-            labels.write.mode("overwrite").parquet(self._dir(batch_id, "changed"))
+            write_parquet(labels, self._dir(batch_id, "labels"))
+            write_parquet(labels, self._dir(batch_id, "changed"))
             self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
-            return self.spark.read.parquet(self._dir(batch_id, "changed"))
+            return self.changed(batch_id)
 
         edges = pairs.select(
             F.col(self.src_col).alias("u"), F.col(self.dst_col).alias("v")
@@ -149,14 +158,13 @@ class ComponentsMaintainer:
                 (F.col("is_new") | F.col("new_lbl").isNotNull()).alias("changed"),
             )
         )
-        relabeled.select("id", "component").write.mode("overwrite").parquet(
-            self._dir(batch_id, "labels")
+        write_parquet(relabeled.select("id", "component"), self._dir(batch_id, "labels"))
+        write_parquet(
+            relabeled.where("changed").select("id", "component"),
+            self._dir(batch_id, "changed"),
         )
-        relabeled.where("changed").select("id", "component").write.mode(
-            "overwrite"
-        ).parquet(self._dir(batch_id, "changed"))
         self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
-        return self.spark.read.parquet(self._dir(batch_id, "changed"))
+        return self.changed(batch_id)
 
     def vacuum(self, keep: int = 1) -> list[int]:
         """Drop superseded versions, keeping the committed one plus the

@@ -54,7 +54,11 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class ContaminationIndexMaintainer:
@@ -127,7 +131,7 @@ class ContaminationIndexMaintainer:
         return self._hits_for(eval_grams, train_set)
 
     def updates(self, batch_id: int) -> DataFrame:
-        return self.spark.read.parquet(self.store.batch_dir(batch_id, group="updates"))
+        return read_parquet(self.spark, self.store.batch_dir(batch_id, group="updates"))
 
     # -- ingest ------------------------------------------------------------
     def update(self, docs: DataFrame, batch_id: int) -> DataFrame | None:
@@ -140,14 +144,12 @@ class ContaminationIndexMaintainer:
             return None
         self.store.begin_batch(batch_id, "updates")
         grams = self._gram_frame(docs)
-        grams.where(F.col("split") != "train").write.mode("overwrite").parquet(
-            self.store.batch_dir(batch_id, "eval_grams")
-        )
-        eval_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "eval_grams"))
-        grams.where(F.col("split") == "train").select("gh").distinct().write.mode(
-            "overwrite"
-        ).parquet(self.store.batch_dir(batch_id, "train_ghs"))
-        train_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "train_ghs"))
+        eval_dir = self.store.batch_dir(batch_id, "eval_grams")
+        write_parquet(grams.where(F.col("split") != "train"), eval_dir)
+        eval_new = read_parquet(self.spark, eval_dir)
+        train_dir = self.store.batch_dir(batch_id, "train_ghs")
+        write_parquet(grams.where(F.col("split") == "train").select("gh").distinct(), train_dir)
+        train_new = read_parquet(self.spark, train_dir)
 
         # Pointer has NOT moved: these reads see the pre-batch chain.
         prior_train = self.store.read_leaf(self.spark, "train_ghs")
@@ -182,11 +184,9 @@ class ContaminationIndexMaintainer:
         train_set = cum.join(out_ghs, "gh", "left_semi").distinct()
 
         out_dir = self.store.batch_dir(batch_id, group="updates")
-        self._hits_for(out_grams, train_set).write.mode("overwrite").parquet(
-            out_dir
-        )
+        write_parquet(self._hits_for(out_grams, train_set), out_dir)
         self.store.commit_batch(batch_id, "updates")
-        return self.spark.read.parquet(out_dir)
+        return read_parquet(self.spark, out_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
@@ -195,11 +195,10 @@ class ContaminationIndexMaintainer:
         distinct-union (statedir.py's compact)."""
 
         def fold(g: int) -> None:
-            self.store.read_leaf(self.spark, "eval_grams").write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "eval_grams")
+            write_parquet(
+                self.store.read_leaf(self.spark, "eval_grams"),
+                self.store.generation_dir(g, "eval_grams"),
             )
-            self.train_gram_set().write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "train_ghs")
-            )
+            write_parquet(self.train_gram_set(), self.store.generation_dir(g, "train_ghs"))
 
         return self.store.compact(fold)

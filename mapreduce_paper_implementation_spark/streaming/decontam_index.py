@@ -44,7 +44,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import EVAL, VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    EVAL,
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class DecontamIndexMaintainer:
@@ -69,7 +74,7 @@ class DecontamIndexMaintainer:
         if not os.path.exists(cdir):
             # frozen at construction: every batch and every eval generation
             # must share cell boundaries or stored assignments go stale
-            centroids.write.mode("overwrite").parquet(cdir)
+            write_parquet(centroids, cdir)
 
     def _committed(self) -> tuple[int, int] | None:
         """(last ingested batch id, contam state version) or None."""
@@ -80,7 +85,7 @@ class DecontamIndexMaintainer:
 
     # -- index pieces --------------------------------------------------------
     def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.state_dir, "centroids"))
+        return read_parquet(self.spark, os.path.join(self.state_dir, "centroids"))
 
     def _assign(self, emb: DataFrame) -> DataFrame:
         """(id, cell, vec, nrm) under the frozen centroids — the IDENTICAL
@@ -106,14 +111,14 @@ class DecontamIndexMaintainer:
             F.col("nrm").alias("e_nrm"),
         )
         ev_dir = self.store.generation_dir(gen, group="eval")
-        ev.write.mode("overwrite").parquet(ev_dir)
+        write_parquet(ev, ev_dir)
         self.store.commit(gen, name=EVAL, publish=[ev_dir])
 
     def eval_index(self) -> DataFrame:
         gen = self.store.pointer(EVAL)
         if gen is None:
             raise ValueError("no eval generation installed; call set_eval first")
-        return self.spark.read.parquet(self.store.generation_dir(gen, group="eval"))
+        return read_parquet(self.spark, self.store.generation_dir(gen, group="eval"))
 
     def cells(self) -> DataFrame | None:
         return self.store.read_leaf(self.spark, "cells")
@@ -143,13 +148,11 @@ class DecontamIndexMaintainer:
         with persist_scope():
             # two consumers (cells write + probe) — persist the assignment
             assigned = scoped_persist(self._assign(batch_emb))
-            assigned.write.mode("overwrite").parquet(
-                self.store.batch_dir(batch_id, "cells")
-            )
+            write_parquet(assigned, self.store.batch_dir(batch_id, "cells"))
             delta = decontam_probe(assigned, self.eval_index(), self.threshold)
             prev = self.contaminated()
             state = delta if prev is None else prev.unionByName(delta)
-            state.write.mode("overwrite").parquet(self._contam_dir(cver))
+            write_parquet(state, self._contam_dir(cver))
         self.store.mark_batch(batch_id)
         self.store.commit(
             batch_id,
@@ -162,7 +165,7 @@ class DecontamIndexMaintainer:
         committed = self._committed()
         if committed is None:
             return None
-        return self.spark.read.parquet(self._contam_dir(committed[1]))
+        return read_parquet(self.spark, self._contam_dir(committed[1]))
 
     def serve(self) -> DataFrame | None:
         """q116's output shape from maintained state."""
@@ -194,5 +197,5 @@ class DecontamIndexMaintainer:
             return
         last_batch, cver = committed
         rescored = decontam_probe(self.cells(), self.eval_index(), self.threshold)
-        rescored.write.mode("overwrite").parquet(self._contam_dir(cver + 1))
+        write_parquet(rescored, self._contam_dir(cver + 1))
         self.store.commit(last_batch, cver + 1, publish=[self._contam_dir(cver + 1)])

@@ -33,7 +33,11 @@ from mapreduce_paper_implementation_spark.operators.dedup import (
     _shingle_frame,
     probe_neardup_index,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class DedupIndexMaintainer:
@@ -71,9 +75,9 @@ class DedupIndexMaintainer:
 
         def fold(g: int) -> None:
             for leaf in ("bands", "shingles"):
-                self.store.read_leaf(self.spark, leaf).write.mode(
-                    "overwrite"
-                ).parquet(self.store.generation_dir(g, leaf))
+                write_parquet(
+                    self.store.read_leaf(self.spark, leaf), self.store.generation_dir(g, leaf)
+                )
 
         return self.store.compact(fold)
 
@@ -110,10 +114,11 @@ class DedupIndexMaintainer:
             dups = self.spark.createDataFrame(
                 [], "new_id long, corpus_id long, jaccard double"
             )
-        dups.write.mode("overwrite").parquet(dups_dir)
-        _band_keys(sh_new, self.num_hashes, self.bands, self.seed).write.mode(
-            "overwrite"
-        ).parquet(self.store.batch_dir(batch_id, "bands"))
-        sh_new.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "shingles"))
+        write_parquet(dups, dups_dir)
+        write_parquet(
+            _band_keys(sh_new, self.num_hashes, self.bands, self.seed),
+            self.store.batch_dir(batch_id, "bands"),
+        )
+        write_parquet(sh_new, self.store.batch_dir(batch_id, "shingles"))
         self.store.commit_batch(batch_id, "dups")
-        return self.spark.read.parquet(dups_dir)
+        return read_parquet(self.spark, dups_dir)

@@ -34,13 +34,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     a timestamp type. Rather than hardcode one encoding (which broke when the
     fixture generation changed), probe the file with a one-off batch schema
     read — metadata only, no data scan — and declare exactly what the batch
-    reader infers, then normalize `ts` with the same dtype-adaptive projection
-    the batch catalog uses (sources/tables._normalize_timestamp).
+    reader infers (memoized per file version by sources/tables.read_source),
+    then normalize `ts` with the same dtype-adaptive projection the batch
+    catalog uses (sources/tables._normalize_timestamp).
     """
-    from ..sources.tables import _normalize_timestamp
+    from ..sources.tables import _normalize_timestamp, read_source
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_source(spark, os.path.join(sf_dir, "events.parquet")).schema
     # File stream sources take a directory; pathGlobFilter narrows it to the
     # events table so sibling parquet files in the fixture dir are ignored.
     raw = (

@@ -50,7 +50,11 @@ from pyspark.sql import functions as F
 from mapreduce_paper_implementation_spark.operators.text_analysis import (
     gram_positions,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 class GramIndexMaintainer:
     def __init__(
@@ -119,7 +123,7 @@ class GramIndexMaintainer:
 
     def updates(self, batch_id: int) -> DataFrame:
         """The output delta a committed batch emitted (for re-reading)."""
-        return self.spark.read.parquet(self.store.batch_dir(batch_id, group="updates"))
+        return read_parquet(self.spark, self.store.batch_dir(batch_id, group="updates"))
 
     # -- ingest ------------------------------------------------------------
     def update(self, docs: DataFrame, batch_id: int) -> DataFrame | None:
@@ -133,22 +137,17 @@ class GramIndexMaintainer:
         grams = gram_positions(docs, self.k, self.id_col, self.text_col)
         # One aggregation tree: totals and the batch's per-gram doc counts
         # both derive from doc_grams_new, persisted first and reused.
-        grams.groupBy("id", "gh").agg(F.count("*").alias("npos")).write.mode(
-            "overwrite"
-        ).parquet(self.store.batch_dir(batch_id, "doc_grams"))
-        doc_grams_new = self.spark.read.parquet(self.store.batch_dir(batch_id, "doc_grams"))
+        doc_grams_dir = self.store.batch_dir(batch_id, "doc_grams")
+        write_parquet(grams.groupBy("id", "gh").agg(F.count("*").alias("npos")), doc_grams_dir)
+        doc_grams_new = read_parquet(self.spark, doc_grams_dir)
         doc_totals_new = doc_grams_new.groupBy("id").agg(
             F.sum("npos").alias("n_grams")
         )
         gram_docs_new = doc_grams_new.groupBy("gh").agg(
             F.count("*").alias("ndocs")
         )
-        doc_totals_new.write.mode("overwrite").parquet(
-            self.store.batch_dir(batch_id, "doc_totals")
-        )
-        gram_docs_new.write.mode("overwrite").parquet(
-            self.store.batch_dir(batch_id, "gram_docs")
-        )
+        write_parquet(doc_totals_new, self.store.batch_dir(batch_id, "doc_totals"))
+        write_parquet(gram_docs_new, self.store.batch_dir(batch_id, "gram_docs"))
 
         # Prior state (the pointer has NOT moved yet, so these reads see
         # exactly the pre-batch committed chain).
@@ -199,11 +198,9 @@ class GramIndexMaintainer:
         )
 
         out_dir = self.store.batch_dir(batch_id, group="updates")
-        self._output_for(out_grams, out_totals, repeated).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
+        write_parquet(self._output_for(out_grams, out_totals, repeated), out_dir)
         self.store.commit_batch(batch_id, "updates")
-        return self.spark.read.parquet(out_dir)
+        return read_parquet(self.spark, out_dir)
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
@@ -217,6 +214,6 @@ class GramIndexMaintainer:
                 ("doc_totals", self.store.read_leaf(self.spark, "doc_totals")),
                 ("gram_docs", self.gram_counts()),
             ):
-                df.write.mode("overwrite").parquet(self.store.generation_dir(g, leaf))
+                write_parquet(df, self.store.generation_dir(g, leaf))
 
         return self.store.compact(fold)

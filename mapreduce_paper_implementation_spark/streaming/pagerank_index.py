@@ -46,7 +46,11 @@ from mapreduce_paper_implementation_spark.operators.graph import (
     pagerank,
     pagerank_fixpoint,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class PageRankMaintainer:
@@ -77,14 +81,14 @@ class PageRankMaintainer:
         v = self.store.pointer()
         if v is None:
             return None
-        return self.spark.read.parquet(self._dir(v, "edges"))
+        return read_parquet(self.spark, self._dir(v, "edges"))
 
     def ranks(self) -> DataFrame | None:
         """Committed converged (node, r) vector."""
         v = self.store.pointer()
         if v is None:
             return None
-        return self.spark.read.parquet(self._dir(v, "ranks"))
+        return read_parquet(self.spark, self._dir(v, "ranks"))
 
     def meta(self, version: int | None = None) -> dict | None:
         v = self.store.pointer() if version is None else version
@@ -118,8 +122,8 @@ class PageRankMaintainer:
             # (set semantics, like user_day_maintainer).
             new_rows = delta.join(prior_edges, ["src", "dst"], "left_anti")
             merged = prior_edges.unionByName(new_rows)
-        merged.write.mode("overwrite").parquet(self._dir(batch_id, "edges"))
-        edges_committed = self.spark.read.parquet(self._dir(batch_id, "edges"))
+        write_parquet(merged, self._dir(batch_id, "edges"))
+        edges_committed = read_parquet(self.spark, self._dir(batch_id, "edges"))
 
         warm = self.ranks() is not None
         ranks_df, n_iters = pagerank_fixpoint(
@@ -134,9 +138,9 @@ class PageRankMaintainer:
                 f"pagerank_fixpoint hit max_iter={self.max_iter} without an "
                 "integer fixpoint — raise max_iter (diameter-bound graphs)"
             )
-        ranks_df.select("node", F.col("rank_scaled").alias("r")).write.mode(
-            "overwrite"
-        ).parquet(self._dir(batch_id, "ranks"))
+        write_parquet(
+            ranks_df.select("node", F.col("rank_scaled").alias("r")), self._dir(batch_id, "ranks")
+        )
         with open(self._dir(batch_id, "META"), "w", encoding="ascii") as fh:
             json.dump({"n_iters": n_iters, "warm": warm}, fh)
         self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])

@@ -50,7 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import VersionedStateDir, write_parquet
 from mapreduce_paper_implementation_spark.streaming.cc_index import (
     ComponentsMaintainer,
 )
@@ -105,7 +105,7 @@ class ReleaseCutView:
             return None
         self.store.begin_batch(batch_id)
 
-        docs.select(
+        meta = docs.select(
             "doc_id",
             "source",
             token_count("text").alias("tc"),
@@ -113,17 +113,19 @@ class ReleaseCutView:
             .cast("decimal(9,6)")
             .cast("double")
             .alias("q"),
-        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "meta"))
+        )
+        write_parquet(meta, self.store.batch_dir(batch_id, "meta"))
 
-        docs.select(
+        grams = docs.select(
             "doc_id", F.explode(word_shingles("text", self.n_gram)).alias("shingle")
-        ).select("doc_id", F.xxhash64("shingle").alias("gh")).distinct().write.mode(
-            "overwrite"
-        ).parquet(self.store.batch_dir(batch_id, "grams"))
+        ).select("doc_id", F.xxhash64("shingle").alias("gh"))
+        write_parquet(grams.distinct(), self.store.batch_dir(batch_id, "grams"))
 
-        assign_cells(emb, self.centroids, nassign=self.nassign).withColumn(
-            "nrm", norm(F.col("vec"))
-        ).write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "cells"))
+        cells = assign_cells(emb, self.centroids, nassign=self.nassign)
+        write_parquet(
+            cells.withColumn("nrm", norm(F.col("vec"))),
+            self.store.batch_dir(batch_id, "cells"),
+        )
 
         self.cc.update(pairs, batch_id)
         # commit after the label-table fold: a committed batch is fully folded

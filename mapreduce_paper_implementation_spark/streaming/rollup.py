@@ -28,7 +28,11 @@ from mapreduce_paper_implementation_spark.operators.incremental import (
     merge_states,
     rollup_state,
 )
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class RollupMaintainer:
@@ -63,7 +67,7 @@ class RollupMaintainer:
         v = self.store.pointer()
         if v is None:
             return None
-        return self.spark.read.parquet(self.store.version_dir(v))
+        return read_parquet(self.spark, self.store.version_dir(v))
 
     def update(self, delta: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch of raw events into the state. Idempotent
@@ -86,7 +90,7 @@ class RollupMaintainer:
             prev = self.current_state()
             if prev is not None:
                 state = self._merge_fn(prev, state)
-            state.write.mode("overwrite").parquet(self.store.version_dir(batch_id))
+            write_parquet(state, self.store.version_dir(batch_id))
         self.store.commit(batch_id, publish=[self.store.version_dir(batch_id)])
 
     def vacuum(self, keep: int = 1) -> list[int]:

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_paper_implementation_spark.operators.incremental import merge_rollups
+from mapreduce_paper_implementation_spark.statedir import read_parquet, write_parquet
 from mapreduce_paper_implementation_spark.streaming.rollup import RollupMaintainer
 
 _EP_FIELDS = ("type", "t_us", "event_id")
@@ -105,8 +106,8 @@ class TransitionMaintainer(RollupMaintainer):
     def _read_state(self, v: int) -> tuple[DataFrame, DataFrame]:
         d = self.store.version_dir(v)
         return (
-            self.spark.read.parquet(os.path.join(d, "counts")),
-            self.spark.read.parquet(os.path.join(d, "endpoints")),
+            read_parquet(self.spark, os.path.join(d, "counts")),
+            read_parquet(self.spark, os.path.join(d, "endpoints")),
         )
 
     def current_state(self) -> DataFrame | None:
@@ -124,8 +125,8 @@ class TransitionMaintainer(RollupMaintainer):
             prev_counts, prev_ep = self._read_state(committed)
             counts, endpoints = _merge(prev_counts, prev_ep, counts, endpoints)
         d = self.store.version_dir(batch_id)
-        counts.write.mode("overwrite").parquet(os.path.join(d, "counts"))
-        endpoints.write.mode("overwrite").parquet(os.path.join(d, "endpoints"))
+        write_parquet(counts, os.path.join(d, "counts"))
+        write_parquet(endpoints, os.path.join(d, "endpoints"))
         self.store.commit(batch_id, publish=[d])
 
     def transitions(self) -> DataFrame | None:

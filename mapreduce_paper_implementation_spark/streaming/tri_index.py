@@ -44,7 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_paper_implementation_spark.statedir import VersionedStateDir
+from mapreduce_paper_implementation_spark.statedir import (
+    VersionedStateDir,
+    read_parquet,
+    write_parquet,
+)
 
 
 class TriangleMaintainer:
@@ -139,10 +143,10 @@ class TriangleMaintainer:
         )
 
         # O(|delta|) writes only — history is never rewritten.
-        new_e.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "edges"))
-        delta.write.mode("overwrite").parquet(self.store.batch_dir(batch_id, "tri"))
+        write_parquet(new_e, self.store.batch_dir(batch_id, "edges"))
+        write_parquet(delta, self.store.batch_dir(batch_id, "tri"))
         self.store.commit_batch(batch_id)
-        return self.spark.read.parquet(self.store.batch_dir(batch_id, "tri"))
+        return read_parquet(self.spark, self.store.batch_dir(batch_id, "tri"))
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> int | None:
@@ -151,15 +155,12 @@ class TriangleMaintainer:
         (statedir.py's compact)."""
 
         def fold(g: int) -> None:
-            self.edges().write.mode("overwrite").parquet(
-                self.store.generation_dir(g, "edges")
-            )
-            (
+            write_parquet(self.edges(), self.store.generation_dir(g, "edges"))
+            tri = (
                 self.store.read_leaf(self.spark, "tri")
                 .groupBy("node")
                 .agg(F.sum("d_tri").cast("long").alias("d_tri"))
-                .write.mode("overwrite")
-                .parquet(self.store.generation_dir(g, "tri"))
             )
+            write_parquet(tri, self.store.generation_dir(g, "tri"))
 
         return self.store.compact(fold)

@@ -10,6 +10,7 @@ Catalyst-optimized query plays the role of the oracle.
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 
@@ -142,7 +143,21 @@ def test_mr_run_to_text_sink_format(spark, corpus_dir, tmp_path_factory):
     def reducef(key: str, values: list[str]) -> str:
         return str(len(values))
 
-    mr_run_to_text(spark, mapf, reducef, corpus_dir, out, n_reduce=3)
+    sc = spark.sparkContext
+    group = f"mr-text-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "mr_run_to_text stage-count gate")
+    try:
+        mr_run_to_text(spark, mapf, reducef, corpus_dir, out, n_reduce=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the map stage and the reduce stage that writes the part files: the
+    # reduce output already has n_reduce partitions, so no third shuffle
+    assert len(stages) == 2, f"mr_run_to_text ran {len(stages)} stages, want 2"
     import glob
 
     parts = sorted(glob.glob(out + "/part-*"))

@@ -1,6 +1,9 @@
 """Versioned state directories (statedir.py): crash injection on both
-layouts, the shared vacuum(keep) meaning, and a structural pin that no
-other module hand-rolls a pointer commit.
+layouts, the shared vacuum(keep) meaning, the recorded leaf schemas (reads
+that plan without a Spark job, the inference fall-back, torn records, and
+equality with an inferring read for every leaf kind), the source-table
+schema memo, and structural pins that no other module hand-rolls a pointer
+commit or a state parquet read or write.
 
 Each crash case runs on the full-state layout (a RollupMaintainer whose
 state is the union of its edge batches, one v{N} per batch) and on the
@@ -12,9 +15,22 @@ from __future__ import annotations
 
 import ast
 import os
+import shutil
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
+from mapreduce_paper_implementation_spark.sources.tables import (
+    CANONICAL_SCHEMAS,
+    TABLE_NAMES,
+    _normalize_table,
+    load_table,
+)
+from mapreduce_paper_implementation_spark.statedir import SCHEMA, read_parquet
+from mapreduce_paper_implementation_spark.streaming.cc_index import (
+    ComponentsMaintainer,
+)
 from mapreduce_paper_implementation_spark.streaming.rollup import RollupMaintainer
 from mapreduce_paper_implementation_spark.streaming.tri_index import (
     TriangleMaintainer,
@@ -198,3 +214,306 @@ def test_only_statedir_commits_pointers_and_lists_versions():
                 ):
                     bad.append((rel, n.lineno, "version dir name"))
     assert not bad, bad
+
+
+EXPORTERS = {
+    os.path.join("sources", "release_export.py"),
+    os.path.join("sources", "mixture_export.py"),
+    os.path.join("operators", "ann_release.py"),
+}
+
+
+def test_state_parquet_io_goes_through_statedir():
+    """Under streaming/ and in the three exporters no code calls a parquet
+    reader or writer itself: every state leaf is written by
+    statedir.write_parquet, which records its schema, and read by
+    statedir.read_parquet, which uses the record."""
+    bad = [
+        (rel, n.lineno)
+        for rel, tree in _package_modules()
+        if rel.startswith("streaming" + os.sep) or rel in EXPORTERS
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "parquet"
+    ]
+    assert not bad, bad
+
+
+# -- recorded leaf schemas -------------------------------------------------
+
+
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"state-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "state read job-count gate")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _components(spark, root):
+    m = ComponentsMaintainer(spark, root)
+    m.update(spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long"), 0)
+    m.update(spark.createDataFrame([(2, 3)], "id_a long, id_b long"), 1)
+    return m
+
+
+def _plan_labels(spark, root, sf_dir):
+    return _components(spark, root).labels, [(1, 1), (2, 1), (3, 1), (4, 1)]
+
+
+def _plan_changed(spark, root, sf_dir):
+    m = _components(spark, root)
+    return (lambda: m.changed(1)), [(3, 1), (4, 1)]
+
+
+def _plan_current_state(spark, root, sf_dir):
+    m, read, _ = _full(spark, root)
+    _ingest(spark, m, 2)
+    return read, sorted(BATCHES[0] + BATCHES[1])
+
+
+def _plan_baseline_plus_chain(spark, root, sf_dir):
+    m, _, _ = _chain(spark, root)
+    _ingest(spark, m, 2)
+    assert m.compact() == 1
+    _ingest_from(spark, m, 2, 4)
+    dirs = m.store.committed_dirs("edges")
+    assert len(dirs) == 3 and "baseline" in dirs[0], dirs
+    want = _rows(spark.read.parquet(*dirs))
+    return (lambda: m.store.read_leaf(spark, "edges")), want
+
+
+def _plan_repeated_load_table(spark, root, sf_dir):
+    os.makedirs(root)
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), root)
+    want = _rows(load_table(spark, root, "region"))  # the first read infers
+    return (lambda: load_table(spark, root, "region")), want
+
+
+def _ingest_from(spark, m, lo, hi):
+    for b in range(lo, hi):
+        m.update(_edges(spark, BATCHES[b]), b)
+
+
+@pytest.mark.parametrize(
+    "setup",
+    [
+        _plan_labels,
+        _plan_changed,
+        _plan_current_state,
+        _plan_baseline_plus_chain,
+        _plan_repeated_load_table,
+    ],
+    ids=[
+        "components.labels",
+        "components.changed",
+        "rollup.current_state",
+        "read_leaf.baseline_plus_chain",
+        "load_table.repeat",
+    ],
+)
+def test_planning_a_read_runs_no_spark_job(spark, tmp_path, sf_dir, setup):
+    """Planning a read of engine-written state, or a repeated read of an
+    unchanged source table, launches no Spark job: the schema comes from
+    the leaf's record or the per-file memo, not from a footer-reading job."""
+    plan, want = setup(spark, str(tmp_path / "s"), sf_dir)
+    df, n_jobs = _jobs(spark, plan)
+    assert n_jobs == 0, f"planning the read ran {n_jobs} Spark jobs"
+    assert _rows(df) == want
+
+
+def test_rewritten_source_file_is_inferred_afresh(spark, tmp_path):
+    """A table rewritten at the same path with another schema reads with
+    the new schema, for a single file rewritten in place and for a
+    Spark-written directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, sf, "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = load_table(spark, sf, "t")
+    assert df.schema.simpleString() == "struct<b:string,c:double>"
+    assert _rows(df) == [("x", 1.5)]
+
+    path = os.path.join(sf, "u.parquet")
+    spark.range(2).write.parquet(path)
+    assert load_table(spark, sf, "u").columns == ["id"]
+    spark.range(1).select(F.lit("y").alias("s")).write.mode("overwrite").parquet(path)
+    assert _rows(load_table(spark, sf, "u")) == [("y",)]
+
+
+@LAYOUTS
+def test_leaf_without_schema_record_is_read_by_inference(spark, tmp_path, layout):
+    """State written before leaves carried a schema record still reads: the
+    read infers (one footer job) and returns the same rows."""
+    m, read, leaf_dir = layout(spark, str(tmp_path / "s"))
+    _ingest(spark, m, 2)
+    before = _rows(read())
+    os.remove(os.path.join(leaf_dir(1), SCHEMA))
+    df, n_jobs = _jobs(spark, read)
+    assert n_jobs == 1, n_jobs
+    assert _rows(df) == before
+
+
+@LAYOUTS
+def test_torn_schema_record_raises_naming_the_path(spark, tmp_path, layout):
+    m, read, leaf_dir = layout(spark, str(tmp_path / "s"))
+    _ingest(spark, m, 1)
+    path = os.path.join(leaf_dir(0), SCHEMA)
+    for content in (b"", b"\x00\x00", b'{"type": "struct", "fi', b'{"type": "struct"}', b"[1]"):
+        with open(path, "wb") as fh:
+            fh.write(content)
+        with pytest.raises(ValueError) as exc:
+            read()
+        assert path in str(exc.value) and "torn schema record" in str(exc.value)
+
+
+# -- equality with an inferring read ----------------------------------------
+
+
+def _same_read(spark, path, recorded):
+    """The recorded-schema read of `path` equals an inferring read: names,
+    types and order of the schema, and the rows."""
+    inferred = spark.read.parquet(path)
+    assert recorded.schema == inferred.schema, path
+    assert sorted(map(repr, recorded.collect())) == sorted(map(repr, inferred.collect())), path
+
+
+def _every_leaf_kind(spark, sf_dir, root):
+    """Run every maintainer and exporter on small inputs under `root`."""
+    from mapreduce_paper_implementation_spark.operators.ann_release import (
+        load_ann_index,
+        publish_ann_index,
+    )
+    from mapreduce_paper_implementation_spark.sources.mixture_export import (
+        export_mixture,
+    )
+    from mapreduce_paper_implementation_spark.sources.release_export import (
+        export_packed_release,
+        export_release,
+    )
+    from mapreduce_paper_implementation_spark.streaming.ann_index import (
+        AnnIndexMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.bloom import (
+        SeenKeysMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.contamination_index import (
+        ContaminationIndexMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.decontam_index import (
+        DecontamIndexMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.dedup_index import (
+        DedupIndexMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.gram_index import (
+        GramIndexMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.pagerank_index import (
+        PageRankMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.release_view import (
+        ReleaseCutView,
+    )
+    from mapreduce_paper_implementation_spark.streaming.rollup import (
+        postings_maintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.scd2 import Scd2Maintainer
+    from mapreduce_paper_implementation_spark.streaming.transitions import (
+        TransitionMaintainer,
+    )
+    from mapreduce_paper_implementation_spark.streaming.tri_index import (
+        TriangleMaintainer,
+    )
+
+    def at(name):
+        return os.path.join(root, name)
+
+    docs = load_table(spark, sf_dir, "documents")
+    events = load_table(spark, sf_dir, "events")
+    emb = load_table(spark, sf_dir, "embeddings")
+    halves = [F.col("doc_id") % 2 == b for b in range(2)]
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    edges = _edges(spark, [(1, 2), (2, 3), (3, 1)])
+
+    _components(spark, at("components"))
+    RollupMaintainer(spark, at("rollup")).update(events, 0)
+    postings_maintainer(spark, at("postings")).update(docs, 0)
+    TransitionMaintainer(spark, at("transitions")).update(events, 0)
+    Scd2Maintainer(spark, at("scd2")).update(load_table(spark, sf_dir, "orders"), 0)
+    tri = TriangleMaintainer(spark, at("tri"))
+    tri.update(edges, 0)
+    tri.compact()
+    PageRankMaintainer(spark, at("pagerank")).update(edges, 0)
+    seen = SeenKeysMaintainer(spark, at("seen"), ["source"], num_bits=1 << 10)
+    dedup = DedupIndexMaintainer(spark, at("dedup"), threshold=0.8)
+    grams = GramIndexMaintainer(spark, at("grams"), k=4)
+    contam = ContaminationIndexMaintainer(spark, at("contam"))
+    for b, half in enumerate(halves):
+        seen.update(docs.where(half), b)
+        dedup.update(docs.where(half), b)
+        grams.update(docs.where(half), b)
+        contam.update(docs.select("doc_id", "text").where(half), b)
+    for m in (seen, dedup, grams, contam):
+        m.compact()
+    ann = AnnIndexMaintainer(spark, at("ann"), n_cells=4, nassign=2, threshold=0.45)
+    ann.update(emb, 0)
+    ann.retrain()
+    publish_ann_index(emb, at("ann_release"))
+    cents = load_ann_index(spark, at("ann_release"))["centroids"]
+    dc = DecontamIndexMaintainer(spark, at("decontam"), cents)
+    dc.set_eval(emb.where(F.col("vec_id") % 7 == 0), gen=0)
+    dc.update(emb.where(F.col("vec_id") % 7 != 0), 0)
+    ReleaseCutView(spark, at("release_view"), cents).update(docs, emb, pairs, 0)
+    perdoc = docs.select(
+        "doc_id",
+        F.lit(3).cast("long").alias("tc"),
+        F.when(F.col("doc_id") % 5 == 0, "test").otherwise("train").alias("split"),
+        (F.col("doc_id") % 3).alias("shard"),
+    )
+    ledger = spark.createDataFrame([(1, 2, 3, 4)], "lex_n long, sem_n long, tot_n long, qual_n long")
+    export_release(perdoc, ledger, at("release"))
+    export_packed_release(spark, perdoc, at("packed"))
+    export_mixture(spark, docs, at("mixture"))
+
+
+def test_recorded_schema_read_equals_inferring_read_for_every_leaf_kind(
+    spark, sf_dir, tmp_path
+):
+    root = str(tmp_path / "state")
+    _every_leaf_kind(spark, sf_dir, root)
+    leaves = {}
+    for d, _, files in os.walk(root):
+        if SCHEMA in files:
+            leaves.setdefault(os.path.relpath(d, root).split(os.sep)[0], []).append(d)
+    assert sorted(leaves) == sorted(os.listdir(root)), "a kind wrote no recorded leaf"
+    for kind, dirs in sorted(leaves.items()):
+        for d in dirs:
+            _same_read(spark, d, read_parquet(spark, d))
+    partitioned = [d for d in leaves["release"] + leaves["mixture"] if d.endswith("data")]
+    assert len(partitioned) == 2, partitioned
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_memoized_load_table_equals_inferring_read(spark, name):
+    """load_table's memoized schema gives the same frame as an inferring
+    read normalized the same way, on every table of the sf0.01 fixtures."""
+    sf = "/root/testdata/sf0.01"
+    load_table(spark, sf, name)  # the first read infers and memoizes
+    memo, n_jobs = _jobs(spark, lambda: load_table(spark, sf, name))
+    assert n_jobs == 0
+    inferred = spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
+    declared = CANONICAL_SCHEMAS.get(name)
+    if declared:
+        inferred = _normalize_table(inferred, declared)
+    assert memo.schema == inferred.schema
+    assert memo.count() == inferred.count()
+    assert memo.exceptAll(inferred).isEmpty() and inferred.exceptAll(memo).isEmpty()
