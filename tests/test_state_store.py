@@ -500,10 +500,10 @@ def test_recorded_schema_read_equals_inferring_read_for_every_leaf_kind(
 
 
 @pytest.mark.parametrize("name", TABLE_NAMES)
-def test_memoized_load_table_equals_inferring_read(spark, name):
+def test_memoized_load_table_equals_inferring_read(spark, sf_dir, name):
     """load_table's memoized schema gives the same frame as an inferring
     read normalized the same way, on every table of the sf0.01 fixtures."""
-    sf = "/root/testdata/sf0.01"
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     load_table(spark, sf, name)  # the first read infers and memoizes
     memo, n_jobs = _jobs(spark, lambda: load_table(spark, sf, name))
     assert n_jobs == 0
