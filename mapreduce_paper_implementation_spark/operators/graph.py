@@ -1,32 +1,33 @@
-"""Connected components over a pair graph — the step that turns near-dup
-PAIRS into dedup CLUSTERS (pick one representative per component).
+"""Graph fixpoints over DataFrames: connected components (the step that
+turns near-dup PAIRS into dedup CLUSTERS), exact-integer PageRank, triangle
+counts and BFS hop distances.
 
-Iterative min-label propagation (the Pregel/GraphX pattern expressed in
-DataFrames): every vertex starts labeled with itself; each round every
-vertex adopts the minimum label among itself and its neighbors; converged
-when no label changes. Rounds needed = graph diameter (near-dup clusters
-are small and dense, so typically 2-4).
-
-Scale notes:
-- a vertex of degree d is ONE state row (id, lbl, nbrs) holding its d
-  neighbor ids; round 1 is the aggregate that builds those rows, so the
-  symmetrized edge list is never materialized on its own;
-- each later round is one shuffle: the vertices whose label moved in the
-  previous round explode `nbrs` into (neighbor, lbl) messages, the
-  messages union with the state rows, and one groupBy(id) takes the min
-  label and keeps the state row's `nbrs` — shuffle size O(|V| + messages),
-  no join, no driver-side data;
+Connected components and PageRank are two rules over ONE vertex-state
+round (`_vertex_rounds`), the Pregel/GraphX pattern expressed in
+DataFrames:
+- a vertex of degree d is ONE state row (id, value, nbrs) holding its d
+  neighbor ids (`_adjacency` builds those rows in one aggregate over the
+  edges, so no edge list is materialized on its own);
+- each round is one shuffle: the vertices that send explode `nbrs` into
+  (neighbor, msg) messages, the messages union with the state rows, and one
+  groupBy(id) combines them into the new value and keeps the state row's
+  `nbrs` — shuffle size O(|V| + messages), no join, no driver-side data;
 - `localCheckpoint` truncates the lineage each round, without it the plan
   doubles every iteration and the job dies on plan-compile time long before
   data size matters;
-- convergence is the number of labels that moved in the round, observed
+- convergence is the number of values that moved in the round, observed
   (Spark `Observation`) on the SAME checkpoint job that materializes the
   round — no separate Spark job per round for the stop test.
+
+Connected components sends from the vertices whose label dropped and keeps
+the min (rounds = graph diameter; near-dup clusters are small and dense, so
+typically 2-4). PageRank sends every vertex's share of its rank and sums
+them exactly. `bfs_hops` keeps a frontier shape of its own (see there).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -37,63 +38,104 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(id, component) for every vertex appearing in `pairs`; component =
-    min vertex id reachable. Deterministic for any edge order. A row with a
-    NULL endpoint is not an edge."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    # Round 1 = the vertex-state build: both orientations of every edge in
-    # ONE pass over `pairs` (explode, not a self-union — a union's two
-    # branches each re-evaluate the upstream pair pipeline, for near-dup
-    # graphs the full shingle/similarity join), grouped per endpoint.
-    # collect_set drops duplicate edges; lbl = min(self, direct neighbors).
-    # `prev` is the label before the round, so lbl < prev marks a move.
+    min vertex id reachable. Deterministic for any edge order. Pairs are
+    undirected; `_adjacency` states the NULL rule."""
+    # Round 1 = the vertex-state build: value = min(self, direct neighbors);
+    # `prev` is the label before the round, so value < prev marks a move,
+    # and only a vertex whose label moved has news for its neighbors.
+    lowered = F.col("value") < F.col("prev")
     state, moved = _checkpoint_counting(
-        pairs.where(src.isNotNull() & dst.isNotNull())
+        _adjacency(pairs, src_col, dst_col, undirected=True).select(
+            "id",
+            F.least("id", F.array_min("nbrs")).alias("value"),
+            "nbrs",
+            F.col("id").alias("prev"),
+        ),
+        lowered,
+    )
+    if moved:
+        state, rounds = _vertex_rounds(
+            state,
+            send=lowered,
+            message=F.col("value"),
+            combine=F.least(F.min("msg"), F.max("value")),
+            moved=lowered,
+            max_iter=max_iter,
+        )
+        if rounds is None:
+            # Returning silently here would emit SPLIT clusters (wrong
+            # labels) on chain-shaped graphs with diameter > max_iter.
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter={max_iter} "
+                "rounds (labels still changing) — the pair graph has diameter > "
+                f"{max_iter}; raise max_iter"
+            )
+    return state.select("id", F.col("value").alias("component"))
+
+
+def _adjacency(edges: DataFrame, src_col: str, dst_col: str, undirected: bool) -> DataFrame:
+    """(id, nbrs) for every endpoint of `edges`: nbrs is the set of the
+    vertex's out-neighbors, or of all its neighbors when `undirected` (an
+    endpoint with none gets an empty set).
+
+    A row with a NULL endpoint is not an edge: it adds no vertex and no
+    neighbor, for connected components and PageRank alike.
+
+    Both ends of every edge come from ONE pass over `edges` (explode, not a
+    self-union — a union's two branches each re-evaluate the upstream pair
+    pipeline, for near-dup graphs the full shingle/similarity join), grouped
+    per endpoint; collect_set drops duplicate edges."""
+    src, dst = F.col(src_col), F.col(dst_col)
+    return (
+        edges.where(src.isNotNull() & dst.isNotNull())
         .select(
             F.explode(
                 F.array(
                     F.struct(src.alias("id"), dst.alias("nbr")),
-                    F.struct(dst.alias("id"), src.alias("nbr")),
+                    F.struct(dst.alias("id"), (src if undirected else F.lit(None)).alias("nbr")),
                 )
             ).alias("e")
         )
         .groupBy(F.col("e.id").alias("id"))
         .agg(F.collect_set("e.nbr").alias("nbrs"))
-        .select(
-            "id",
-            F.least("id", F.array_min("nbrs")).alias("lbl"),
-            "nbrs",
-            F.col("id").alias("prev"),
-        ),
-        F.col("lbl") < F.col("prev"),
     )
-    for _ in range(max_iter):
-        if moved == 0:
-            break
-        # Only a vertex whose label moved last round has news for its
-        # neighbors; every other label already reached them.
-        messages = state.where(F.col("lbl") < F.col("prev")).select(
-            F.explode("nbrs").alias("id"), "lbl"
-        )
-        state, moved = _checkpoint_counting(
-            state.select("id", "lbl", "nbrs", F.col("lbl").alias("prev"))
+
+
+def _vertex_rounds(
+    state: DataFrame,
+    send: Column,
+    message: Column,
+    combine: Column,
+    moved: Column,
+    max_iter: int,
+) -> tuple[DataFrame, int | None]:
+    """Run vertex-state rounds over the checkpointed `state` (id, value,
+    nbrs[, prev]) until one moves nothing. In each round the rows where
+    `send` holds emit `message` to every id in their `nbrs`; one groupBy(id)
+    over those (id, msg) rows and the (id, value, nbrs) state rows yields
+    (id, value = `combine`, nbrs, prev = the old value). `combine` is an
+    aggregate over `msg` and the state row's `value`; `moved` counts the
+    rows that changed, on the round's own checkpoint. `message` is
+    evaluated once per (row, neighbor), so a row with no neighbors never
+    evaluates it (PageRank divides by the neighbor count). Returns (state, i)
+    after the first round i that moved no row, or (state, None) after
+    `max_iter` rounds that all moved some."""
+    for i in range(1, max_iter + 1):
+        messages = state.where(send).select(F.explode("nbrs").alias("id"), message.alias("msg"))
+        state, n_moved = _checkpoint_counting(
+            state.select("id", "value", "nbrs")
             .unionByName(messages, allowMissingColumns=True)
             .groupBy("id")
             .agg(
-                F.min("lbl").alias("lbl"),
+                combine.alias("value"),
                 F.any_value("nbrs", ignoreNulls=True).alias("nbrs"),
-                F.max("prev").alias("prev"),
+                F.max("value").alias("prev"),
             ),
-            F.col("lbl") < F.col("prev"),
+            moved,
         )
-    if moved:
-        # Returning silently here would emit SPLIT clusters (wrong labels)
-        # on chain-shaped graphs with diameter > max_iter. Fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (labels still changing) — the pair graph has diameter > "
-            f"{max_iter}; raise max_iter"
-        )
-    return state.select("id", F.col("lbl").alias("component"))
+        if n_moved == 0:
+            return state, i
+    return state, None
 
 
 def _checkpoint_counting(frame: DataFrame, cond) -> tuple[DataFrame, int]:
@@ -128,7 +170,6 @@ def pagerank(
     iters: int = 3,
     scale: int = 10**12,
     damping_pct: int = 85,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """PageRank with EXACT scaled-integer arithmetic: (node, rank_scaled,
     rank) after `iters` synchronous iterations at damping d =
@@ -137,9 +178,9 @@ def pagerank(
     The MapReduce paper's canonical iterative workload (mapreduce-paper.pdf
     names web-graph ranking as the motivating large computation; §2.3's
     reverse web-link graph — our q66 — builds exactly the structure PageRank
-    consumes). The reference cannot express iteration at all (one map +
-    one reduce per job, /root/reference/mr/coordinator.go:135); chaining
-    jobs by hand is the workaround its model implies.
+    consumes). The reference runtime cannot express iteration at all (one
+    map + one reduce per job); chaining jobs by hand is the workaround its
+    model implies.
 
     Why scaled integers: float PageRank sums contributions per target in a
     nondeterministic order, so double results differ between engines (and
@@ -153,57 +194,15 @@ def pagerank(
 
     Semantics (simple variant, mirrored exactly by the oracle): nodes =
     endpoints of `edges`; rank_0 = floor(scale/N); rank_{i+1}(v) =
-    floor((1-d)*scale/N) + sum over in-edges (u,v) of
+    floor((1-d)*scale/N) + sum over distinct in-edges (u,v) of
     floor(d*rank_i(u) / outdeg(u)); dangling mass is dropped (not
     redistributed).
 
-    Scale shape per iteration: ranks join edges on src (shuffle O(|E|)),
-    partial-aggregated sum per dst, left join back to the node list —
-    the Pregel message-passing round as two shuffles. N enters as a
-    single-row broadcast (the q49/q57 pattern), never a driver round-trip.
-    `localCheckpoint` every `checkpoint_every` rounds truncates lineage so
-    deep iteration counts don't blow up plan compilation (same discipline
-    as connected_components); the default never triggers at iters=3.
+    This is `pagerank_fixpoint` capped at `iters` rounds: the map is
+    deterministic, so once an iterate repeats every later one equals it,
+    and stopping there returns the same integers as running all `iters`.
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    # edges/nodes/outdeg are loop-invariant; localCheckpoint them so each
-    # iteration's lineage reads the materialized frames instead of
-    # re-deriving them from the raw scan once per reference (the audited
-    # plan showed 22 source scans for 3 iterations without this).
-    e = edges.select(src.alias("src"), dst.alias("dst")).distinct().localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_row = F.broadcast(nodes.agg(F.count("*").alias("n")))
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-    d_num, d_den = damping_pct, 100
-    base = F.expr(f"({(d_den - d_num)} * {scale}) div ({d_den} * n)")
-    ranks = nodes.crossJoin(n_row).select(
-        "node", "n", F.expr(f"{scale} div n").alias("r")
-    )
-    for i in range(1, iters + 1):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(outdeg, "src")
-            .select("dst", F.expr(f"({d_num} * r) div ({d_den} * od)").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.crossJoin(n_row)
-            .join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select("node", "n", (base + F.coalesce("s", F.lit(0))).alias("r"))
-        )
-        if i % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-    )
+    return pagerank_fixpoint(edges, src_col, dst_col, scale, damping_pct, max_iter=iters)[0]
 
 
 def count_triangles(
@@ -297,7 +296,7 @@ def bfs_hops(
         frontier_0 = seeds
         frontier_{k+1} = neighbors(frontier_k) - visited
 
-    Scale notes (same discipline as pagerank/connected_components):
+    Scale notes:
     - each round shuffles O(|frontier| x avg-degree) then distincts — the
       frontier, not the full vertex set, so late rounds on a high-diameter
       graph cost only what the wave touches;
@@ -312,7 +311,11 @@ def bfs_hops(
       accumulate O(rounds x |visited|) superseded copies for the life of
       the session);
     - early exit on an empty frontier reads the frontier's row count,
-      observed on the same checkpoint job that materializes it.
+      observed on the same checkpoint job that materializes it;
+    - BFS deliberately does not run on `_vertex_rounds`: a round here
+      broadcasts the frontier, scans the edge list without shuffling it and
+      exchanges only the new wave (checked on q102's plan at sf0.1), where
+      a vertex-state round would shuffle every vertex every round.
 
     Reference analog: iterative jobs are out of scope for the one-shot
     MapReduce runtime (/root/reference/mr-main/mr/coordinator.go runs a
@@ -364,8 +367,8 @@ def pagerank_fixpoint(
     """PageRank iterated to the exact integer FIXPOINT: returns
     ((node, rank_scaled, rank), n_iters) where n_iters is the first
     iteration whose output is BIT-EQUAL to its input (None if max_iter
-    rounds never reach one). Same exact scaled-integer arithmetic and
-    per-iteration shape as `pagerank` (two O(|E|) shuffles per round).
+    rounds never reach one). Same exact scaled-integer arithmetic as
+    `pagerank`, which is this function capped at its `iters`.
 
     "Converged" is bit-testable precisely because the arithmetic is
     integer: consecutive iterates either differ in some BIGINT or are the
@@ -385,61 +388,33 @@ def pagerank_fixpoint(
     therefore comes from the fixed-iteration `pagerank` over maintained
     graph state, while THIS path serves converged ranks with a bounded
     quantization envelope (tests/test_pagerank_index.py pins both).
-
     Nodes absent from r0 (delta-new vertices) start at the uniform
-    floor(scale/n). Per round: contribution join/agg exactly as
-    `pagerank`; the stop test counts moved ranks with an Observation on the
-    round's own localCheckpoint (which truncates lineage for deep
-    iteration counts), so it costs no job of its own.
+    floor(scale/N).
+
+    Shape: the state rows are (node, rank, out-neighbors); N is counted by
+    an Observation on the checkpoint that builds them, so it enters every
+    round as a literal. Each round is one `_vertex_rounds` shuffle: every
+    node sends (d_num * rank) div (d_den * outdeg) to each out-neighbor,
+    and the new rank is floor((1-d)*scale/N) plus the exact sum of what
+    arrived.
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = edges.select(src.alias("src"), dst.alias("dst")).distinct().localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_row = F.broadcast(nodes.agg(F.count("*").alias("n")))
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od")).localCheckpoint()
     d_num, d_den = damping_pct, 100
-    base = F.expr(f"({(d_den - d_num)} * {scale}) div ({d_den} * n)")
-    uniform = F.expr(f"{scale} div n")
-    if r0 is None:
-        ranks = nodes.crossJoin(n_row).select("node", uniform.alias("r"))
-    else:
-        ranks = (
-            nodes.join(r0.select("node", F.col("r").alias("r0")), "node", "left")
-            .crossJoin(n_row)
-            .select("node", F.coalesce("r0", uniform).alias("r"))
-        )
-    ranks = ranks.localCheckpoint()
-
-    def _out(fr: DataFrame) -> DataFrame:
-        return fr.select(
-            "node",
-            F.col("r").alias("rank_scaled"),
-            (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
-        )
-
-    for i in range(1, max_iter + 1):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(outdeg, "src")
-            .select("dst", F.expr(f"({d_num} * r) div ({d_den} * od)").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        # `ranks` holds every node once, so it doubles as the node list
-        # and carries the old rank into the row that computes the new one.
-        ranks, moved = _checkpoint_counting(
-            ranks.withColumnRenamed("r", "r_old")
-            .crossJoin(n_row)
-            .join(contribs, F.col("node") == F.col("dst"), "left")
-            .select("node", (base + F.coalesce("s", F.lit(0))).alias("r"), "r_old"),
-            F.col("r") != F.col("r_old"),
-        )
-        ranks = ranks.select("node", "r")
-        if moved == 0:
-            return _out(ranks), i
-    return _out(ranks), None
+    state, n = _checkpoint_counting(_adjacency(edges, src_col, dst_col, False), F.lit(True))
+    n = max(n, 1)  # an empty graph has no row to rank; never divide by 0
+    start = F.lit(scale // n).cast("long")
+    if r0 is not None:
+        state = state.join(r0.select(F.col("node").alias("id"), "r"), "id", "left")
+        start = F.coalesce("r", start)
+    ranks, n_iters = _vertex_rounds(
+        state.select("id", start.alias("value"), "nbrs"),
+        send=F.lit(True),
+        message=F.expr(f"({d_num} * value) div ({d_den} * CAST(size(nbrs) AS BIGINT))"),
+        combine=F.lit((d_den - d_num) * scale // (d_den * n)) + F.coalesce(F.sum("msg"), F.lit(0)),
+        moved=F.col("value") != F.col("prev"),
+        max_iter=max_iter,
+    )
+    return ranks.select(
+        F.col("id").alias("node"),
+        F.col("value").alias("rank_scaled"),
+        (F.col("value").cast("double") / F.lit(float(scale))).alias("rank"),
+    ), n_iters

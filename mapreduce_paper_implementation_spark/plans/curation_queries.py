@@ -1919,7 +1919,11 @@ def q101_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB twin is the textbook WITH RECURSIVE bounded-path formulation with
 # MIN(hop) — exponentially worse asymptotics (it enumerates paths), which
 # is exactly why the frontier algorithm is the engine's shape and the CTE
-# is only the truth oracle.
+# is only the truth oracle. It is also why BFS does not share the
+# vertex-state round of CC and PageRank (graph.py:_vertex_rounds): at sf0.1
+# a q102 round's plan broadcasts the 89-row frontier, scans the 73k-row
+# edge list without shuffling it, and exchanges only the new wave, where a
+# vertex-state round would shuffle all of V every round.
 #
 # Reference analog: multi-job chaining beyond the single map/reduce barrier
 # (/root/reference/mr-main/mr/coordinator.go), as for q74/q41.

@@ -1065,9 +1065,11 @@ def q73_bloom_seen_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # none of those). The oracle unrolls the 3 synchronous iterations as CTEs
 # with DuckDB's `//` (both engines truncate; all operands positive).
 #
-# Scale shape per iteration: ranks⋈edges on src + partial-aggregated sum
-# per dst + left join back to nodes — the Pregel round as two O(|E|)
-# shuffles; N enters as a single-row broadcast, never a driver round-trip.
+# Scale shape per iteration: one vertex-state round (graph.py:_vertex_rounds)
+# — every node's rank share is exploded over its out-neighbor set and one
+# groupBy(node) sums it exactly: the Pregel round as ONE shuffle of
+# O(|V| + |E|) rows, no join. N is counted by an Observation on the
+# checkpoint that builds the vertex state and enters as a literal.
 # ---------------------------------------------------------------------------
 
 _PR_SCALE = 10**12

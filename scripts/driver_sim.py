@@ -15,6 +15,10 @@ With --complement, run ONLY the queries NOT in the driver's frozen subset
 (the keyset of the newest CORRECTNESS_r*.json) — the per-round re-check of
 the 62 queries the driver itself never exercises.
 
+A relative --json PATH is resolved against the repository root (the
+parent of this script's directory), not the working directory, so the run
+can start anywhere and still refresh the committed artifact.
+
 Usage: python scripts/driver_sim.py [--json PATH] [--complement] [sf_dir] [query_prefix...]
 """
 import glob
@@ -23,14 +27,15 @@ import os
 import re
 import subprocess
 import sys, time
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 argv = sys.argv[1:]
 json_out = None
 if "--json" in argv:
     i = argv.index("--json")
-    json_out = argv[i + 1]
+    json_out = os.path.join(REPO, argv[i + 1])
     argv = argv[:i] + argv[i + 2:]
 complement: set[str] | None = None
 if "--complement" in argv:
@@ -43,7 +48,7 @@ if "--complement" in argv:
         sys.exit("--json with --complement would record a partial-keyset "
                  "artifact; run --json from a FULL pass (no --complement).")
     rounds = sorted(
-        glob.glob("/root/repo/CORRECTNESS_r[0-9]*.json"),
+        glob.glob(os.path.join(REPO, "CORRECTNESS_r[0-9]*.json")),
         key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
     )
     with open(rounds[-1]) as fh:
@@ -146,7 +151,7 @@ print("RESULT:", "ALL MATCH" if fails == 0 else f"{fails} FAILURES")
 if json_out:
     try:
         sha = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+            ["git", "-C", REPO, "rev-parse", "HEAD"],
             capture_output=True, text=True, check=True,
         ).stdout.strip()
     except Exception:

@@ -118,8 +118,8 @@ def main() -> None:
         "of candidates against a broadcast probe/centroid set — non-equi match",
         "conditions like hamming distance and id inequality) and the",
         "single-row broadcasts: q49's corpus count, q57's mixture-weight",
-        "denominator, q74's node count N (one per rank recomputation),",
-        "q119's collapsed merge-table array row (the broadcast apply), and",
+        "denominator, q119's collapsed merge-table array row (the",
+        "broadcast apply), and",
         "the q93/q110/q111/q112-style single-row stats frames.",
         "Every relational query must show 0; tests/test_plans.py",
         "enforces the key ones.",

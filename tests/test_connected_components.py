@@ -1,26 +1,35 @@
-"""Equivalence and job-count gates for the graph fixpoint loops in
+"""Equivalence, job-count and structure gates for the graph fixpoints in
 operators/graph.py and the component maintainer built on them.
 
-connected_components runs each propagation round as one shuffle over
-(id, lbl, nbrs) vertex state and reads convergence from an Observation on
-the round's own checkpoint job. These tests pin it row for row against the
-join-based formulation it replaced (kept below as the reference), pin the
-maintainer's per-batch delta against a join of the committed labels with
-the previous ones, and pin pagerank_fixpoint's iterates and round count
-against its join-and-isEmpty stop test.
+connected_components and PageRank run on one vertex-state round
+(graph.py:_vertex_rounds): one shuffle over (id, value, nbrs) state per
+round, with convergence read from an Observation on the round's own
+checkpoint job. These tests pin connected_components row for row against
+the join-based formulation it replaced, pin `pagerank` and
+`pagerank_fixpoint` (rows and round counts) against the join-based PageRank
+they replaced, pin the maintainer's per-batch delta against a join of the
+committed labels with the previous ones, count the Spark jobs of each
+fixpoint, and check that no public fixpoint grows a round loop of its own.
+The reference formulations are kept below.
 """
 
 from __future__ import annotations
 
+import ast
+import inspect
 import random
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_paper_implementation_spark.operators import graph
 from mapreduce_paper_implementation_spark.operators.graph import (
     connected_components,
+    pagerank,
     pagerank_fixpoint,
 )
+from mapreduce_paper_implementation_spark.sources.tables import load_table
 from mapreduce_paper_implementation_spark.streaming.cc_index import (
     ComponentsMaintainer,
 )
@@ -108,6 +117,19 @@ def test_cc_on_empty_frame_returns_no_rows(spark):
     assert _rows(reference_connected_components(pairs)) == []
 
 
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted over a job group."""
+    sc = spark.sparkContext
+    group = f"graph-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graph job-count gate")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cc_job_count_on_chain_graph(spark):
     """One CC call on test_connected_components_chain's graph (diameter 4
     plus an isolated pair): round 1 builds the vertex state, rounds 2-4
@@ -117,15 +139,7 @@ def test_cc_job_count_on_chain_graph(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], SCHEMA
     ).localCheckpoint()  # the input rows are not part of the count
-    sc = spark.sparkContext
-    group = f"cc-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "connected_components job-count gate")
-    try:
-        labels = connected_components(pairs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    labels, n_jobs = _count_jobs(spark, lambda: connected_components(pairs))
     assert n_jobs == 10, f"connected_components ran {n_jobs} Spark jobs, want 10"
     assert _rows(labels) == [(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)]
 
@@ -246,3 +260,167 @@ def test_pagerank_fixpoint_matches_isempty_stop_test(spark):
     want, want_iters = reference_pagerank_fixpoint(cycle, r0=want, max_iter=4)
     assert got_iters == want_iters
     assert ranks(got) == ref_ranks(want)
+
+
+def reference_pagerank(
+    edges, src_col="src", dst_col="dst", iters=3, scale=10**12, damping_pct=85, checkpoint_every=8
+):
+    """The join-based `pagerank`: distinct edges, node list, single-row N
+    broadcast and out-degree frame; per iteration ranks join edges and
+    out-degrees, sum per dst, and left-join back to the node list."""
+    src, dst = F.col(src_col), F.col(dst_col)
+    e = edges.select(src.alias("src"), dst.alias("dst")).distinct().localCheckpoint()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select("dst"))
+        .distinct()
+        .localCheckpoint()
+    )
+    n_row = F.broadcast(nodes.agg(F.count("*").alias("n")))
+    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
+    d_num, d_den = damping_pct, 100
+    base = F.expr(f"({(d_den - d_num)} * {scale}) div ({d_den} * n)")
+    ranks = nodes.crossJoin(n_row).select(
+        "node", "n", F.expr(f"{scale} div n").alias("r")
+    )
+    for i in range(1, iters + 1):
+        contribs = (
+            ranks.join(e, ranks["node"] == e["src"])
+            .join(outdeg, "src")
+            .select("dst", F.expr(f"({d_num} * r) div ({d_den} * od)").alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        ranks = (
+            nodes.crossJoin(n_row)
+            .join(contribs, nodes["node"] == contribs["dst"], "left")
+            .select("node", "n", (base + F.coalesce("s", F.lit(0))).alias("r"))
+        )
+        if i % checkpoint_every == 0:
+            ranks = ranks.localCheckpoint()
+    return ranks.select(
+        "node",
+        F.col("r").alias("rank_scaled"),
+        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
+    )
+
+
+EDGE_SCHEMA = "src long, dst long"
+DAG = [(1, 2), (3, 2), (2, 4), (4, 5), (3, 5)]
+CYCLE = [(1, 2), (2, 3), (3, 1), (3, 4)]
+
+
+def _digraph(spark, sf_dir, name):
+    """The pinned edge sets: a DAG that reaches its fixpoint in a few
+    rounds, a cycle with a tail, random digraphs with duplicate edges,
+    reversed edges and self-loops, q74's edge set and an empty frame."""
+    if name == "q74":
+        ev = load_table(spark, sf_dir, "events")
+        return ev.select(
+            F.col("user_id").alias("src"),
+            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
+        ).where(F.col("dst").isNotNull()).localCheckpoint()
+    rows = {
+        "dag": DAG,
+        "cycle": CYCLE,
+        "random1": _random_graph(1, 40, 50),
+        "random2": _random_graph(2, 40, 50),
+        "empty": [],
+    }[name]
+    return spark.createDataFrame(rows, EDGE_SCHEMA).localCheckpoint()
+
+
+def _ranks(df):
+    return sorted((r["node"], r["rank_scaled"], r["rank"]) for r in df.collect())
+
+
+def _ref_ranks(df, scale=10**12):
+    return sorted((r["node"], r["r"], r["r"] / scale) for r in df.collect())
+
+
+@pytest.mark.parametrize("name", ["dag", "cycle", "random1", "random2", "q74", "empty"])
+def test_pagerank_matches_join_formulation(spark, sf_dir, name):
+    """pagerank at iters 1-4 is bit-identical to the join-based kernel;
+    pagerank_fixpoint equals the join-and-isEmpty reference in rows and
+    n_iters cold (to the fixpoint, or capped with n_iters None) and warm
+    from the capped vector."""
+    edges = _digraph(spark, sf_dir, name)
+    for iters in (1, 2, 3, 4):
+        assert _ranks(pagerank(edges, iters=iters)) == _ranks(
+            reference_pagerank(edges, iters=iters)
+        ), f"{name} iters={iters}"
+    # the DAG and the empty frame converge fast; the others are capped
+    cap = 200 if name in ("dag", "empty") else 4
+    got, got_iters = pagerank_fixpoint(edges, max_iter=cap)
+    want, want_iters = reference_pagerank_fixpoint(edges, max_iter=cap)
+    assert got_iters == want_iters
+    assert (got_iters is None) == (cap == 4)
+    assert _ranks(got) == _ref_ranks(want)
+    warm = got.select("node", F.col("rank_scaled").alias("r"))
+    got, got_iters = pagerank_fixpoint(edges, r0=warm, max_iter=3)
+    want, want_iters = reference_pagerank_fixpoint(edges, r0=want, max_iter=3)
+    assert got_iters == want_iters
+    assert _ranks(got) == _ref_ranks(want)
+    if name == "empty":
+        assert got.collect() == [] and got_iters == 1
+
+
+def test_pagerank_fixpoint_job_count_on_cycle(spark):
+    """At the default max_iter the cycle reaches its fixpoint in round 70.
+    The state build and every round are one shuffle plus one checkpoint
+    (two jobs under adaptive execution); N and the stop test add none. The
+    join-based kernel ran 710 jobs here."""
+    edges = spark.createDataFrame(CYCLE, EDGE_SCHEMA).localCheckpoint()
+    (ranks, n_iters), n_jobs = _count_jobs(spark, lambda: pagerank_fixpoint(edges))
+    assert n_iters == 70
+    assert n_jobs <= 2 * n_iters + 3, f"pagerank_fixpoint ran {n_jobs} Spark jobs"
+    assert len(ranks.collect()) == 4
+
+
+def test_pagerank_job_count_on_dag(spark):
+    """pagerank(iters=3): the state build plus three rounds at two jobs
+    each (the join-based kernel ran 19)."""
+    edges = spark.createDataFrame(DAG, EDGE_SCHEMA).localCheckpoint()
+    ranks, n_jobs = _count_jobs(spark, lambda: pagerank(edges, iters=3))
+    assert n_jobs <= 9, f"pagerank ran {n_jobs} Spark jobs, want <= 9"
+    assert _ranks(ranks) == _ranks(reference_pagerank(edges, iters=3))
+
+
+def test_null_endpoint_is_not_an_edge(spark):
+    """A row with a NULL endpoint adds no vertex and no neighbor to either
+    connected components or PageRank."""
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4)]
+    nulls = [(4, None), (None, 1), (None, None), (7, None)]
+    for src, dst in (("id_a", "id_b"), ("src", "dst")):
+        schema = f"{src} long, {dst} long"
+        clean = spark.createDataFrame(rows, schema)
+        dirty = spark.createDataFrame(rows + nulls, schema)
+        if src == "id_a":
+            assert _rows(connected_components(dirty)) == _rows(connected_components(clean))
+            assert _rows(connected_components(dirty)) == [(1, 1), (2, 1), (3, 1), (4, 1)]
+        else:
+            want = _ranks(reference_pagerank(clean, iters=3))
+            assert _ranks(pagerank(dirty, iters=3)) == want
+            assert [r[0] for r in want] == [1, 2, 3, 4]
+            got, got_iters = pagerank_fixpoint(dirty, max_iter=5)
+            want, want_iters = pagerank_fixpoint(clean, max_iter=5)
+            assert (_ranks(got), got_iters) == (_ranks(want), want_iters)
+
+
+def test_public_fixpoints_have_no_round_loop_of_their_own():
+    """connected_components, pagerank and pagerank_fixpoint are rules over
+    the shared vertex-state round: none of them loops itself, so a second
+    round body cannot come back. The round loop lives in _vertex_rounds."""
+    tree = ast.parse(inspect.getsource(graph))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.comprehension)
+    for name in ("connected_components", "pagerank", "pagerank_fixpoint"):
+        body = defs[name]
+        assert not any(isinstance(n, loops) for n in ast.walk(body)), name
+        calls = {
+            n.func.id
+            for n in ast.walk(body)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+        }
+        assert calls & {"_vertex_rounds", "pagerank_fixpoint"}, name
+    assert any(isinstance(n, ast.For) for n in ast.walk(defs["_vertex_rounds"]))

@@ -254,14 +254,16 @@ def test_q73_bloom_word_map_broadcasts(spark, sf_dir):
 
 
 def test_q74_pagerank_no_cartesian_beyond_single_row_n(spark, sf_dir):
-    """PageRank's only nested-loop join is the single-row node-count
-    broadcast (the q49/q57 pattern); per-iteration work is equi-joins +
-    partial aggregation, never a cartesian over data."""
+    """PageRank has no nested-loop join at all: N is counted by an
+    Observation on the vertex-state build and enters each round as a
+    literal (it used to be a single-row crossJoin per rank recomputation),
+    and each round is one groupBy over checkpointed state, never a
+    cartesian over data. The rounds are checkpointed, so the executed plan
+    of the result is a scan of the last round's state."""
     plan = _plan(spark, sf_dir, "q74_pagerank")
     assert "CartesianProduct" not in plan
-    # the n-row broadcast appears once per rank recomputation; each must be
-    # a BROADCAST nested loop (single-row build side), never a shuffle NL
-    assert "partial_count" in plan or "count(1)" in plan  # N computed by agg, not collect
+    assert "NestedLoopJoin" not in plan
+    assert "Scan ExistingRDD" in plan
 
 
 def test_q75_gram_index_no_cartesian(spark, sf_dir):
